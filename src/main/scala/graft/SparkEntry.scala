@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.DataUtils
+import graft.core.StaticRange.boundedSorted
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 import graft.selectivesearch.SelectiveSearch
@@ -62,38 +63,11 @@ object SparkEntry {
 
   // ---------------------------------------------------------------------
 
-  /** Presentation sort for BOUNDED top-k result frames (the |Q| x k
-    * ANN/BM25 lists): a single-partition sortWithinPartitions skips
-    * the range sort's child-re-executing sampling job (SortProbe:
-    * ~0.1 s per row at toy scale, SCALING.md round 11) and stays
-    * trivial at any corpus scale because the output is bounded by the
-    * query batch, not the corpus. (query_id, rank) is unique, so the
-    * single-partition order is total and deterministic.
+  /** [[boundedSorted]] for the |Q| x k ANN/BM25 top-k lists:
+    * (query_id, rank) is unique, so the order is total.
     */
   private def topkSorted(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     boundedSorted(df, col("query_id"), col("rank"))
-
-  /** Same single-partition presentation sort for any BOUNDED report
-    * frame (category-set aggregates, rollup/cube matrices, the
-    * queries x shards selection frame): the caller's keys must form a
-    * unique grouping key, so the order is total and deterministic.
-    *
-    * coalesce(1), not repartition(1): the narrow merge reaches the
-    * single partition without a shuffle, which under AQE is one
-    * fewer query-stage round per query (~20-45 ms each at toy scale;
-    * CoalesceSortProbe round 13). The price is that the whole
-    * post-last-exchange segment runs as ONE task — every caller here
-    * feeds a final aggregation over a bounded group count (|Q| x k
-    * lists, category matrices), so that segment is single-task-sized
-    * by contract while the map side keeps full parallelism behind
-    * the aggregation's own exchange. Do NOT use this under a segment
-    * holding corpus-proportional work (the c2 arrival walk keeps
-    * repartition(1) for exactly that reason — see
-    * SelectiveSearch.sortedMatrix).
-    */
-  private def boundedSorted(df: org.apache.spark.sql.DataFrame,
-      keys: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
-    df.coalesce(1).sortWithinPartitions(keys: _*)
 
   /** FUSED probe for the registered minhash pair rows (r19): the
     * duplicate-mass gate decision and the dense-id sort bounds in ONE

@@ -23,13 +23,19 @@ import org.apache.spark.sql.functions._
   *
   * Scale contract: the pass-through shuffle uses an explicit
   * partition count, which AQE leaves alone (REPARTITION_BY_NUM
-  * origin) — so per-key skew is the CALLER's to manage: one
-  * partition per leading-key value is right when values are few and
-  * balanced (the |Q|-way selective-search sorts); a deployment with
-  * a wide or skewed domain should pass a finer `pid` (e.g.
-  * key * k + hash-bucket folded over a secondary sort prefix) or
-  * fall back to the sampling sort. Rows whose pid falls outside
-  * [0, numParts) fail loudly in-plan rather than silently misroute.
+  * origin) — so per-key skew is the CALLER's to manage. The
+  * selective-search sorts fold their |Q| query ids into
+  * min(|Q|, defaultParallelism) CONTIGUOUS id ranges (one sort task
+  * per core, not one per query: 50 single-query tasks ran a ~250 ms
+  * stage for ~330 KB); a deployment with a wide or skewed domain
+  * should pass a finer `pid` (e.g. key * k + hash-bucket folded over
+  * a secondary sort prefix) or fall back to the sampling sort. Rows
+  * whose pid falls outside [0, numParts) fail loudly in-plan rather
+  * than silently misroute.
+  *
+  * Frames whose SIZE is bounded by contract (|Q| x k lists, report
+  * matrices) need no routing at all: [[boundedSorted]] sorts them in
+  * one partition.
   */
 object StaticRange {
 
@@ -110,10 +116,10 @@ object StaticRange {
       case _ => df.orderBy(sortCols: _*)
     }
 
-  /** `df` totally ordered by `sortCols`, where `pid` must be an
-    * integer column equal to the rank of the row's leading sort key
-    * in its domain (0-based, < numParts), non-null, and
-    * non-decreasing in the leading sort key.
+  /** `df` totally ordered by `sortCols`, where `pid` must be a
+    * non-null integral column in [0, numParts) that is non-decreasing
+    * in the leading sort key (its rank in the domain, or the index of
+    * the contiguous key range holding it).
     */
   def sortByKnownDomain(df: DataFrame, pid: Column, numParts: Int,
       sortCols: Seq[Column]): DataFrame = {
@@ -125,7 +131,35 @@ object StaticRange {
     val passThrough = org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID(
         org.apache.spark.sql.graft.ColumnBridge.expression(guarded.cast("int"))))
-    df.repartition(numParts, passThrough)
+    // a one-partition exchange routes every row to partition 0 without
+    // evaluating the key — and with it the guard — so route over at
+    // least two; the guard keeps the extra partition empty
+    df.repartition(math.max(2, numParts), passThrough)
       .sortWithinPartitions(sortCols: _*)
   }
+
+  /** Presentation sort for any BOUNDED frame (|Q| x k top-k lists,
+    * category-set aggregates, rollup/cube matrices, the queries x
+    * shards selection frame, the TREC export): a single-partition
+    * sortWithinPartitions skips the range sort's child-re-executing
+    * sampling job (SortProbe: ~0.1 s per row at toy scale, SCALING.md
+    * round 11) and stays trivial at any corpus scale because the
+    * output is bounded by the query batch, not the corpus. The
+    * caller's keys must form a unique grouping key, so the order is
+    * total and deterministic.
+    *
+    * coalesce(1), not repartition(1): the narrow merge reaches the
+    * single partition without a shuffle, which under AQE is one
+    * fewer query-stage round per query (~20-45 ms each at toy scale;
+    * CoalesceSortProbe round 13). The price is that the whole
+    * post-last-exchange segment runs as ONE task — every caller
+    * feeds a final aggregation over a bounded group count, so that
+    * segment is single-task-sized by contract while the map side
+    * keeps full parallelism behind the aggregation's own exchange.
+    * Do NOT use this under a segment holding corpus-proportional work
+    * (the arrival walk keeps repartition(1) for exactly that reason —
+    * see SelectiveSearch.sortedMatrix).
+    */
+  def boundedSorted(df: DataFrame, keys: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys: _*)
 }

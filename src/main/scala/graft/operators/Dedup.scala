@@ -594,12 +594,22 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id", n: Int = 3,
       numHashes: Int = 16, bands: Int = 4, variant: String = "",
       force: Boolean = false): DataFrame = {
-    require(variant.nonEmpty,
-      "variant must name the corpus frame (store entries fingerprint the file only)")
     require(numHashes % bands == 0, "bands must divide numHashes")
+    storedMinHashRepIndexOver(corpus, corpusPath,
+      storedMinHashMembers(corpus, corpusPath, textCol, idCol, n, variant, force),
+      textCol, idCol, n, numHashes, bands, variant, force)
+  }
+
+  /** [[storedMinHashRepIndex]] over a membership frame the caller
+    * already holds: a call that also serves `members` must build it
+    * ONCE — under `force` a second [[storedMinHashMembers]] call
+    * rewrites the entry and deletes the files the first frame reads.
+    */
+  private def storedMinHashRepIndexOver(corpus: DataFrame,
+      corpusPath: String, members: DataFrame, textCol: String,
+      idCol: String, n: Int, numHashes: Int, bands: Int, variant: String,
+      force: Boolean): DataFrame = {
     val r = numHashes / bands
-    val members = storedMinHashMembers(corpus, corpusPath, textCol, idCol,
-      n, variant, force)
     val name = s"mhrepidx-n$n-h$numHashes-b$bands-$textCol-$idCol-$variant-v1-" +
       graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
@@ -707,8 +717,8 @@ object Dedup {
     val r = numHashes / bands
     val members = storedMinHashMembers(corpus, corpusPath, textCol, idCol,
       n, variant, force)
-    val repIdx = storedMinHashRepIndex(corpus, corpusPath, textCol, idCol,
-      n, numHashes, bands, variant, force)
+    val repIdx = storedMinHashRepIndexOver(corpus, corpusPath, members,
+      textCol, idCol, n, numHashes, bands, variant, force)
     // batch contraction by content — batch-bounded, one keyed pass
     val bg = newDocs
       .filter(coalesce(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.DataUtils.ensureHasColumns
-import graft.core.{DataUtils, Schemas}
+import graft.core.{DataUtils, Schemas, StaticRange}
 
 /** Selective-search post-processing: shard/bucket selection, merging,
   * evaluation, and TREC export (reference: dataproc/selectivesearch.py).
@@ -35,7 +35,11 @@ object SelectiveSearch {
     * ([[graft.core.StaticRange]]) instead of planning a range
     * exchange whose RangePartitioner samples — and thereby
     * re-executes — the whole join pipeline beneath the sort once per
-    * action. `None` keeps the sampling sort for arbitrary id spaces.
+    * action. The ids fold into p = min(nq, defaultParallelism)
+    * contiguous ranges, `floor(query * p / nq)`: one sort task per
+    * core rather than one per query, and an id outside [0, nq) lands
+    * outside [0, p), so it still fails in-plan. `None` keeps the
+    * sampling sort for arbitrary id spaces.
     */
   private def sortedByQueryScore(df: DataFrame,
       queryDomain: Option[Int] = None): DataFrame = {
@@ -44,7 +48,12 @@ object SelectiveSearch {
     val sortCols = col("query").asc +: col("score").desc +: tiebreak
     queryDomain match {
       case Some(nq) =>
-        graft.core.StaticRange.sortByKnownDomain(df, col("query"), nq, sortCols)
+        val parts = math.min(nq,
+          math.max(1, df.sparkSession.sparkContext.defaultParallelism))
+        // double arithmetic: no long overflow for far-out ids, and the
+        // guard sees the uncast range index
+        val pid = floor(col("query").cast("double") * lit(parts) / lit(nq))
+        StaticRange.sortByKnownDomain(df, pid, parts, sortCols)
       case None => df.orderBy(sortCols: _*)
     }
   }
@@ -252,7 +261,8 @@ object SelectiveSearch {
     *
     * Dispatches to the steps-scalable [[evaluateArrival]] walk whenever
     * every measure is a [[PrecisionAt]] over one relevance column (the
-    * reference's only measure family) — O(rows), one shuffle, memory
+    * reference's only measure family) — O(rows x measures), at most
+    * one shuffle (none on a query-clustered input), memory
     * O(steps x measures). Other measure shapes fall back to the
     * relational [[evaluateExplode]] sweep.
     *
@@ -326,14 +336,24 @@ object SelectiveSearch {
     *
     * The explode form materializes each result row once per step it
     * participates in — fine for tens of steps, a x`numSteps` shuffle
-    * blowup for hundreds. Here rows shuffle ONCE — hash-repartitioned
-    * by query with a secondary sort on `global_rank`
-    * (`repartition` + `sortWithinPartitions`, Spark's spill-safe
-    * sort) — and each partition is walked as a streaming iterator:
-    * per-step (count, sum) pairs fill up to each measure's depth k.
-    * Memory is O(steps x measures) per in-flight query, never
-    * O(rows): no per-group array materialization, so a hot query
-    * larger than executor memory spills in the sort, not in the walk.
+    * blowup for hundreds. Here rows shuffle AT MOST ONCE — hash-
+    * repartitioned on the input's own `query` column with a secondary
+    * sort on `global_rank` (`repartition` + `sortWithinPartitions`,
+    * Spark's spill-safe sort), both planned BEFORE the walk's type
+    * casts, so an input already hash-clustered by query (the
+    * global_rank window) keeps its partitioning: EnsureRequirements
+    * drops the redundant exchange and the walk runs in the window's
+    * own stage. Each partition is walked as a streaming iterator:
+    * per-step (count, sum) pairs fill up to each measure's depth k. A
+    * row of rank r counts toward steps r+1..numSteps, and a step's
+    * count never decreases as the step index grows, so per row and
+    * measure the walk stops at the first step already holding k rows —
+    * every later step is full too. Work is O(rows x measures) plus
+    * the steps actually filled, not O(rows x steps) when early steps
+    * never reach k. Memory is O(steps x measures) per in-flight query,
+    * never O(rows): no per-group array materialization, so a hot
+    * query larger than executor memory spills in the sort, not in the
+    * walk.
     */
   /** `arranged = true` is the caller's PROMISE that `results` rows are
     * already (a) co-located by query (all rows of one query in one
@@ -433,21 +453,24 @@ object SelectiveSearch {
     // shuffle (and keep parity with evaluateExplode's filter)
     val joined = results.join(broadcast(sel), groupBy, "inner")
       .filter(col("rank") < numSteps)
-      .select(col("query").cast("long"), col("global_rank").cast("long"),
-        col(relCols.head).cast("double"), col("rank").cast("int"))
-    val kDepths = ks.map(_._1)
-    // ONE shuffle: hash partition by query, secondary-sort by
+      .select(col("query"), col("global_rank"), col(relCols.head), col("rank"))
+    val kDepths = ks.map(_._1).toArray
+    // at most ONE shuffle: hash partition by query, secondary-sort by
     // (query, global_rank) within partitions — queries arrive as
     // contiguous rank-ordered runs and are walked without buffering.
+    // Keyed on the uncast columns, so a query-clustered input (the
+    // global_rank window) needs no exchange, only the local sort.
     // When the caller vouches the input is already arranged (the
-    // global_rank window upstream produced exactly this layout), even
-    // that shuffle disappears and the walk is map-side.
-    val prepared =
-      if (arranged) joined.as[(Long, Long, Double, Int)]
+    // window's rank order IS global_rank order), even that sort goes.
+    val laidOut =
+      if (arranged) joined
       else joined
         .repartition(col("query"))
-        .sortWithinPartitions(col("query"), col("global_rank"))
-        .as[(Long, Long, Double, Int)]
+        .sortWithinPartitions(col("query"), col("global_rank").cast("long"))
+    val prepared = laidOut
+      .select(col("query").cast("long"), col("global_rank").cast("long"),
+        col(relCols.head).cast("double"), col("rank").cast("int"))
+      .as[(Long, Long, Double, Int)]
     val out = prepared.mapPartitions { rows0 =>
       val rows = if (arranged) assertArranged(rows0) else rows0
       val it = rows.buffered
@@ -456,33 +479,32 @@ object SelectiveSearch {
         private def advance(): Unit = {
           while (!pending.hasNext && it.hasNext) {
             val query = it.head._1
-            // per (step, measure): running count and sum over the first k
-            val counts = Array.ofDim[Long](numSteps + 1, kDepths.length)
-            val sums = Array.ofDim[Double](numSteps + 1, kDepths.length)
-            var remaining = numSteps * kDepths.length
+            // per (measure, step): running count and sum over the first k
+            val counts = Array.ofDim[Long](kDepths.length, numSteps + 1)
+            val sums = Array.ofDim[Double](kDepths.length, numSteps + 1)
             while (it.hasNext && it.head._1 == query) {
               val (_, _, rel, rank) = it.next()
-              if (remaining > 0) {
+              var m = 0
+              while (m < kDepths.length) {
+                val k = kDepths(m)
+                val cm = counts(m)
+                val sm = sums(m)
+                // counts are non-decreasing in the step, so the first
+                // full step means every later one is full too
                 var s = rank + 1
-                while (s <= numSteps) {
-                  var m = 0
-                  while (m < kDepths.length) {
-                    if (counts(s)(m) < kDepths(m)) {
-                      counts(s)(m) += 1
-                      sums(s)(m) += rel
-                      if (counts(s)(m) == kDepths(m)) remaining -= 1
-                    }
-                    m += 1
-                  }
+                while (s <= numSteps && cm(s) < k) {
+                  cm(s) += 1
+                  sm(s) += rel
                   s += 1
                 }
+                m += 1
               }
             }
             // a step appears iff any row was attributed to it; counts
             // for every measure advance together below k, so c > 0 for
             // all measures whenever it is for the first
-            pending = (1 to numSteps).iterator.filter(s => counts(s)(0) > 0).map { s =>
-              (query, sums(s).zip(counts(s)).map { case (sm, c) => sm / c }, s)
+            pending = (1 to numSteps).iterator.filter(s => counts(0)(s) > 0).map { s =>
+              (query, Array.tabulate(kDepths.length)(m => sums(m)(s) / counts(m)(s)), s)
             }
           }
         }
@@ -651,6 +673,13 @@ object SelectiveSearch {
     * admitted once the heap is full (the window's descending sort
     * puts NaN first). TREC run frames carry real scores and titles —
     * use [[trecFrame]] if yours somehow do not.
+    *
+    * The (query, rank) order comes from sorting the |Q| aggregated
+    * rows — one per query — in a single partition
+    * ([[graft.core.StaticRange.boundedSorted]]) BEFORE the explode,
+    * which emits each query's heap in rank order: a global `orderBy`
+    * over the |Q| x cutoff exploded rows would add a range-sampling
+    * job and a range exchange per export.
     */
   def trecFrameTopK(results: DataFrame, cutoff: Int = 1000): DataFrame = {
     ensureHasColumns(results, Seq("query", "score", "title"))
@@ -658,11 +687,11 @@ object SelectiveSearch {
       .groupBy(col("query"))
       .agg(graft.functions.TopKFunctions
         .top_k_tag(col("score").cast("double"), col("title"), cutoff).as("top"))
+      .transform(StaticRange.boundedSorted(_, col("query")))
       .select(col("query"), posexplode(col("top")))
       .select(col("query"), lit("Q0").as("iter"),
         col("col.tag").as("title"), col("pos").cast("int").as("rank"),
         col("col.score").as("score"), lit("null").as("run_id"))
-      .orderBy(col("query").asc, col("rank").asc)
   }
 
   private def moveSinglePartFile(spark: SparkSession, dir: String, dest: String): Unit = {

@@ -278,6 +278,38 @@ class IndexStoreSuite extends SparkSuite {
     intercept[IllegalArgumentException](IndexStore.prune(""))
   }
 
+  test("forced collapsed minhash serving builds its membership entry once") {
+    // force = true on the collapsed route used to build the membership
+    // entry, then rebuild it inside the rep-index build, deleting the
+    // files the first frame reads (FILE_NOT_EXIST at collect)
+    import graft.operators.Dedup
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mhforce").toFile
+    val src = new java.io.File(tmp, "corpus.parquet").getPath
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog and runs far away today",
+      "pack my box with five dozen liquor jugs before the long trip home now",
+      "sphinx of black quartz judge my vow while the river keeps on running")
+    // copy-heavy: three contents, eight copies each
+    (0 until 24).map(i => (i.toLong, texts(i % 3)))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(src)
+    val corpus = spark.read.parquet(src)
+    val batch = Seq((100L, texts(0)), (101L, texts(1) + " again"))
+      .toDF("doc_id", "text")
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 16).toInt)
+    val inline = Dedup.incrementalMinHashCandidates(batch, corpus)
+      .collect().map(key).toSet
+    graft.core.OpCaches.release()
+    for (_ <- 1 to 2) {
+      val forced = Dedup.incrementalMinHashCandidatesPrebuilt(corpus, src, batch,
+        variant = "forcetest", force = true, dupGate = -1)
+        .collect().map(key).toSet
+      graft.core.OpCaches.release()
+      assert(forced == inline && inline.nonEmpty,
+        s"forced ${forced.size} != inline ${inline.size}")
+    }
+  }
+
   test("pruneSuperseded retires only out-generationed entries of the same key") {
     // the r19 sample v1->v2 bump (and the r20 ivf/ivfmulti/pq/ivfpq
     // bumps) leave orphaned old-generation entries nothing can ever

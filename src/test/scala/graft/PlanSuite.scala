@@ -259,7 +259,7 @@ class PlanSuite extends SparkSuite {
   test("bounded finals sort in a single partition; corpus-sized finals keep the range sort") {
     // bounded |Q| x k / matrix outputs: single-partition presentation
     // sort, no range-exchange sampling job (SCALING.md round 11)
-    for (name <- Seq("ann_pq_topk", "bm25_topk", "c2_evaluate")) {
+    for (name <- Seq("ann_pq_topk", "bm25_topk", "c2_evaluate", "c9_to_trec")) {
       val p = plan(name)
       assert(!p.toLowerCase.contains("rangepartitioning"),
         s"$name regained a range sort: ${p.take(3000)}")
@@ -285,6 +285,43 @@ class PlanSuite extends SparkSuite {
         s"$name collapsed to a single-partition sort: ${p.take(3000)}")
     }
     spark.catalog.clearCache()
+  }
+
+  test("c6 routes its known query domain to at most defaultParallelism ranges") {
+    // one contiguous query range per core, not one partition per query
+    val p = plan("c6_select")
+    val parts = """(?i)Exchange shufflepartitionidpassthrough.*?, (\d+)\), REPARTITION_BY_NUM"""
+      .r.findAllMatchIn(p).map(_.group(1).toInt).toSeq
+    assert(parts.size == 1, p.take(3000))
+    assert(parts.head <= spark.sparkContext.defaultParallelism, p.take(3000))
+  }
+
+  test("evaluate(arranged = false) walks a query-windowed input without a second exchange") {
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = sf("sf0.001")
+    // evalResults ends in its Window.partitionBy(query) global_rank
+    val df = graft.selectivesearch.SelectiveSearch.evaluate(
+      Tables.selection(spark, dir), Tables.evalResults(spark, dir),
+      Seq(graft.selectivesearch.SelectiveSearch.precisionAt(10)), Tables.NumShards)
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    // the nodes from the arrival walk down to the results-side window
+    def toWindow(p: SparkPlan): Option[Seq[SparkPlan]] = p match {
+      case w: WindowExec => Some(Seq(w))
+      case _: BroadcastExchangeExec => None
+      case _ => p.children.iterator.map(toWindow).collectFirst { case Some(ps) => p +: ps }
+    }
+    val walk = root.collectFirst { case m: MapPartitionsExec => m }
+    assert(walk.isDefined, root.toString.take(3000))
+    val path = toWindow(walk.get)
+    assert(path.isDefined, s"no Window under the walk: ${root.toString.take(3000)}")
+    assert(!path.get.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"exchange between the window and the walk: ${root.toString.take(3000)}")
   }
 
   test("sorted-first rows keep expensive projections ABOVE the final sort") {

@@ -331,28 +331,46 @@ class PropertiesSuite extends SparkSuite {
 
     case class Case(nQ: Int, nS: Int, nB: Option[Int], stringIds: Boolean,
         sort: Boolean, ks: Seq[Int], ranks: Seq[Int], scores: Seq[Int],
-        rels: Seq[Int], prios: Seq[Int])
+        sizes: Seq[Int], rels: Seq[Int], prios: Seq[Int])
 
     val genCase = for {
       nQ <- Gen.choose(1, 3)
       nS <- Gen.choose(1, 3)
-      nB <- Gen.oneOf(None, Some(2))
+      nB <- Gen.oneOf(None, Some(2), Some(4))
       stringIds <- Gen.oneOf(false, true)
       sort <- Gen.oneOf(false, true)
-      ks <- Gen.pick(2, Seq(1, 2, 3, 5, 8)).map(_.toSeq)
+      ks <- Gen.pick(2, Seq(1, 2, 3, 5, 8, 13, 21, 30)).map(_.toSeq)
       cells = nQ * nS * nB.getOrElse(1)
       numSteps = nS * nB.getOrElse(1)
       // rank can land AT or ABOVE numSteps (the degenerate case both
       // paths must drop identically); duplicates allowed
       ranks <- Gen.listOfN(cells, Gen.choose(0, numSteps + 1))
       scores <- Gen.listOfN(cells, Gen.choose(0, 1000))
-      rels <- Gen.listOfN(cells * 3, Gen.choose(0, 1))
-      prios <- Gen.listOfN(cells * 3, Gen.choose(0, 1000000))
-    } yield Case(nQ, nS, nB, stringIds, sort, ks, ranks, scores, rels, prios)
+      // mostly small cells, so early steps stay below k while later
+      // steps fill, plus some cells holding more rows than k
+      sizes <- Gen.listOfN(cells,
+        Gen.frequency(3 -> Gen.choose(0, 3), 1 -> Gen.choose(4, 35)))
+      rels <- Gen.listOfN(sizes.sum, Gen.choose(0, 1))
+      prios <- Gen.listOfN(sizes.sum, Gen.choose(0, 1000000))
+    } yield Case(nQ, nS, nB, stringIds, sort, ks, ranks, scores, sizes,
+      rels, prios)
 
     val params = Gen.Parameters.default
-    val cases = (0 until 10).flatMap(i => genCase.apply(params, Seed(1234L + i)))
-    assert(cases.size >= 8)
+    val cases = (0 until 16).flatMap(i => genCase.apply(params, Seed(1234L + i)))
+    assert(cases.size >= 12)
+    assert(cases.exists(_.nB.contains(4)))
+    assert(cases.exists(c => c.sizes.max > c.ks.min), "no cell holds more than k rows")
+    // some query whose first step stays below k while a later step
+    // reaches it: the walk's stop-at-first-full-step must both stop
+    // and keep filling there (sort=false: ranks are the given ones)
+    assert(cases.exists(c => !c.sort && (0 until c.nQ).exists { q =>
+      // (rank, rows) of query q's cells; numSteps cells per query
+      val numSteps = c.nS * c.nB.getOrElse(1)
+      val cells = (q * numSteps until (q + 1) * numSteps).map(i => (c.ranks(i), c.sizes(i)))
+      val first = cells.filter(_._1 == 0).map(_._2).sum
+      val last = cells.filter(_._1 < numSteps).map(_._2).sum
+      c.ks.exists(k => first < k && last >= k)
+    }), "no case has an early step below k and a later step at k")
 
     for ((c, ci) <- cases.zipWithIndex) {
       val nb = c.nB.getOrElse(1)
@@ -364,9 +382,10 @@ class PropertiesSuite extends SparkSuite {
       val shardRows = cellsIdx.zipWithIndex.map { case ((q, s, b), i) =>
         (qid(q), s, b, c.ranks(i), c.scores(i).toDouble)
       }
+      val offsets = c.sizes.scanLeft(0)(_ + _)
       val resultRows = cellsIdx.zipWithIndex.flatMap { case ((q, s, b), i) =>
-        (0 until 3).map { d =>
-          val j = i * 3 + d
+        (0 until c.sizes(i)).map { d =>
+          val j = offsets(i) + d
           (qid(q), s, b, c.rels(j), c.prios(j), j)
         }
       }

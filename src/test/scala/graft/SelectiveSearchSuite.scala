@@ -122,9 +122,7 @@ class SelectiveSearchSuite extends SparkSuite {
           3, 0.5).collect()
       } finally spark.conf.set(aqeKey, origAqe)
     }
-    val messages = Iterator.iterate[Throwable](err)(_.getCause)
-      .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
-      .mkString("\n")
+    val messages = errorChain(err)
     assert(messages.contains("empty results"),
       s"expected the raise_error guard, got: $messages")
   }
@@ -158,6 +156,63 @@ class SelectiveSearchSuite extends SparkSuite {
     val b = SelectiveSearch.selectWithDecay(selection, results, 3, 0.5)
       .collect().toSeq
     assert(a == b)
+  }
+
+  /** The three select calls over one experiment, each with the given
+    * known query domain.
+    */
+  private def selectCalls(sel: DataFrame, bucketSel: DataFrame, res: DataFrame,
+      domain: Option[Int]): Seq[(String, DataFrame)] = Seq(
+    "select" -> SelectiveSearch.select(sel, res, 2, domain),
+    "selectWithDecay" -> SelectiveSearch.selectWithDecay(sel, res, 3, 0.5, domain),
+    "selectBuckets" -> SelectiveSearch.selectBuckets(bucketSel, res, 3, domain))
+
+  private def errorChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
+
+  test("queryDomain: a query id outside [0, nq) fails loudly") {
+    // query 1 == nq for nq = 1
+    for ((name, df) <- selectCalls(selection, bucketSelection, results, Some(1))) {
+      val err = intercept[Exception](df.collect())
+      assert(errorChain(err).contains("sortByKnownDomain"), s"$name: ${errorChain(err)}")
+    }
+    // a negative id, with its own selection rows so it reaches the sort
+    def negated(df: DataFrame) = df.union(df.filter($"query" === 0)
+      .withColumn("query", org.apache.spark.sql.functions.lit(-1)))
+    for ((name, df) <- selectCalls(negated(selection), negated(bucketSelection),
+        negated(results), Some(2))) {
+      val err = intercept[Exception](df.collect())
+      assert(errorChain(err).contains("sortByKnownDomain"), s"$name: ${errorChain(err)}")
+    }
+  }
+
+  test("queryDomain: output is totally ordered for nq = 1, 3, 4, 10") {
+    val rnd = new scala.util.Random(11)
+    for (nq <- Seq(1, 3, 4, 10)) {
+      val cells = for (q <- 0 until nq; s <- 0 until 3; b <- 0 until 2) yield (q, s, b)
+      // few distinct scores, so the (shard, bucket, gdocid) tiebreak decides
+      val res = cells.flatMap { case (q, s, b) =>
+        (0 until 3).map(d => (q, s, b, rnd.nextInt(4).toDouble, ((q * 3 + s) * 2 + b) * 3L + d))
+      }.toDF("query", "shard", "bucket", "score", "gdocid").repartition(3)
+      val sel = (for (q <- 0 until nq) yield
+        rnd.shuffle((0 until 3).toList).zipWithIndex.map { case (s, r) => (q, s, r) })
+        .flatten.toDF("query", "shard", "rank")
+      val bSel = (for (q <- 0 until nq) yield
+        rnd.shuffle(cells.filter(_._1 == q).toList).zipWithIndex
+          .map { case ((_, s, b), r) => (q, s, b, r) })
+        .flatten.toDF("query", "shard", "bucket", "rank")
+      val routed = selectCalls(sel, bSel, res, Some(nq))
+      val sampled = selectCalls(sel, bSel, res, None)
+      for (((name, got), (_, want)) <- routed.zip(sampled)) {
+        val rows = got.collect().toSeq
+        assert(rows.nonEmpty && rows == want.collect().toSeq, s"$name nq=$nq")
+        // and the order is the (query, score desc, shard, bucket, gdocid) one
+        val keys = rows.map(r => (r.getAs[Int]("query"), -r.getAs[Double]("score"),
+          r.getAs[Int]("shard"), r.getAs[Int]("bucket"), r.getAs[Long]("gdocid")))
+        assert(keys == keys.sorted, s"$name nq=$nq out of order")
+      }
+    }
   }
 
   test("missing columns raise MissingColumnException") {
