@@ -172,10 +172,10 @@ object SparkEntry {
         queryDomain = Some(Tables.NumQueries))),
 
     // C2/C1 + A1/A2: full evaluation sweep, single-pass step
-    // attribution. arranged=true: the results fixture just came
-    // through its global_rank window (hash-clustered by query,
-    // rank-ordered), so the arrival walk skips its own exchange+sort.
-    // The PRUNED fixture (rank-prefix equivalence proved at
+    // attribution. The results fixture comes through its global_rank
+    // window (hash-clustered by query), so the arrival walk adds no
+    // exchange of its own, only a local sort. The PRUNED fixture
+    // (rank-prefix equivalence proved at
     // Tables.evalResultsPruned) reduces the corpus-sized frame to
     // <= units x depth rows BEFORE that window — the full fixture's
     // per-query sort was the family's dominant cost; EvaluateSuite
@@ -184,8 +184,7 @@ object SparkEntry {
     "c2_evaluate" -> ((s, dir) =>
       SelectiveSearch.evaluate(
         Tables.selection(s, dir), Tables.evalResultsPruned(s, dir, 10),
-        Seq(precisionAt(10), precisionAt(5)), Tables.NumShards,
-        arranged = true)),
+        Seq(precisionAt(10), precisionAt(5)), Tables.NumShards)),
 
     // C2 sort=true (quirk-Q2 docstring intent): shards arrive with a
     // raw shard_score and evaluate ranks them per query (score desc,
@@ -196,8 +195,7 @@ object SparkEntry {
     "c2_evaluate_sorted" -> ((s, dir) =>
       SelectiveSearch.evaluate(
         Tables.shardScores(s, dir), Tables.evalResultsPruned(s, dir, 10),
-        Seq(precisionAt(10), precisionAt(5)), Tables.NumShards, sort = true,
-        arranged = true)),
+        Seq(precisionAt(10), precisionAt(5)), Tables.NumShards, sort = true)),
 
     // C2 bucketed: step sweep over (shard, bucket) selection units —
     // pruning at the finest grain the sweep joins on
@@ -206,7 +204,7 @@ object SparkEntry {
         Tables.bucketSelection(s, dir),
         Tables.evalResultsPruned(s, dir, 10, withBuckets = true),
         Seq(precisionAt(10)), Tables.NumShards,
-        numBuckets = Some(Tables.NumBuckets), arranged = true)),
+        numBuckets = Some(Tables.NumBuckets))),
 
     // C9 = A4 -> P6 -> P3 -> T3 -> T1 -> P1: TREC run frame
     "c9_to_trec" -> ((s, dir) =>

@@ -119,13 +119,15 @@ object StaticRange {
   /** `df` totally ordered by `sortCols`, where `pid` must be a
     * non-null integral column in [0, numParts) that is non-decreasing
     * in the leading sort key (its rank in the domain, or the index of
-    * the contiguous key range holding it).
+    * the contiguous key range holding it). A null pid fails the range
+    * test's `when` and lands in the same error as an out-of-range one.
     */
   def sortByKnownDomain(df: DataFrame, pid: Column, numParts: Int,
       sortCols: Seq[Column]): DataFrame = {
     require(numParts > 0, s"numParts $numParts must be positive")
-    val guarded = when(pid.isNotNull && pid >= 0 && pid < numParts, pid)
-      .otherwise(raise_error(concat(
+    // concat_ws skips a null pid, so its message still names the guard
+    val guarded = when(pid >= 0 && pid < numParts, pid)
+      .otherwise(raise_error(concat_ws("",
         lit(s"StaticRange.sortByKnownDomain: pid outside [0, $numParts): "),
         pid.cast("string"))).cast("int"))
     val passThrough = org.apache.spark.sql.graft.ColumnBridge.column(

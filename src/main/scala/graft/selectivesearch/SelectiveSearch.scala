@@ -1,8 +1,11 @@
 package graft.selectivesearch
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.Objects
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.core.DataUtils.ensureHasColumns
 import graft.core.{DataUtils, Schemas, StaticRange}
@@ -62,8 +65,8 @@ object SelectiveSearch {
     * queries x steps rows — the reference returns a pandas frame, so
     * presentation size is its contract — which makes a single-
     * partition sort safe at any corpus scale, and it skips the range-
-    * exchange sampling job that would re-execute the arrival walk /
-    * explode stage beneath the sort (~0.3 s per call at toy scale:
+    * exchange sampling job that would re-execute the arrival walk
+    * beneath the sort (~0.3 s per call at toy scale:
     * SortProbe, SCALING.md round 11). (query, step) is the group key,
     * so the single-partition order is total and deterministic.
     */
@@ -205,33 +208,19 @@ object SelectiveSearch {
   // Evaluation family
   // ---------------------------------------------------------------------
 
-  /** A named per-query effectiveness measure over rank-ordered results.
-    * The reference's measures are a dict of order-sensitive closures
-    * (reference: dataproc/measures.py:3-5, selectivesearch.py:26);
-    * here each measure is a pair of Column expressions over rows
-    * carrying `__mrn`, the per-(query[,step]) ordinal by `global_rank`.
-    */
-  sealed trait Measure {
-    def name: String
-    /** Aggregate expression given the per-group ordinal column. */
-    def expr(ordinal: Column): Column
-    /** Largest prefix of the ranking this measure needs. */
-    def depth: Int
-  }
-
   /** P@k: mean of `column` over the top-k results by `global_rank`
-    * (reference: dataproc/measures.py:3-5). Divides by the number of
-    * available rows when fewer than k exist, exactly like the
-    * reference's `s[:k].sum() / s[:k].count()`.
+    * (reference: dataproc/measures.py:3-5, the reference's only
+    * measure). Divides by the number of available rows when fewer than
+    * k exist, exactly like the reference's `s[:k].sum() / s[:k].count()`.
     */
-  case class PrecisionAt(k: Int, column: String = "rel", nameOverride: Option[String] = None)
-      extends Measure {
-    val name: String = nameOverride.getOrElse(s"p_$k")
+  case class PrecisionAt(k: Int, column: String = "rel") {
+    val name: String = s"p_$k"
+    /** Aggregate over rows carrying `ordinal`, the per-(query[,step])
+      * position by `global_rank` — the [[evaluateStep]] form. */
     def expr(ordinal: Column): Column =
       avg(when(ordinal <= k, col(column))).as(name)
-    def depth: Int = k
   }
-  def precisionAt(k: Int, column: String = "rel"): Measure = PrecisionAt(k, column)
+  def precisionAt(k: Int, column: String = "rel"): PrecisionAt = PrecisionAt(k, column)
 
   /** One evaluation step: restrict to the top-`step` shards
     * (buckets when `withBuckets`) per query, then compute measures
@@ -242,7 +231,7 @@ object SelectiveSearch {
     * docstring's intent we take the top-`step` entries per query via
     * the explicit `rank` column, which `shards` must carry.
     */
-  def evaluateStep(shards: DataFrame, results: DataFrame, measures: Seq[Measure],
+  def evaluateStep(shards: DataFrame, results: DataFrame, measures: Seq[PrecisionAt],
       step: Int, withBuckets: Boolean = false): DataFrame = {
     ensureHasColumns(shards, Seq("query", "shard", "rank"))
     val groupBy = if (withBuckets) Seq("query", "shard", "bucket") else Seq("query", "shard")
@@ -257,49 +246,36 @@ object SelectiveSearch {
   }
 
   /** Full step sweep: measures at every selection step 1..num_steps
-    * (reference: dataproc/selectivesearch.py:32-73).
+    * (reference: dataproc/selectivesearch.py:32-73), one
+    * `(query, p_k..., step)` row per step a query has results in.
     *
-    * Dispatches to the steps-scalable [[evaluateArrival]] walk whenever
-    * every measure is a [[PrecisionAt]] over one relevance column (the
-    * reference's only measure family) — O(rows x measures), at most
-    * one shuffle (none on a query-clustered input), memory
-    * O(steps x measures). Other measure shapes fall back to the
-    * relational [[evaluateExplode]] sweep.
+    * One arrival walk, O(rows x measures) for any step count. Rows
+    * join the ranked selection once, then shuffle AT MOST ONCE —
+    * hash-repartitioned on the input's own `query` column with a
+    * secondary sort on `global_rank` (`repartition` +
+    * `sortWithinPartitions`, Spark's spill-safe sort), so an input
+    * already hash-clustered by query (the global_rank window) keeps
+    * its partitioning: EnsureRequirements drops the redundant exchange
+    * and the walk runs in the window's own stage. Each partition is
+    * walked as a streaming iterator of generic rows: a query's rows
+    * arrive as one contiguous rank-ordered run (detected by value
+    * equality, so query ids may be of any type), and per-step
+    * (count, sum) pairs fill up to each measure's depth k, each
+    * measure reading its own relevance column. A row of rank r counts
+    * toward steps r+1..numSteps, and a step's count never decreases as
+    * the step index grows, so per row and measure the walk stops at
+    * the first step already holding k rows — every later step is full
+    * too. Memory is O(steps x measures) per in-flight query, never
+    * O(rows): a hot query larger than executor memory spills in the
+    * sort, not in the walk. [[evaluateStepwise]] is the reference
+    * loop the suites pin this against.
     *
     * `sort=true` actually ranks shards by `shard_score` descending
     * (the reference discards that sort — its quirk Q2; the docstring
     * behavior is implemented instead). When `sort=false`, `shards`
     * must already carry a `rank` column.
     */
-  def evaluate(shards: DataFrame, results: DataFrame, measures: Seq[Measure],
-      numShards: Int, sort: Boolean = false, numBuckets: Option[Int] = None,
-      arranged: Boolean = false): DataFrame = {
-    val precisionOnly = measures.forall(_.isInstanceOf[PrecisionAt]) &&
-      measures.collect { case PrecisionAt(_, c, _) => c }.distinct.size == 1
-    // the arrival walk keys queries by a long cast; a non-integral
-    // query column (string IDs) would cast to NULL under non-ANSI
-    // semantics and silently collapse every query into one group —
-    // fall back to the type-generic explode sweep there
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralQuery = results.schema("query").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (precisionOnly && integralQuery)
-      evaluateArrival(shards, results, measures, numShards, sort, numBuckets,
-        arranged)
-    else evaluateExplode(shards, results, measures, numShards, sort, numBuckets)
-  }
-
-  /** Relational single-pass sweep: join results with the ranked
-    * selection once, attribute each result row to every step after its
-    * shard's rank via `explode(sequence(rank+1, steps))`, then one
-    * window + one aggregation keyed by (query, step). One scan, two
-    * shuffles, regardless of step count — but the explode makes the
-    * shuffle O(rows x steps); prefer [[evaluateArrival]] (the
-    * [[evaluate]] default for PrecisionAt) when steps are many.
-    */
-  def evaluateExplode(shards: DataFrame, results: DataFrame, measures: Seq[Measure],
+  def evaluate(shards: DataFrame, results: DataFrame, measures: Seq[PrecisionAt],
       numShards: Int, sort: Boolean = false, numBuckets: Option[Int] = None): DataFrame = {
     val withBuckets = numBuckets.isDefined
     val groupBy = if (withBuckets) Seq("query", "shard", "bucket") else Seq("query", "shard")
@@ -315,178 +291,43 @@ object SelectiveSearch {
         shards
       }
     val sel = ranked.select((groupBy :+ "rank").map(col): _*)
-    // rank >= numSteps would make the sequence below DESCEND and
-    // attribute rows to spurious steps; drop them (the arrival walk
-    // drops them too, keeping both paths in agreement)
-    val joined = results.join(broadcast(sel), groupBy, "inner")
-      .filter(col("rank") < numSteps)
-      .withColumn("step",
-        explode(sequence(col("rank") + 1, lit(numSteps))))
-    val w = Window.partitionBy(col("query"), col("step"))
-      .orderBy(col("global_rank").asc)
-    val ranked2 = joined.withColumn("__mrn", row_number().over(w))
-    ranked2.groupBy(col("query"), col("step"))
-      .agg(measures.head.expr(col("__mrn")), measures.tail.map(_.expr(col("__mrn"))): _*)
-      .select((Seq("query") ++ measures.map(_.name) ++ Seq("step")).map(col): _*)
-      .transform(sortedMatrix)
-  }
-
-  /** Steps-scalable evaluate: identical results to [[evaluateExplode]],
-    * but O(rows) instead of O(rows x steps).
-    *
-    * The explode form materializes each result row once per step it
-    * participates in — fine for tens of steps, a x`numSteps` shuffle
-    * blowup for hundreds. Here rows shuffle AT MOST ONCE — hash-
-    * repartitioned on the input's own `query` column with a secondary
-    * sort on `global_rank` (`repartition` + `sortWithinPartitions`,
-    * Spark's spill-safe sort), both planned BEFORE the walk's type
-    * casts, so an input already hash-clustered by query (the
-    * global_rank window) keeps its partitioning: EnsureRequirements
-    * drops the redundant exchange and the walk runs in the window's
-    * own stage. Each partition is walked as a streaming iterator:
-    * per-step (count, sum) pairs fill up to each measure's depth k. A
-    * row of rank r counts toward steps r+1..numSteps, and a step's
-    * count never decreases as the step index grows, so per row and
-    * measure the walk stops at the first step already holding k rows —
-    * every later step is full too. Work is O(rows x measures) plus
-    * the steps actually filled, not O(rows x steps) when early steps
-    * never reach k. Memory is O(steps x measures) per in-flight query,
-    * never O(rows): no per-group array materialization, so a hot
-    * query larger than executor memory spills in the sort, not in the
-    * walk.
-    */
-  /** `arranged = true` is the caller's PROMISE that `results` rows are
-    * already (a) co-located by query (all rows of one query in one
-    * partition, contiguous) and (b) partition-locally ordered by
-    * (query, global_rank asc) — true whenever `results` just came
-    * through the global_rank window (hash-clustered by query, sorted
-    * by the rank's own ordering) followed only by order-preserving
-    * narrow ops. The walk then runs directly on the joined projection
-    * with NO second exchange+sort. AQE partition coalescing preserves
-    * both properties (it concatenates whole hash partitions, keeping
-    * each query's run contiguous), and the walk keys on run
-    * boundaries, not global query order. The promise is CHECKED at
-    * runtime, per partition, for the cost of one long-compare and one
-    * hash probe per row: global_rank must be strictly increasing
-    * within each query run, and a query must not start a second run
-    * after its first ended (an added exchange, skew split, or
-    * non-window source fails loudly instead of silently corrupting
-    * precision numbers). The one violation this cannot see locally is
-    * a query split cleanly ACROSS partitions — each half looks like a
-    * valid run; the registered uses' hash oracles cover that residue.
-    */
-  /** Runtime check of the `arranged = true` layout promise (see
-    * [[evaluateArrival]]): within a partition, `global_rank` strictly
-    * increases inside each query run and no query starts a second run.
-    * Streaming pass-through — one comparison + one hash-set probe per
-    * row, no buffering.
-    */
-  private def assertArranged(
-      it: Iterator[(Long, Long, Double, Int)]): Iterator[(Long, Long, Double, Int)] =
-    new Iterator[(Long, Long, Double, Int)] {
-      private val closedRuns = new java.util.HashSet[Long]()
-      private var curQuery = 0L
-      private var lastRank = 0L
-      private var started = false
-      def hasNext: Boolean = it.hasNext
-      def next(): (Long, Long, Double, Int) = {
-        val row = it.next()
-        if (!started || row._1 != curQuery) {
-          if (started) closedRuns.add(curQuery)
-          if (!closedRuns.isEmpty && closedRuns.contains(row._1))
-            throw new IllegalStateException(
-              s"evaluate(arranged=true): layout promise violated — query ${row._1} " +
-                "appears in more than one contiguous run in a partition; the input " +
-                "is not clustered by query. Re-run with arranged=false.")
-          curQuery = row._1
-          started = true
-        } else if (row._2 <= lastRank) {
-          throw new IllegalStateException(
-            s"evaluate(arranged=true): layout promise violated — global_rank ${row._2} " +
-              s"after $lastRank within query ${row._1}; the input is not sorted by " +
-              "(query, global_rank). Re-run with arranged=false.")
-        }
-        lastRank = row._2
-        row
-      }
-    }
-
-  /** Walk encoders derived ONCE at object init: the per-call
-    * `import spark.implicits._` derivation re-runs ScalaReflection
-    * over the tuple types on EVERY evaluate call — a fixed driver
-    * cost (part of the ~0.25 s pre-first-job planning gap JobGapProbe
-    * measured on c2_evaluate) that caching here removes. Encoders are
-    * session-independent expression bundles; sharing one instance
-    * across sessions is the documented Encoder contract.
-    */
-  private implicit val walkInEnc: org.apache.spark.sql.Encoder[(Long, Long, Double, Int)] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  private implicit val walkOutEnc: org.apache.spark.sql.Encoder[(Long, Array[Double], Int)] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-
-  def evaluateArrival(shards: DataFrame, results: DataFrame, measures: Seq[Measure],
-      numShards: Int, sort: Boolean = false, numBuckets: Option[Int] = None,
-      arranged: Boolean = false): DataFrame = {
-    val withBuckets = numBuckets.isDefined
-    val groupBy = if (withBuckets) Seq("query", "shard", "bucket") else Seq("query", "shard")
-    val numSteps = numShards * numBuckets.getOrElse(1)
-    val ks = measures.map {
-      case PrecisionAt(k, relCol, _) => (k, relCol)
-      case m => throw new IllegalArgumentException(
-        s"evaluateArrival supports PrecisionAt measures, got ${m.name}")
-    }
-    val relCols = ks.map(_._2).distinct
-    require(relCols.size == 1, "one relevance column per sweep")
-    val queryType = results.schema("query").dataType
-    val ranked =
-      if (sort) {
-        ensureHasColumns(shards, groupBy :+ "shard_score")
-        val w = Window.partitionBy(col("query"))
-          .orderBy(col("shard_score").desc +: groupBy.drop(1).map(col(_).asc): _*)
-        shards.withColumn("rank", row_number().over(w) - 1)
-      } else {
-        ensureHasColumns(shards, groupBy :+ "rank")
-        shards
-      }
-    val sel = ranked.select((groupBy :+ "rank").map(col): _*)
+    val relCols = measures.map(_.column).distinct
     // rank >= numSteps rows can't land in any step — drop before the
-    // shuffle (and keep parity with evaluateExplode's filter)
-    val joined = results.join(broadcast(sel), groupBy, "inner")
+    // shuffle. Repartition and sort on the uncast input columns, so a
+    // query-clustered input needs no exchange, only the local sort.
+    val prepared = results.join(broadcast(sel), groupBy, "inner")
       .filter(col("rank") < numSteps)
-      .select(col("query"), col("global_rank"), col(relCols.head), col("rank"))
-    val kDepths = ks.map(_._1).toArray
-    // at most ONE shuffle: hash partition by query, secondary-sort by
-    // (query, global_rank) within partitions — queries arrive as
-    // contiguous rank-ordered runs and are walked without buffering.
-    // Keyed on the uncast columns, so a query-clustered input (the
-    // global_rank window) needs no exchange, only the local sort.
-    // When the caller vouches the input is already arranged (the
-    // window's rank order IS global_rank order), even that sort goes.
-    val laidOut =
-      if (arranged) joined
-      else joined
-        .repartition(col("query"))
-        .sortWithinPartitions(col("query"), col("global_rank").cast("long"))
-    val prepared = laidOut
-      .select(col("query").cast("long"), col("global_rank").cast("long"),
-        col(relCols.head).cast("double"), col("rank").cast("int"))
-      .as[(Long, Long, Double, Int)]
-    val out = prepared.mapPartitions { rows0 =>
-      val rows = if (arranged) assertArranged(rows0) else rows0
+      .repartition(col("query"))
+      .sortWithinPartitions(col("query"), col("global_rank"))
+      .select(col("query") +: relCols.map(col(_).cast("double")) :+
+        col("rank").cast("int"): _*)
+    val kDepths = measures.map(_.k).toArray
+    // walk column of each measure's relevance value
+    val relAt = measures.map(m => 1 + relCols.indexOf(m.column)).toArray
+    val rankAt = 1 + relCols.size
+    // output rows are encoded from a schema, not a Scala type: no
+    // reflection on the driver per call
+    val outEnc = Encoders.row(StructType(
+      prepared.schema.fields.head +:
+        measures.map(m => StructField(m.name, DoubleType)) :+
+        StructField("step", IntegerType, nullable = false)))
+    prepared.mapPartitions { (rows: Iterator[Row]) =>
       val it = rows.buffered
-      new Iterator[(Long, Array[Double], Int)] {
-        private var pending: Iterator[(Long, Array[Double], Int)] = Iterator.empty
+      new Iterator[Row] {
+        private var pending: Iterator[Row] = Iterator.empty
         private def advance(): Unit = {
           while (!pending.hasNext && it.hasNext) {
-            val query = it.head._1
+            val query = it.head.get(0)
             // per (measure, step): running count and sum over the first k
             val counts = Array.ofDim[Long](kDepths.length, numSteps + 1)
             val sums = Array.ofDim[Double](kDepths.length, numSteps + 1)
-            while (it.hasNext && it.head._1 == query) {
-              val (_, _, rel, rank) = it.next()
+            while (it.hasNext && Objects.deepEquals(it.head.get(0), query)) {
+              val row = it.next()
+              val rank = row.getInt(rankAt)
               var m = 0
               while (m < kDepths.length) {
                 val k = kDepths(m)
+                val rel = row.getDouble(relAt(m))
                 val cm = counts(m)
                 val sm = sums(m)
                 // counts are non-decreasing in the step, so the first
@@ -504,27 +345,22 @@ object SelectiveSearch {
             // for every measure advance together below k, so c > 0 for
             // all measures whenever it is for the first
             pending = (1 to numSteps).iterator.filter(s => counts(0)(s) > 0).map { s =>
-              (query, Array.tabulate(kDepths.length)(m => sums(m)(s) / counts(m)(s)), s)
+              Row.fromSeq(query +:
+                kDepths.indices.map(m => sums(m)(s) / counts(m)(s)) :+ s)
             }
           }
         }
         def hasNext: Boolean = { advance(); pending.hasNext }
-        def next(): (Long, Array[Double], Int) = { advance(); pending.next() }
+        def next(): Row = { advance(); pending.next() }
       }
-    }
-    out.toDF("query", "vals", "step")
-      .select(col("query").cast(queryType) +:
-        measures.zipWithIndex.map { case (m, i) =>
-          col("vals").getItem(i).as(m.name) } :+
-        col("step").cast("int").as("step"): _*)
-      .transform(sortedMatrix)
+    }(outEnc).transform(sortedMatrix)
   }
 
   /** Reference-shaped per-step loop (union of [[evaluateStep]] plans).
     * Kept for golden equivalence testing against the single-pass
     * [[evaluate]]; prefer [[evaluate]] at scale.
     */
-  def evaluateStepwise(shards: DataFrame, results: DataFrame, measures: Seq[Measure],
+  def evaluateStepwise(shards: DataFrame, results: DataFrame, measures: Seq[PrecisionAt],
       numShards: Int, sort: Boolean = false, numBuckets: Option[Int] = None): DataFrame = {
     val withBuckets = numBuckets.isDefined
     val numSteps = numShards * numBuckets.getOrElse(1)
@@ -607,27 +443,24 @@ object SelectiveSearch {
     *
     * Pure (does not mutate input — reference quirk Q4) and writes a
     * single file for byte-level parity with `to_csv`: Spark writes a
-    * directory, then the lone part file is moved to `path`.
-    * `tiebreak` stands in for pandas' input-order tie handling in
+    * directory, then the lone part file is moved to `path`. `title`
+    * stands in for pandas' input-order tie handling in
     * `rank(method='first')`.
     */
-  def toTrec(results: DataFrame, path: String, cutoff: Int = 1000,
-      tiebreak: Seq[String] = Seq("title")): Unit = {
+  def toTrec(results: DataFrame, path: String, cutoff: Int = 1000): Unit = {
     // validate before the routing check below reads results.schema
     // ("score") — a missing column gets the friendly message, not a
     // raw StructType lookup error
-    ensureHasColumns(results, (Seq("query", "score", "title") ++ tiebreak).distinct)
-    // bounded form only on its happy path: the standard title
-    // tiebreak, a positive cutoff (the heap needs k > 0 where the
-    // window form just writes an empty file), and a double score
-    // column (the aggregate exports double; a decimal/int score
-    // would change the to_csv byte rendering the window form keeps)
+    ensureHasColumns(results, Seq("query", "score", "title"))
+    // bounded form only on its happy path: a positive cutoff (the heap
+    // needs k > 0 where the window form just writes an empty file) and
+    // a double score column (the aggregate exports double; a
+    // decimal/int score would change the to_csv byte rendering the
+    // window form keeps)
     val frame =
-      if (tiebreak == Seq("title") && cutoff > 0 &&
-          results.schema("score").dataType ==
-            org.apache.spark.sql.types.DoubleType)
+      if (cutoff > 0 && results.schema("score").dataType == DoubleType)
         trecFrameTopK(results, cutoff)
-      else trecFrame(results, cutoff, tiebreak)
+      else trecFrame(results, cutoff)
     frame
       .coalesce(1)
       .write.mode("overwrite")
@@ -637,15 +470,14 @@ object SelectiveSearch {
   }
 
   /** The TREC frame itself (exposed for testing / further composition):
-    * 0-based per-query rank by score descending, `iter='Q0'`,
+    * 0-based per-query rank by (score desc, title asc), `iter='Q0'`,
     * `run_id='null'`, rank < cutoff, sorted by (query, rank)
     * (reference: dataproc/selectivesearch.py:195-201).
     */
-  def trecFrame(results: DataFrame, cutoff: Int = 1000,
-      tiebreak: Seq[String] = Seq("title")): DataFrame = {
+  def trecFrame(results: DataFrame, cutoff: Int = 1000): DataFrame = {
     ensureHasColumns(results, Seq("query", "score", "title"))
     val w = Window.partitionBy(col("query"))
-      .orderBy(col("score").desc +: tiebreak.map(col(_).asc): _*)
+      .orderBy(col("score").desc, col("title").asc)
     results
       .withColumn("rank", (row_number().over(w) - 1).cast("int"))
       .withColumn("iter", lit("Q0"))

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.selectivesearch.SelectiveSearch
 import graft.selectivesearch.SelectiveSearch.precisionAt
 
-/** Evaluation-family semantics: the single-pass step sweep must equal
-  * the reference-shaped per-step loop (C1/C2), including the bucketed
-  * variant and the sort=true ranking (reference quirk Q2 implemented
-  * per its docstring).
+/** Evaluation-family semantics: the arrival walk behind `evaluate`
+  * must equal the reference-shaped per-step loop `evaluateStepwise`
+  * (C1/C2), including the bucketed variant, the sort=true ranking
+  * (reference quirk Q2 implemented per its docstring) and a
+  * many-partition sweep; plus the TREC frame's bounded form against
+  * its window form.
   */
 class EvaluateSuite extends SparkSuite {
   import spark.implicits._
@@ -38,37 +40,22 @@ class EvaluateSuite extends SparkSuite {
     (1, 0, 0.1), (1, 1, 0.5), (1, 2, 0.8)
   ).toDF("query", "shard", "shard_score")
 
-  test("single-pass explode evaluate equals the per-step loop") {
-    val m = Seq(precisionAt(5), precisionAt(2))
-    val fast = SelectiveSearch.evaluateExplode(shards, results, m, 3).collect().toSeq
-    val loop = SelectiveSearch.evaluateStepwise(shards, results, m, 3).collect().toSeq
-    assert(fast == loop)
-    assert(fast.size == 6) // 2 queries x 3 steps
-  }
-
-  test("arrival-walk evaluate equals the explode form (steps-scalable path)") {
-    val m = Seq(precisionAt(5), precisionAt(2))
-    val explode = SelectiveSearch.evaluateExplode(shards, results, m, 3).collect().toSeq
-    val arrival = SelectiveSearch.evaluateArrival(shards, results, m, 3).collect().toSeq
-    assert(arrival == explode) // identical rows AND identical schema types
-  }
-
   test("evaluate dispatches PrecisionAt sweeps to the arrival walk") {
     val m = Seq(precisionAt(5), precisionAt(2))
-    val viaDispatch = SelectiveSearch.evaluate(shards, results, m, 3)
-    // the dispatched plan is the mapPartitions walk, not the explode
-    val plan = viaDispatch.queryExecution.analyzed.toString
+    val walk = SelectiveSearch.evaluate(shards, results, m, 3)
+    // one mapPartitions walk, no per-step plans
+    val plan = walk.queryExecution.analyzed.toString
     assert(plan.contains("MapPartitions"), plan.take(2000))
-    assert(viaDispatch.collect().toSeq ==
-      SelectiveSearch.evaluateStepwise(shards, results, m, 3).collect().toSeq)
+    val rows = walk.collect().toSeq
+    // identical rows AND identical schema types
+    assert(rows == SelectiveSearch.evaluateStepwise(shards, results, m, 3).collect().toSeq)
+    assert(rows.size == 6) // 2 queries x 3 steps
   }
 
-  test("arrival walk equals explode at sweep scale (100 queries x 32 steps)") {
-    // the EvalSweepProbe shape, shrunk to suite budget: hash-derived
-    // ranks/relevance across MANY partitions and steps, so the walk's
-    // re-shuffle + per-partition run-boundary keying is exercised on
-    // input far larger than the 2x3 fixture (the probe pins the same
-    // equality at 1k x 64 with the per-step loop too)
+  test("arrival walk equals the per-step loop at sweep scale (100 queries x 32 steps)") {
+    // hash-derived ranks/relevance across MANY partitions and steps,
+    // so the walk's re-shuffle + per-partition run-boundary keying is
+    // exercised on input far larger than the 2x3 fixture
     val nQ = 100; val nS = 32; val perShard = 10
     val sel = spark.range(nQ.toLong * nS)
       .select(($"id" / nS).cast("long").as("query"),
@@ -89,9 +76,9 @@ class EvaluateSuite extends SparkSuite {
     def mat(df: DataFrame) = df
       .select($"query", $"step", round($"p_10", 9), round($"p_5", 9))
       .collect().map(_.toSeq).sortBy(_.toString()).toSeq
-    val arrival = mat(SelectiveSearch.evaluateArrival(sel, res, m, nS))
+    val arrival = mat(SelectiveSearch.evaluate(sel, res, m, nS))
     assert(arrival.size == nQ * nS)
-    assert(arrival == mat(SelectiveSearch.evaluateExplode(sel, res, m, nS)))
+    assert(arrival == mat(SelectiveSearch.evaluateStepwise(sel, res, m, nS)))
   }
 
   test("bucketed evaluate equals the bucketed per-step loop") {
@@ -130,22 +117,6 @@ class EvaluateSuite extends SparkSuite {
     assert(got == expected)
   }
 
-  test("typed Aggregator P@k equals the window form, order-insensitively") {
-    import graft.selectivesearch.Measures.precisionAtTyped
-    // shuffled-input tuples (global_rank, rel) per query
-    val rows = results.select($"query", $"global_rank", $"rel".cast("double"))
-      .as[(Int, Int, Double)]
-    val typed = rows.groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(precisionAtTyped(5))
-      .collect().toMap
-    val window = SelectiveSearch.evaluateStep(
-      shards, results, Seq(precisionAt(5)), step = 3) // all shards in
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(typed.keySet == window.keySet)
-    typed.foreach { case (q, v) => assert(v == window(q), s"query $q") }
-  }
-
   test("fewer than k results divides by the available count") {
     val tiny = Seq((0, 0, 0, 10.0, 1L, 1, 1), (0, 0, 1, 9.0, 2L, 0, 2))
       .toDF("query", "shard", "bucket", "score", "gdocid", "rel", "global_rank")
@@ -153,59 +124,6 @@ class EvaluateSuite extends SparkSuite {
     val got = SelectiveSearch.evaluate(sel, tiny, Seq(precisionAt(10)), 1)
       .first().getDouble(1)
     assert(got == 0.5) // (1+0)/2, not /10
-  }
-
-  test("arranged walk equals the re-shuffling walk on window-arranged input") {
-    // `results` ends in the global_rank window, i.e. exactly the
-    // layout the arranged promise describes
-    val measures = Seq(precisionAt(5), precisionAt(2))
-    val base = SelectiveSearch.evaluate(
-      shards, results, measures, numShards = 3).collect().toSeq
-    val fast = SelectiveSearch.evaluate(
-      shards, results, measures, numShards = 3, arranged = true)
-      .collect().toSeq
-    assert(fast == base)
-    // and through the bucketed variant (the withColumn projection
-    // between the window and the walk must preserve the arrangement)
-    val bsel = Seq(
-      (0, 0, 0, 0), (0, 0, 1, 2), (0, 1, 0, 1), (0, 1, 1, 3),
-      (0, 2, 0, 4), (0, 2, 1, 5),
-      (1, 0, 0, 5), (1, 0, 1, 4), (1, 1, 0, 3), (1, 1, 1, 1),
-      (1, 2, 0, 0), (1, 2, 1, 2)
-    ).toDF("query", "shard", "bucket", "rank")
-    val baseB = SelectiveSearch.evaluate(bsel, results, Seq(precisionAt(5)),
-      3, numBuckets = Some(2)).collect().toSeq
-    val fastB = SelectiveSearch.evaluate(bsel, results, Seq(precisionAt(5)),
-      3, numBuckets = Some(2), arranged = true).collect().toSeq
-    assert(fastB == baseB)
-    assert(baseB.nonEmpty)
-  }
-
-  test("a false arranged promise fails loudly instead of corrupting results") {
-    def rootMessages(t: Throwable): String = {
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString("\n")
-    }
-    // an injected physical sort below the join would just be
-    // optimizer-eliminated (order-unaware join), so mis-arrange the
-    // VALUES: flipping global_rank makes the window's physical
-    // (query, rank-asc) layout read as rank-DESCENDING -> the
-    // monotonic check fires
-    val reversed = results
-      .withColumn("global_rank", lit(25) - $"global_rank")
-    val e1 = intercept[Exception] {
-      SelectiveSearch.evaluate(shards, reversed, Seq(precisionAt(5)),
-        numShards = 3, arranged = true).collect()
-    }
-    assert(rootMessages(e1).contains("layout promise violated"))
-    // two copies of each query's run concatenated into one partition
-    // -> a query re-starts after its run closed -> second-run check
-    val interleaved = results.union(results).coalesce(1)
-    val e2 = intercept[Exception] {
-      SelectiveSearch.evaluate(shards, interleaved, Seq(precisionAt(5)),
-        numShards = 3, arranged = true).collect()
-    }
-    assert(rootMessages(e2).contains("layout promise violated"))
   }
 
   test("trecFrameTopK equals the window trecFrame row-for-row, ties included") {
@@ -239,25 +157,21 @@ class EvaluateSuite extends SparkSuite {
     val prunedB = Tables.evalResultsPruned(spark, dir, 10, withBuckets = true)
     val ms = Seq(precisionAt(10), precisionAt(5))
     assert(sortedRows(SelectiveSearch.evaluate(
-        Tables.selection(spark, dir), pruned, ms, Tables.NumShards,
-        arranged = true)) ==
+        Tables.selection(spark, dir), pruned, ms, Tables.NumShards)) ==
       sortedRows(SelectiveSearch.evaluate(
-        Tables.selection(spark, dir), full, ms, Tables.NumShards,
-        arranged = true)))
+        Tables.selection(spark, dir), full, ms, Tables.NumShards)))
     assert(sortedRows(SelectiveSearch.evaluate(
         Tables.shardScores(spark, dir), pruned, ms, Tables.NumShards,
-        sort = true, arranged = true)) ==
+        sort = true)) ==
       sortedRows(SelectiveSearch.evaluate(
         Tables.shardScores(spark, dir), full, ms, Tables.NumShards,
-        sort = true, arranged = true)))
+        sort = true)))
     assert(sortedRows(SelectiveSearch.evaluate(
         Tables.bucketSelection(spark, dir), prunedB, Seq(precisionAt(10)),
-        Tables.NumShards, numBuckets = Some(Tables.NumBuckets),
-        arranged = true)) ==
+        Tables.NumShards, numBuckets = Some(Tables.NumBuckets))) ==
       sortedRows(SelectiveSearch.evaluate(
         Tables.bucketSelection(spark, dir), fullB, Seq(precisionAt(10)),
-        Tables.NumShards, numBuckets = Some(Tables.NumBuckets),
-        arranged = true)))
+        Tables.NumShards, numBuckets = Some(Tables.NumBuckets))))
     // and the pruned frame really is a subset at the unit grain
     val keptCount = pruned.count()
     assert(keptCount <= 10L * Tables.NumQueries * Tables.NumShards)

@@ -296,7 +296,7 @@ class PlanSuite extends SparkSuite {
     assert(parts.head <= spark.sparkContext.defaultParallelism, p.take(3000))
   }
 
-  test("evaluate(arranged = false) walks a query-windowed input without a second exchange") {
+  test("evaluate walks a query-windowed input without a second exchange") {
     import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}

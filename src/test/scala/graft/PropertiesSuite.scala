@@ -331,7 +331,8 @@ class PropertiesSuite extends SparkSuite {
 
     case class Case(nQ: Int, nS: Int, nB: Option[Int], stringIds: Boolean,
         sort: Boolean, ks: Seq[Int], ranks: Seq[Int], scores: Seq[Int],
-        sizes: Seq[Int], rels: Seq[Int], prios: Seq[Int])
+        sizes: Seq[Int], rels: Seq[Int], prios: Seq[Int],
+        rel2Measure: Option[Int], rels2: Seq[Int])
 
     val genCase = for {
       nQ <- Gen.choose(1, 3)
@@ -352,13 +353,17 @@ class PropertiesSuite extends SparkSuite {
         Gen.frequency(3 -> Gen.choose(0, 3), 1 -> Gen.choose(4, 35)))
       rels <- Gen.listOfN(sizes.sum, Gen.choose(0, 1))
       prios <- Gen.listOfN(sizes.sum, Gen.choose(0, 1000000))
+      // which measure, if any, reads the second relevance column
+      rel2Measure <- Gen.oneOf(None, Some(0), Some(1))
+      rels2 <- Gen.listOfN(sizes.sum, Gen.choose(0, 1))
     } yield Case(nQ, nS, nB, stringIds, sort, ks, ranks, scores, sizes,
-      rels, prios)
+      rels, prios, rel2Measure, rels2)
 
     val params = Gen.Parameters.default
     val cases = (0 until 16).flatMap(i => genCase.apply(params, Seed(1234L + i)))
     assert(cases.size >= 12)
     assert(cases.exists(_.nB.contains(4)))
+    assert(cases.exists(_.rel2Measure.isDefined))
     assert(cases.exists(c => c.sizes.max > c.ks.min), "no cell holds more than k rows")
     // some query whose first step stays below k while a later step
     // reaches it: the walk's stop-at-first-full-step must both stop
@@ -386,7 +391,7 @@ class PropertiesSuite extends SparkSuite {
       val resultRows = cellsIdx.zipWithIndex.flatMap { case ((q, s, b), i) =>
         (0 until c.sizes(i)).map { d =>
           val j = offsets(i) + d
-          (qid(q), s, b, c.rels(j), c.prios(j), j)
+          (qid(q), s, b, c.rels(j), c.rels2(j), c.prios(j), j)
         }
       }
       val spark2 = spark
@@ -399,12 +404,14 @@ class PropertiesSuite extends SparkSuite {
       val shardsDf = castQ(shardRows.toDF("query", "shard", "bucket", "rank", "shard_score"))
         .select((shardCols ++ (if (c.sort) Seq("shard_score") else Seq("rank"))).map(col): _*)
       val resultsDf = castQ(resultRows
-        .toDF("query", "shard", "bucket", "rel", "prio", "idx"))
+        .toDF("query", "shard", "bucket", "rel", "rel2", "prio", "idx"))
         .withColumn("global_rank", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("query"))
             .orderBy(col("prio"), col("idx"))))
         .drop("prio", "idx")
-      val measures = c.ks.map(k => precisionAt(k))
+      val measures = c.ks.zipWithIndex.map { case (k, m) =>
+        precisionAt(k, if (c.rel2Measure.contains(m)) "rel2" else "rel")
+      }
       val fast = SelectiveSearch.evaluate(
         shardsDf, resultsDf, measures, c.nS, sort = c.sort, numBuckets = c.nB)
         .collect().toSeq

@@ -215,6 +215,18 @@ class SelectiveSearchSuite extends SparkSuite {
     }
   }
 
+  test("sortByKnownDomain: a null key fails the in-plan guard") {
+    // the select family's inner joins drop null queries before the
+    // sort, so call the sort directly
+    import org.apache.spark.sql.functions.col
+    val df = Seq(Some(0), None, Some(1)).toDF("query")
+    val sorted = graft.core.StaticRange.sortByKnownDomain(
+      df, col("query"), 2, Seq(col("query").asc))
+    val err = intercept[Exception](sorted.collect())
+    assert(errorChain(err).contains("sortByKnownDomain: pid outside [0, 2)"),
+      errorChain(err))
+  }
+
   test("missing columns raise MissingColumnException") {
     intercept[MissingColumnException](
       SelectiveSearch.select(selection.drop("rank"), results, 1))
