@@ -189,18 +189,15 @@ object Bench {
       // 1.3 -> 2.6 s, c9_to_trec 1.1 -> 2.8 s vs round 4); 2m keeps
       // the floor at ~0.19 s AND restores their width (1.9 / 1.25 s
       // measured; heavies unchanged).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "2m"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
       // every query ends in an explicit orderBy, whose range exchange
       // samples the child first — at toy scale that sampling pass is
       // pure floor (FloorProbe: j4 0.086 -> 0.074 s, sub-second rows
       // -0.01..-0.05 s each, heavies unchanged). 20 x 32 = 640
       // samples still bound the output ranges fine here; a 100 TB
       // deployment keeps the 100/partition default for balance.
-      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition",
-        sys.env.getOrElse("SPARK_GRAFT_RANGESAMPLE", "20"))
+      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "20")
       // collect_list posting builds (ngram_jaccard_pairs) fall back
       // to sort-based aggregation past this many distinct keys per
       // task; the default 128 forces the fallback on every shingle
@@ -211,8 +208,7 @@ object Bench {
       // (percentiles, sketches, k-means centroid assembly) have few
       // groups. Deployments with unbounded per-task group counts
       // keep the conservative default.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJHASH", "1048576"))
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
       // interleaved reps (below) cycle through ~100 queries between
       // two reps of the SAME query, and the default 100-entry codegen
       // class cache evicts everything in between — the first
@@ -221,8 +217,7 @@ object Bench {
       // back-to-back on the same tree). Size the cache to hold the
       // whole board's generated classes so pass 2+ measures execution,
       // not Janino. Static conf: must be set at session build.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -183,7 +183,7 @@ object Dsir {
     * integer-exact equal to the former per-occurrence count/sum.
     */
   private def scoreBucketStream(feats: DataFrame, qArr: Array[Long],
-      buckets: Int, idCol: String, extraCols: Seq[String]): DataFrame =
+      idCol: String, extraCols: Seq[String]): DataFrame =
     feats
       .select(col(idCol) +: col("tf") +: element_at(typedLit(qArr.toSeq),
           (col("bucket") + lit(1L)).cast("int")).as("q") +:
@@ -210,7 +210,7 @@ object Dsir {
     scoreBucketStream(
       docBucketCounts(raw, buckets, textCol, idCol,
         extraCols.map(c => (col(c), c))),
-      qArr, buckets, idCol, extraCols)
+      qArr, idCol, extraCols)
 
   /** Per-document log importance weight of every raw document with at
     * least one token: (idCol, n_feats, logweight) where logweight =
@@ -262,7 +262,7 @@ object Dsir {
       .agg(sum(col("tf")).as("c_r"),
         sum(col("tf") * col("w_t")).as("c_t"))
       .collect(), buckets)
-    scoreBucketStream(feats, qArr, buckets, idCol, extraCols)
+    scoreBucketStream(feats, qArr, idCol, extraCols)
   }
 
   /** [[modelArraySelf]] persisted through the [[graft.core.IndexStore]]

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: brute force is the correctness baseline (the corpus
   * side streams; the query side is broadcast; cost O(|Q| x |corpus|)).
-  * The scale path blocks the corpus by sign-LSH cell (one shuffle on
-  * the cell id); queries only score their own cell — classic random-
-  * hyperplane LSH with axis-aligned planes, which keeps the whole
-  * pipeline expressible as relational algebra.
+  * The scale path is IVF: the corpus is blocked by nearest centroid
+  * (data-adaptive cells, unlike fixed sign-LSH cells, which skew as
+  * the corpus grows) and queries score only their probed cells, so
+  * the whole pipeline stays expressible as relational algebra.
   */
 object Similarity {
 
@@ -79,21 +79,10 @@ object Similarity {
   private[operators] def assignCos(dot: Column, na2: Column, nb2: Column): Column =
     nanvl(cosineQ(dot, na2, nb2), lit(Double.NegativeInfinity))
 
-  /** Sign-LSH cell id from the first `bits` quantized components. */
-  def signCell(v: Column, bits: Int): Column =
-    aggregate(
-      transform(sequence(lit(1), lit(bits)),
-        i => when(element_at(v, i) >= 0, pow(lit(2), i - 1).cast("long"))
-          .otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-
-  /** id + quantized vector + squared norm (+ cell when bits > 0). */
-  def prepared(df: DataFrame, embCol: String, idCol: String,
-      bits: Int = 0): DataFrame = {
-    val q = df.select(col(idCol), quantize(col(embCol)).as("v"))
+  /** id + quantized vector + squared norm. */
+  def prepared(df: DataFrame, embCol: String, idCol: String): DataFrame =
+    df.select(col(idCol), quantize(col(embCol)).as("v"))
       .withColumn("n2", norm2Q(col("v")))
-    if (bits > 0) q.withColumn("cell", signCell(col("v"), bits)) else q
-  }
 
   /** Finisher A — bounded top-k AGGREGATE (`top_k`): each map task
     * ships at most k rows per query across the shuffle (partial
@@ -120,15 +109,11 @@ object Similarity {
   }
 
   private def scoredAgainst(corpus: DataFrame, queries: DataFrame,
-      embCol: String, idCol: String, bits: Int): DataFrame = {
-    val c = prepared(corpus, embCol, idCol, bits)
-    val qCols = Seq(col(idCol).as("query_id"), col("v").as("qv"),
-      col("n2").as("qn2")) ++ (if (bits > 0) Seq(col("cell")) else Nil)
-    val q = prepared(queries, embCol, idCol, bits).select(qCols: _*)
-    val cond =
-      if (bits > 0) c("cell") === q("cell") && col("query_id") =!= c(idCol)
-      else col("query_id") =!= c(idCol)
-    c.join(broadcast(q), cond)
+      embCol: String, idCol: String): DataFrame = {
+    val c = prepared(corpus, embCol, idCol)
+    val q = prepared(queries, embCol, idCol).select(col(idCol).as("query_id"),
+      col("v").as("qv"), col("n2").as("qn2"))
+    c.join(broadcast(q), col("query_id") =!= c(idCol))
       .select(col("query_id"), c(idCol),
         cosineQ(dotQ(col("qv"), col("v")), col("qn2"), col("n2")).as("cosine"))
   }
@@ -140,40 +125,9 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       embCol: String = "embedding", idCol: String = "vec_id",
       useWindow: Boolean = false): DataFrame = {
-    val scored = scoredAgainst(corpus, queries, embCol, idCol, bits = 0)
+    val scored = scoredAgainst(corpus, queries, embCol, idCol)
     if (useWindow) finishWindow(scored, k, idCol)
     else finishTopKAgg(scored, k, idCol)
-  }
-
-  /** Sign-LSH approximate top-k: candidates limited to the query's
-    * cell. Same output shape as [[cosineTopK]]; recall < 1 by design.
-    */
-  def lshCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      bits: Int = 6, embCol: String = "embedding",
-      idCol: String = "vec_id", useWindow: Boolean = false): DataFrame = {
-    val scored = scoredAgainst(corpus, queries, embCol, idCol, bits)
-    if (useWindow) finishWindow(scored, k, idCol)
-    else finishTopKAgg(scored, k, idCol)
-  }
-
-  /** Embedding near-duplicate pairs: cosine >= threshold among pairs
-    * sharing a sign-LSH cell (one shuffle on cell).
-    *
-    * Small-corpus / interop path: 2^bits fixed cells skew badly as the
-    * corpus grows — prefer [[ivfNearDupPairs]] (balanced, bounded
-    * cells) at scale.
-    */
-  def nearDupPairs(corpus: DataFrame, threshold: Double, bits: Int = 6,
-      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val p = prepared(corpus, embCol, idCol, bits)
-    val a = p.select(col("cell"), col(idCol).as("id_a"),
-      col("v").as("va"), col("n2").as("na2"))
-    val b = p.select(col("cell"), col(idCol).as("id_b"),
-      col("v").as("vb"), col("n2").as("nb2"))
-    a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2")).as("cosine"))
-      .filter(thresholdPass(col("cosine"), threshold))
   }
 
   // ----- IVF: the ANN scale path ------------------------------------
@@ -1352,9 +1306,16 @@ object Similarity {
     * bit-identical to the raw index's; only the assignment pass
     * shrinks to distinct vectors. Stamped `kind=ivfrepmulti` with the
     * resolved C like the raw index.
+    *
+    * `groups` is the caller's [[storedIvfGroups]] frame for the same
+    * corpus and variant: a call that also serves it must build it
+    * ONCE — under `force` a second [[storedIvfGroups]] call rewrites
+    * the entry and deletes the files the first frame reads. A forced
+    * build also rebuilds the centroid sample entry, so a caller that
+    * reads the sample afterwards reads it unforced.
     */
   def storedIvfRepMultiIndex(corpus: DataFrame, corpusPath: String,
-      numCentroids: Int = 0, assignments: Int = 8,
+      groups: DataFrame, numCentroids: Int = 0, assignments: Int = 8,
       embCol: String = "embedding", idCol: String = "vec_id",
       variant: String = "", force: Boolean = false): DataFrame = {
     require(variant.nonEmpty,
@@ -1367,8 +1328,6 @@ object Similarity {
       s"-$variant-v2-" + graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
       graft.core.IndexStore.sourceFingerprint(corpusPath), force) {
-      val groups = storedIvfGroups(corpus, corpusPath, embCol, idCol,
-        variant, force)
       val c =
         if (numCentroids > 0) numCentroids
         else {
@@ -1492,13 +1451,14 @@ object Similarity {
       force: Boolean): DataFrame = {
     val groups = storedIvfGroups(corpus, corpusPath, embCol, idCol,
       variant, force)
-    val repIdx = storedIvfRepMultiIndex(corpus, corpusPath, numCentroids,
-      assignments, embCol, idCol, variant, force)
+    val repIdx = storedIvfRepMultiIndex(corpus, corpusPath, groups,
+      numCentroids, assignments, embCol, idCol, variant, force)
     val resolvedC = multiStampResolvedC(repIdx,
       "ivfNearDupBatchPrebuilt(collapsed)",
       numCentroids, assignments, embCol, idCol, kind = "ivfrepmulti")
+    // unforced: a forced rep-index build has just rebuilt this entry
     val cent = storedPreparedSample(corpus, corpusPath, resolvedC,
-        embCol, idCol, variant, force)
+        embCol, idCol, variant)
       .select(col(idCol).as("cent_id"), col("v").as("cv"),
         col("n2").as("cn2"))
     val bp = prepared(batch, embCol, idCol)

@@ -310,6 +310,36 @@ class IndexStoreSuite extends SparkSuite {
     }
   }
 
+  test("forced collapsed embedding serving builds its membership entry once") {
+    // the ivf twin of the minhash case above: the collapsed route
+    // holds the stored groups frame, and the rep-index build must not
+    // force-rebuild the same entry underneath it
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfforce").toFile
+    val src = new java.io.File(tmp, "vecs.parquet").getPath
+    val rnd = new scala.util.Random(29)
+    // copy-heavy: 12 distinct vectors, 5 copies each
+    val base = Array.tabulate(12)(_ => Seq.fill(8)(rnd.nextFloat() * 2 - 1))
+    Seq.tabulate(60)(i => (i.toLong, base(i % 12)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(src)
+    val e = spark.read.parquet(src)
+    val corpus = e.filter($"vec_id" >= 24)
+    val batch = e.filter($"vec_id" < 24)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("batch_id", "corpus_id").collect().map(_.toSeq).toSeq
+    val inline = rows(Similarity.ivfNearDupBatch(corpus, batch,
+      threshold = 0.3, assignments = 4, minSharedCells = 2))
+    graft.core.OpCaches.release()
+    for (_ <- 1 to 2) {
+      val forced = rows(Similarity.ivfNearDupBatchPrebuilt(corpus, src, batch,
+        threshold = 0.3, assignments = 4, minSharedCells = 2,
+        variant = "ivfforcetest", force = true, dupGate = -1))
+      graft.core.OpCaches.release()
+      assert(forced == inline && inline.nonEmpty,
+        s"forced ${forced.size} != inline ${inline.size}")
+    }
+  }
+
   test("pruneSuperseded retires only out-generationed entries of the same key") {
     // the r19 sample v1->v2 bump (and the r20 ivf/ivfmulti/pq/ivfpq
     // bumps) leave orphaned old-generation entries nothing can ever

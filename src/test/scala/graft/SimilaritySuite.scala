@@ -26,28 +26,6 @@ class SimilaritySuite extends SparkSuite {
     assert(got(3).getDouble(2) == -1.0)  // opposite, exact with quantized ints
   }
 
-  test("signCell groups by leading-component signs") {
-    val cells = Similarity.prepared(corpus, "embedding", "vec_id", bits = 3)
-      .orderBy("vec_id").select("cell").collect().map(_.getLong(0))
-    // v[0]>=0 -> bit0; v[1]>=0 -> bit1; v[2]>=0 -> bit2 (0 counts as >=0)
-    assert(cells.toSeq == Seq(7L, 7L, 7L, 6L, 7L))
-  }
-
-  test("lshCosineTopK finds same-cell neighbors, misses cross-cell") {
-    val got = Similarity.lshCosineTopK(corpus, corpus.filter($"vec_id" === 0L), 4, bits = 3)
-      .orderBy("rank").collect()
-    // vec 3 is in cell 6 (negative first component) -> not a candidate
-    assert(got.map(_.getLong(1)).toSeq == Seq(4L, 1L, 2L))
-  }
-
-  test("lsh top-1 agrees with brute force when neighbor shares the cell") {
-    val brute = Similarity.cosineTopK(corpus, corpus.filter($"vec_id" === 0L), 1)
-      .first().getLong(1)
-    val lsh = Similarity.lshCosineTopK(corpus, corpus.filter($"vec_id" === 0L), 1, bits = 3)
-      .first().getLong(1)
-    assert(brute == lsh)
-  }
-
   test("top_k aggregate finisher equals the window finisher exactly") {
     val queries = corpus.filter($"vec_id" <= 2L)
     val agg = Similarity.cosineTopK(corpus, queries, 3)
@@ -55,11 +33,6 @@ class SimilaritySuite extends SparkSuite {
     val win = Similarity.cosineTopK(corpus, queries, 3, useWindow = true)
       .orderBy("query_id", "rank").collect().toSeq
     assert(agg == win)
-    val aggL = Similarity.lshCosineTopK(corpus, queries, 3, bits = 3)
-      .orderBy("query_id", "rank").collect().toSeq
-    val winL = Similarity.lshCosineTopK(corpus, queries, 3, bits = 3, useWindow = true)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(aggL == winL)
   }
 
   test("top_k aggregate handles ties, k > group size, and heap overflow order") {
@@ -408,14 +381,6 @@ class SimilaritySuite extends SparkSuite {
     val scoredCount = Similarity.ivfTopK(corpus, queries, 10,
       numCentroids = 3, nprobe = 3).count()
     assert(scoredCount == 4) // 5 vectors minus the query itself
-  }
-
-  test("nearDupPairs thresholds on exact quantized cosine") {
-    val got = Similarity.nearDupPairs(corpus, threshold = 0.99, bits = 3)
-      .orderBy("id_a", "id_b").collect()
-    val pairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 4L)) && pairs.contains((1L, 4L)))
-    assert(!pairs.exists(p => p._2 == 2L || p._1 == 2L))
   }
 
   private def pqCorpus(n: Int, dim: Int, seed: Int): DataFrame = {
