@@ -32,6 +32,20 @@ object VectorKernels {
     }
     acc
   }
+
+  /** `n2 * cn2` as the double under a cosine's square root: the exact
+    * long product, rounded once, wherever it fits in a long — so the
+    * cosine stays bit-identical to the SQL `sqrt(cast(n2 * cn2 as
+    * double))` the oracle replays — and otherwise the product of the
+    * two doubles, one rounding each, instead of a wrapped long.
+    * `multiplyHigh` holds the high 64 bits of the 128-bit product,
+    * which fits iff they are the sign extension of the low 64.
+    */
+  def normProduct(n2: Long, cn2: Long): Double = {
+    val lo = n2 * cn2
+    if (Math.multiplyHigh(n2, cn2) == (lo >> 63)) lo.toDouble
+    else n2.toDouble * cn2.toDouble
+  }
 }
 
 /** `dot_long(a, b)`: exact integer dot product of two `array<long>`
@@ -121,15 +135,13 @@ case class NearestCellsK(left: Expression, right: Expression,
       var dot = 0L
       var i = 0
       while (i < lim) { dot += v.getLong(i) * cv(i); i += 1 }
-      // NOTE (ADVICE r21): the denominator long product can wrap for
-      // extreme-norm corpora (n2 * cn2 >= 2^63), where the joined
-      // path's BIGINT product throws under ANSI instead — the same
-      // quirk Similarity.driverNearestCells documents. Kept as the
-      // single rounding (exact long product -> one double) so the
-      // cosine doubles stay bit-identical to the SQL
-      // sqrt(cast(n2*cn2 as double)) the oracle replays; quantized
-      // norms at the registered scales stay far below the cliff.
-      val raw = dot.toDouble / math.sqrt((n2 * norms(j)).toDouble)
+      // NOTE: normProduct is bit-identical to the oracle's SQL
+      // sqrt(cast(n2*cn2 as double)) wherever the long product fits.
+      // Past 2^63, where that BIGINT product throws under ANSI (the
+      // joined path), the kernel ranks by the double product instead
+      // of a wrapped long; quantized norms at the registered scales
+      // stay far below that cliff.
+      val raw = dot.toDouble / math.sqrt(VectorKernels.normProduct(n2, norms(j)))
       ncs(j) = if (java.lang.Double.isNaN(raw)) Double.PositiveInfinity else -raw
       j += 1
     }
@@ -219,7 +231,7 @@ case class TwoLevelCellsK(left: Expression, right: Expression,
     var dot = 0L
     var i = 0
     while (i < lim) { dot += v.getLong(i) * cv(i); i += 1 }
-    val raw = dot.toDouble / math.sqrt((n2 * cn2).toDouble)
+    val raw = dot.toDouble / math.sqrt(VectorKernels.normProduct(n2, cn2))
     if (java.lang.Double.isNaN(raw)) Double.PositiveInfinity else -raw
   }
 

@@ -152,8 +152,13 @@ object KMeans {
 
     // --- weight candidates by |nearest points|, reduce to k on the
     // --- driver with seeded weighted k-means++ ---
-    val candDf = broadcast(candidates.toDF("cv", "cn2")
-      .withColumn("cand_id", monotonically_increasing_id()))
+    // --- cand_id is the position in the candidate sequence; the
+    // --- broadcast table is the build side of the cross join, and the
+    // --- per-candidate counts (at most one row per candidate) merge
+    // --- back on the driver in sequence order, 0 where none is nearest
+    val candDf = broadcast(candidates.zipWithIndex
+      .map { case ((cv, cn2), i) => (i.toLong, cv, cn2) }
+      .toDF("cand_id", "cv", "cn2"))
     // deterministic argmin: smallest d2, then smallest cand_id
     val weights = cp.crossJoin(candDf)
       .withColumn("d2c", d2(col("v"), col("n2"), col("cv"), col("cn2")))
@@ -161,11 +166,10 @@ object KMeans {
       .agg(min(struct(col("d2c"), col("cand_id"))).as("best"))
       .groupBy(col("best.cand_id").as("cand_id"))
       .agg(count(lit(1)).as("w"))
-    val weighted = candDf.join(weights, Seq("cand_id"), "left")
-      .na.fill(0L, Seq("w"))
-      .orderBy(col("cand_id"))
-      .collect().toSeq
-      .map(r => (r.getSeq[Long](1).toArray, r.getLong(2), r.getLong(3)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val weighted = candidates.zipWithIndex.map { case ((cv, cn2), i) =>
+      (cv, cn2, weights.getOrElse(i.toLong, 0L))
+    }
 
     val centers = weightedKMeansPlusPlus(weighted, k, seed)
 

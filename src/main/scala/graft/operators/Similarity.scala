@@ -284,7 +284,8 @@ object Similarity {
       s
     }
     cents.map { c =>
-      val raw = dot(vr.v, c.cv).toDouble / math.sqrt((vr.n2 * c.cn2).toDouble)
+      val raw = dot(vr.v, c.cv).toDouble /
+        math.sqrt(graft.functions.VectorKernels.normProduct(vr.n2, c.cn2))
       // mirror assignCos: zero-norm 0/0 -> -Infinity, not NaN
       val cos = if (raw.isNaN) Double.NegativeInfinity else raw
       (-cos, c.id)

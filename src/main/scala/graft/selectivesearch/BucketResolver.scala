@@ -1,7 +1,8 @@
 package graft.selectivesearch
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.DataUtils.ensureHasColumns
 
@@ -15,32 +16,32 @@ import graft.core.DataUtils.ensureHasColumns
   * stop at exactly `threshold`; emit the contiguous bucket prefix
   * 0..n-1 per shard.
   *
-  * Spark shape: `groupByKey(query).flatMapGroups` — one shuffle keyed
-  * by query, the greedy walk runs compiled per group (the reference
-  * does an interpreted `iterrows` loop), queries resolve in parallel
-  * across partitions. Per-query state is an Array[Int](numShards).
+  * Runs on the driver, like the reference's `iterrows` loop: the
+  * selection is one row per (query, shard, bucket) — broadcast-sized
+  * by contract, and the resolved frame's only consumer broadcasts it.
+  * The four input columns are collected (no job when the selection is
+  * a local relation, such as the loaders' frames; one collect
+  * otherwise), each query is walked with an Array[Int](numShards) of
+  * state, and the result is a local relation `(query, shard, bucket)`,
+  * all non-null, with `query` in the selection's own type.
   */
 object BucketResolver {
 
   def resolveBucketSelection(selection: DataFrame, threshold: Int): DataFrame = {
     ensureHasColumns(selection, Seq("query", "shard", "bucket", "rank"))
-    val spark = selection.sparkSession
-    import spark.implicits._
-    val ds = selection.select(
-      col("query").cast("long").as("query"),
-      col("shard").cast("int").as("shard"),
-      col("bucket").cast("int").as("bucket"),
-      col("rank").cast("int").as("rank")
-    ).as[(Long, Int, Int, Int)]
-    val resolved = ds.groupByKey(_._1).flatMapGroups { (query, rows) =>
+    val rows = selection.select(
+      col("query").cast("long"), col("shard").cast("int"),
+      col("bucket").cast("int"), col("rank").cast("int")
+    ).collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+    val out = new java.util.ArrayList[Row]()
+    rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (query, group) =>
       // pandas sorts by rank with a stable sort (input order breaks
       // ties); (shard, bucket) is the deterministic stand-in.
-      val sorted = rows.toArray.sortBy { case (_, shard, bucket, rank) => (rank, shard, bucket) }
+      val sorted = group.sortBy { case (_, shard, bucket, rank) => (rank, shard, bucket) }
       // The reference sizes per-query state from a GLOBAL max(shard)
-      // (reference :161); a shard the group never mentions has
-      // taken == 0 and emits nothing, so the group's own max is
-      // output-identical — and saves a full extra scan plus a driver
-      // round-trip for the scalar agg (it was the frame's second pass).
+      // (reference :161); a shard the query never mentions has
+      // taken == 0 and emits nothing, so the query's own max is
+      // output-identical.
       val numShards = sorted.iterator.map(_._2).max + 1
       val taken = new Array[Int](numShards)
       var total = 0
@@ -54,13 +55,15 @@ object BucketResolver {
         }
         i += 1
       }
-      for {
-        shard <- (0 until numShards).iterator
-        b <- 0 until taken(shard)
-      } yield (query, shard, b)
-    }.toDF("query", "shard", "bucket")
+      for (shard <- 0 until numShards; b <- 0 until taken(shard))
+        out.add(Row(query, shard, b))
+    }
+    val schema = StructType(Seq(StructField("query", LongType, nullable = false),
+      StructField("shard", IntegerType, nullable = false),
+      StructField("bucket", IntegerType, nullable = false)))
     // Preserve the caller's query dtype (fixtures use int, testdata long).
     val queryType = selection.schema("query").dataType
-    resolved.withColumn("query", col("query").cast(queryType))
+    selection.sparkSession.createDataFrame(out, schema)
+      .withColumn("query", col("query").cast(queryType))
   }
 }

@@ -7,17 +7,23 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
+import org.apache.spark.sql.graft.FileScanBridge
+
 import graft.core.DataUtils.ensureHasColumns
-import graft.core.{DataUtils, Schemas, StaticRange}
+import graft.core.{Schemas, StaticRange}
 
 /** Selective-search post-processing: shard/bucket selection, merging,
   * evaluation, and TREC export (reference: dataproc/selectivesearch.py).
   *
-  * Spark-first re-expression: every pipeline is a lazy DataFrame plan;
-  * the selection side of each join is tiny (|queries| x |shards|
-  * [x |buckets|]) and explicitly broadcast, so the big results side is
-  * never shuffled for a join. The only shuffles are per-query windows,
-  * aggregations, and explicit final sorts.
+  * Spark-first re-expression: every results pipeline is a lazy
+  * DataFrame plan; the selection side of each join is tiny (|queries|
+  * x |shards| [x |buckets|]) and explicitly broadcast, so the big
+  * results side is never shuffled for a join. The selection frames
+  * themselves are built on the driver — the loaders read and rank the
+  * scores file there, and the greedy bucket resolution runs there — as
+  * local relations, so the selection side runs no job of its own. The
+  * only shuffles are per-query windows, aggregations, and explicit
+  * final sorts.
   *
   * Row-order semantics: pandas breaks ties by input row order
   * (`rank(method='first')`, stable sorts). Spark has no stable row
@@ -386,55 +392,132 @@ object SelectiveSearch {
     * and unions them (reference: dataproc/selectivesearch.py:96-119).
     * Multi-path scan IS the union in Spark; the documented contract is
     * enforced by reading with an explicit schema.
+    *
+    * The files are listed on the driver at call time
+    * ([[org.apache.spark.sql.graft.FileScanBridge]]): no listing job
+    * at any shard count, and the scan is the one
+    * `spark.read.schema(..).parquet(..)` plans. A missing shard file
+    * fails here, naming its path.
     */
   def loadShardResults(spark: SparkSession, basename: String, nshards: Int,
       nbuckets: Int = 1): DataFrame = {
     val paths = (0 until nshards).map(s => s"$basename#$s.results-$nbuckets")
-    spark.read.schema(Schemas.resultsSchema).parquet(paths: _*)
+    FileScanBridge.parquetFiles(spark, paths, Schemas.resultsSchema)
   }
 
   /** Loads shard scores for the given queries
-    * (reference: dataproc/selectivesearch.py:76-83).
+    * (reference: dataproc/selectivesearch.py:76-83): one
+    * `(query, shard, shard_score, rank)` row per query and shard, all
+    * columns non-null, `query`/`shard`/`rank` int.
     *
     * The scores CSV carries no keys — the reference binds it to the
-    * (query x shard) cartesian frame by row position. Here both sides
-    * get an explicit position: the cartesian side arithmetically
-    * (`pos = qIdx * nshards + shard`), the CSV side by line number
-    * (single-partition text read, stable order), then an equi-join on
-    * position replaces the fragile positional bind (SURVEY.md §7
-    * hard-part 1).
+    * (query x shard) cartesian frame by row position. Line `i` binds
+    * to query `queries(i / nshards)` and shard `i % nshards`
+    * (SURVEY.md §7 hard-part 1), with the inner-join semantics of a
+    * position equi-join: a short file leaves the unbound positions
+    * without rows, and lines past the last position are ignored. A
+    * query listed twice binds at its last position and is emitted
+    * once per listing. `rank` is 0-based per query by `shard_score`
+    * descending under Spark's double ordering (NaN largest, -0.0 equal
+    * to 0.0), ties by shard ascending — pandas' `rank(method='first')`
+    * order.
+    *
+    * The scores file is read when this is called, on the driver,
+    * through the Hadoop `FileSystem` of its path (decompressed when a
+    * codec matches its name, as `textFile` does), and the result is a
+    * local relation: no Spark job builds it, and every consumer
+    * broadcasts it. It is |queries| x nshards rows — broadcast-sized
+    * by contract. A non-numeric line, or a query id outside the int
+    * range, fails the call.
     */
   def loadShardSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       shardScoresPath: String): DataFrame =
     loadSelection(spark, queries, nshards, None, shardScoresPath)
 
-  /** Bucket-level variant (reference: dataproc/selectivesearch.py:85-93). */
+  /** Bucket-level variant (reference: dataproc/selectivesearch.py:85-93):
+    * `(query, shard, bucket, shard_score, rank)`, line `i` bound to
+    * query `queries(i / (nshards * nbuckets))`, shard
+    * `(i / nbuckets) % nshards` and bucket `i % nbuckets`, ties ranked
+    * by (shard, bucket) ascending. Otherwise as [[loadShardSelection]].
+    */
   def loadBucketSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       nbuckets: Int, shardScoresPath: String): DataFrame =
     loadSelection(spark, queries, nshards, Some(nbuckets), shardScoresPath)
 
   private def loadSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       nbuckets: Option[Int], shardScoresPath: String): DataFrame = {
-    import spark.implicits._
-    val ranges = Seq(queries, (0L until nshards.toLong)) ++
-      nbuckets.map(nb => (0L until nb.toLong)).toSeq
-    val names = Seq("query", "shard") ++ nbuckets.map(_ => "bucket").toSeq
-    val cart = DataUtils.cartesianWithPos(spark, ranges, names)
-    // Single-partition line read keeps file order; zipWithIndex gives
-    // the line number. The scores file is (queries x shards x buckets)
-    // lines — tiny relative to results, fine on one partition.
-    val scores = spark.sparkContext.textFile(shardScoresPath, 1)
-      .zipWithIndex()
-      .map { case (line, idx) => (idx, line.trim.toDouble) }
-      .toDF("pos", "shard_score")
-    val bound = cart.join(scores, Seq("pos"), "inner").drop("pos")
-    // pandas rank(method='first', desc) ties by input (= cartesian)
-    // order -> tiebreak by (shard[, bucket]) ascending, which equals
-    // position order within a query.
-    val tiebreak = (Seq("shard") ++ nbuckets.map(_ => "bucket").toSeq).map(col(_).asc)
-    val w = Window.partitionBy(col("query"))
-      .orderBy(col("shard_score").desc +: tiebreak: _*)
-    bound.withColumn("rank", (row_number().over(w) - 1).cast("int"))
+    queries.foreach(q => require(q.isValidInt,
+      s"query id $q is outside the int range of the selection's query column"))
+    val scores = readScores(spark, shardScoresPath)
+    val ns = math.max(nshards, 0)
+    val nb = math.max(nbuckets.getOrElse(1), 0)
+    val perQuery = ns.toLong * nb
+    // a query listed twice binds at its last position
+    val lastIndex = queries.zipWithIndex.toMap
+    val listings = queries.groupBy(identity).view.mapValues(_.size).toMap
+    // (shard, bucket, score) per query, in the window's order: score
+    // descending as Spark compares doubles, then (shard, bucket)
+    val windowOrder: Ordering[(Int, Int, Double)] = (a, b) => {
+      val c = if (a._3 == b._3) 0 else java.lang.Double.compare(b._3, a._3)
+      if (c != 0) c
+      else if (a._1 != b._1) Integer.compare(a._1, b._1)
+      else Integer.compare(a._2, b._2)
+    }
+    val rows = new java.util.ArrayList[Row]()
+    queries.distinct.foreach { q =>
+      val base = lastIndex(q) * perQuery
+      val units = for {
+        s <- 0 until ns
+        b <- 0 until nb
+        pos = base + s.toLong * nb + b
+        if pos < scores.length
+      } yield (s, b, scores(pos.toInt))
+      Seq.fill(listings(q))(units).flatten.sorted(windowOrder).zipWithIndex
+        .foreach { case ((s, b, score), rank) =>
+          rows.add(Row.fromSeq(Seq[Any](q.toInt, s) ++ nbuckets.map(_ => b) ++
+            Seq[Any](score, rank)))
+        }
+    }
+    val schema = StructType(
+      Seq(StructField("query", IntegerType, nullable = false),
+        StructField("shard", IntegerType, nullable = false)) ++
+      nbuckets.map(_ => StructField("bucket", IntegerType, nullable = false)) ++
+      Seq(StructField("shard_score", DoubleType, nullable = false),
+        StructField("rank", IntegerType, nullable = false)))
+    spark.createDataFrame(rows, schema)
+  }
+
+  /** One double per line of a headerless scores file, as
+    * `textFile(path).map(_.trim.toDouble)` reads it: lines end at LF,
+    * CR or CRLF, a leading UTF-8 byte-order mark is skipped, and a
+    * compressed file is decompressed by the codec its name selects.
+    */
+  private def readScores(spark: SparkSession, path: String): Array[Double] = {
+    import java.io.{BufferedReader, InputStreamReader}
+    import java.nio.charset.StandardCharsets
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.io.compress.CompressionCodecFactory
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val codec = new CompressionCodecFactory(conf).getCodec(p)
+    val in = if (codec == null) raw else codec.createInputStream(raw)
+    val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try {
+      val out = scala.collection.mutable.ArrayBuilder.make[Double]
+      var line = reader.readLine()
+      if (line != null && line.startsWith("\uFEFF")) line = line.substring(1)
+      var n = 0
+      while (line != null) {
+        n += 1
+        out += (try java.lang.Double.parseDouble(line.trim) catch {
+          case e: NumberFormatException => throw new IllegalArgumentException(
+            s"$path line $n is not a number: '$line'", e)
+        })
+        line = reader.readLine()
+      }
+      out.result()
+    } finally reader.close()
   }
 
   /** Writes `results` as a `trec_eval` run file: six tab-separated

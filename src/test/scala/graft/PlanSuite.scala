@@ -324,6 +324,53 @@ class PlanSuite extends SparkSuite {
       s"exchange between the window and the walk: ${root.toString.take(3000)}")
   }
 
+  test("select family and evaluate broadcast loader selections straight from a LocalTableScan") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.col
+    import graft.selectivesearch.SelectiveSearch
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-sel").toString
+    val (nq, ns, nb) = (3, 4, 2)
+    def scores(name: String, n: Int) = {
+      val path = s"$dir/$name"
+      java.nio.file.Files.write(java.nio.file.Paths.get(path),
+        (0 until n).map(i => ((i * 37) % 11).toString).mkString("\n").getBytes)
+      path
+    }
+    val queries = (0L until nq.toLong)
+    val shardSel = SelectiveSearch.loadShardSelection(spark, queries, ns, scores("s.csv", nq * ns))
+    val bucketSel = SelectiveSearch.loadBucketSelection(spark, queries, ns, nb,
+      scores("b.csv", nq * ns * nb))
+    (for (q <- 0 until nq; s <- 0 until ns; b <- 0 until nb; d <- 0 until 3)
+      yield (q, s, b, (q * 7 + s * 5 + d) % 13 * 1.0, q * 1000L + s * 100 + b * 10 + d, d % 2))
+      .toDF("query", "shard", "bucket", "score", "gdocid", "rel")
+      .write.mode("overwrite").parquet(s"$dir/results")
+    val results = spark.read.parquet(s"$dir/results")
+    val ranked = results.withColumn("global_rank", org.apache.spark.sql.functions.row_number()
+      .over(org.apache.spark.sql.expressions.Window.partitionBy(col("query"))
+        .orderBy(col("score").desc, col("gdocid").asc)))
+    val frames = Seq(
+      "select" -> SelectiveSearch.select(shardSel, results, 2, Some(nq)),
+      "selectBuckets" -> SelectiveSearch.selectBuckets(bucketSel, results, 3, Some(nq)),
+      "evaluate" -> SelectiveSearch.evaluate(shardSel, ranked,
+        Seq(SelectiveSearch.precisionAt(2)), ns),
+      "evaluate buckets" -> SelectiveSearch.evaluate(bucketSel, ranked,
+        Seq(SelectiveSearch.precisionAt(2)), ns, numBuckets = Some(nb)))
+    frames.foreach { case (name, df) =>
+      val root: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      val broadcasts = root.collect { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.nonEmpty, s"$name: ${root.toString.take(3000)}")
+      broadcasts.foreach(b => assert(b.child.isInstanceOf[LocalTableScanExec],
+        s"$name: broadcast over ${b.child.nodeName}: ${root.toString.take(3000)}"))
+      assert(df.collect().nonEmpty, name)
+    }
+  }
+
   test("sorted-first rows keep expensive projections ABOVE the final sort") {
     // a global orderBy's range-exchange sampling pass re-executes its
     // child, so map-only compute under the sort runs twice (SCALING.md

@@ -58,6 +58,57 @@ class PropertiesSuite extends SparkSuite {
     }
   }
 
+  test("randomized selection loaders == the distributed positional-join form") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    // the reference form, distributed: a cartesian frame with an
+    // arithmetic position, an equi-join to (line number, score), and
+    // a per-query window rank
+    def distributed(queries: Seq[Long], ns: Int, nb: Option[Int], path: String): DataFrame = {
+      val ranges = Seq(queries, 0L until ns.toLong) ++ nb.map(n => 0L until n.toLong).toSeq
+      val names = Seq("query", "shard") ++ nb.map(_ => "bucket").toSeq
+      val cart = graft.core.DataUtils.cartesianWithPos(spark, ranges, names)
+      val scores = spark.sparkContext.textFile(path, 1).zipWithIndex()
+        .map { case (line, idx) => (idx, line.trim.toDouble) }.toDF("pos", "shard_score")
+      val tiebreak = names.drop(1).map(col(_).asc)
+      cart.join(scores, Seq("pos"), "inner").drop("pos")
+        .withColumn("rank", (row_number().over(Window.partitionBy(col("query"))
+          .orderBy(col("shard_score").desc +: tiebreak: _*)) - 1).cast("int"))
+    }
+    // doubles by their bits: -0.0 and NaN compare as written
+    def canon(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case v => v.toString
+    }.mkString(",")).sorted
+    val dir = java.nio.file.Files.createTempDirectory("graft-loaders").toString
+    val rng = new scala.util.Random(17)
+    val values = Seq("0.5", "0.25", "0.0", "-0.0", "NaN", "1", "-2.5", "0.5")
+    (0 until 12).foreach { trial =>
+      val nq = 1 + rng.nextInt(4)
+      val queries: Seq[Long] = rng.nextInt(3) match {
+        case 0 => (0 until nq).map(_.toLong)
+        case 1 => rng.shuffle((0 until nq).map(q => q * 3L + 1))
+        case _ => (0 until nq).map(_ => rng.nextInt(3).toLong) // repeats
+      }
+      val ns = 1 + rng.nextInt(4)
+      val nb = if (rng.nextBoolean()) Some(1 + rng.nextInt(3)) else None
+      val positions = nq * ns * nb.getOrElse(1)
+      val lines = Seq.fill(math.max(0, positions + rng.nextInt(5) - 2))(
+        values(rng.nextInt(values.size)))
+      val path = s"$dir/scores$trial.csv"
+      java.nio.file.Files.write(java.nio.file.Paths.get(path),
+        lines.map(_ + Seq("\n", "\r\n")(rng.nextInt(2))).mkString.getBytes("UTF-8"))
+      val got = nb match {
+        case Some(b) => SelectiveSearch.loadBucketSelection(spark, queries, ns, b, path)
+        case None => SelectiveSearch.loadShardSelection(spark, queries, ns, path)
+      }
+      val want = distributed(queries, ns, nb, path)
+      val ctx = s"trial $trial: queries=$queries ns=$ns nb=$nb lines=${lines.size}"
+      assert(got.schema == want.schema, ctx)
+      assert(canon(got) == canon(want), ctx)
+    }
+  }
+
   test("resolveBucketSelection: cost <= threshold, contiguous prefixes") {
     for {
       threshold <- Seq(0, 1, 3, 7, 12)

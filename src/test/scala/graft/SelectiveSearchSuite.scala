@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.rand
 
@@ -99,6 +101,43 @@ class SelectiveSearchSuite extends SparkSuite {
     assertRowsEqual(resolved, Seq(
       Seq(0, 0, 0), Seq(0, 1, 0), Seq(0, 2, 0),
       Seq(1, 0, 0), Seq(1, 0, 1), Seq(1, 1, 0)))
+  }
+
+  test("resolveBucketSelection: a parquet-backed multi-partition input equals the local one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-resolve").toString
+    // longer budgets than the reference fixture, so several shards and
+    // queries interleave across the partitions
+    val sel = (0 until 6).flatMap(q => (0 until 4).flatMap(s => (0 until 3).map(b =>
+      (q.toLong, s, b, ((q * 7 + s * 5 + b * 3) % 12))))).toDF("query", "shard", "bucket", "rank")
+    sel.repartition(3).write.mode("overwrite").parquet(s"$dir/sel")
+    val onDisk = spark.read.parquet(s"$dir/sel")
+    assert(onDisk.rdd.getNumPartitions > 1)
+    val local = spark.createDataFrame(onDisk.collect().toSeq.asJava, onDisk.schema)
+    for (t <- Seq(1, 4, 7)) {
+      val a = BucketResolver.resolveBucketSelection(onDisk, t)
+      val b = BucketResolver.resolveBucketSelection(local, t)
+      assert(a.schema == b.schema)
+      assert(a.orderBy("query", "shard", "bucket").collect().toSeq ==
+        b.orderBy("query", "shard", "bucket").collect().toSeq)
+    }
+    // a local input resolves with no job; one collect otherwise
+    assert(jobsDuring(BucketResolver.resolveBucketSelection(local, 4))._2 == 0)
+    assert(jobsDuring(BucketResolver.resolveBucketSelection(onDisk, 4))._2 >= 1)
+  }
+
+  test("resolveBucketSelection: empty selection and threshold 0 give a typed empty frame") {
+    import org.apache.spark.sql.types._
+    def f(n: String, t: DataType) = StructField(n, t, nullable = false)
+    val empty = bucketSelection.filter($"rank" < 0)
+    for ((in, t) <- Seq((empty, 3), (bucketSelection, 0))) {
+      val got = BucketResolver.resolveBucketSelection(in, t)
+      assert(got.collect().isEmpty)
+      assert(got.schema == StructType(Seq(f("query", IntegerType), f("shard", IntegerType),
+        f("bucket", IntegerType))))
+    }
+    val longIds = BucketResolver.resolveBucketSelection(
+      bucketSelection.withColumn("query", $"query".cast("long")), 0)
+    assert(longIds.schema("query").dataType == LongType)
   }
 
   test("selectWithDecay on empty results fails loudly, not silently empty") {

@@ -375,6 +375,58 @@ class SimilaritySuite extends SparkSuite {
     assert(driver == dist2)
   }
 
+  test("kmeans distributed loop plans every hint it gives (no hint-error warning)") {
+    import graft.operators.KMeans
+    val df = (0 until 40)
+      .map(i => (i.toLong, Seq((i % 7).toFloat, (i % 5 - 2).toFloat, (i % 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cp = Similarity.prepared(df, "embedding", "vec_id")
+    val (cent, warnings) = hintWarningsDuring(
+      KMeans.kmeansCentroids(cp, 4, seed = 3L, driverMaxVectors = 0).collect())
+    assert(cent.length == 4)
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+  }
+
+  test("extreme-norm vectors (n2 * cn2 past 2^63) still find the nearest cell") {
+    import java.math.{BigDecimal => JBig, MathContext}
+    import graft.functions.{NearestCellsK, TwoLevelCellsK}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val rng = new scala.util.Random(20)
+    val dim = 64
+    def vec(): Array[Long] = Array.fill(dim)((rng.nextInt(1 << 21) - (1 << 20)).toLong)
+    def n2(v: Array[Long]): Long = v.map(x => x * x).sum
+    val cents = Array.fill(12)(vec())
+    val ids = cents.indices.map(_.toLong).toArray
+    val norms = cents.map(n2)
+    val nearest = NearestCellsK(Literal(0L), Literal(0L), ids, cents, norms, take = 1)
+    // one super-cell holding every centroid: the fine ranking decides
+    val twoLevel = TwoLevelCellsK(Literal(0L), Literal(0L), Array(0L), Array(cents(0)),
+      Array(norms(0)), 1, ids, cents, norms, Array.fill(cents.length)(0L), take = 1)
+    // exact cosine: dot / sqrt(n2 * cn2) over unbounded integers
+    def exactCos(v: Array[Long], j: Int): JBig = {
+      val dot = v.zip(cents(j)).map { case (a, b) => BigInt(a) * BigInt(b) }.sum
+      val den = (BigInt(n2(v)) * BigInt(norms(j))).bigInteger
+      new JBig(dot.bigInteger).divide(new JBig(den).sqrt(MathContext.DECIMAL128),
+        MathContext.DECIMAL128)
+    }
+    (0 until 30).foreach { t =>
+      // a perturbed copy of one centroid, so the nearest cell is clear
+      val base = cents(t % cents.length)
+      val v = base.map(x => x + rng.nextInt(1 << 18) - (1 << 17))
+      assert(Math.multiplyHigh(n2(v), norms(0)) != 0, "inputs must pass 2^63")
+      val want = cents.indices.maxBy(j => exactCos(v, j)).toLong
+      val data = ArrayData.toArrayData(v)
+      assert(nearest.kernel(data, n2(v)).getLong(0) == want, s"nearest_cells, query $t")
+      assert(twoLevel.kernel(data, n2(v)).getLong(0) == want, s"two_level_cells, query $t")
+    }
+    // inside the long range the denominator is the exact product,
+    // rounded once: bit-identical to cast(n2 * cn2 as double)
+    Seq((3L, 5L), (1L << 31, (1L << 31) - 1), (Long.MaxValue, 1L), (-7L, 9L)).foreach {
+      case (a, b) => assert(graft.functions.VectorKernels.normProduct(a, b) == (a * b).toDouble)
+    }
+  }
+
   test("ivf assignment puts every corpus vector in exactly one cell") {
     val queries = corpus.filter($"vec_id" === 0L)
     // nprobe = all cells => every non-query vector scored exactly once

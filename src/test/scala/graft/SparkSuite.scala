@@ -31,6 +31,53 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs that started while
+    * it ran. The listener bus is drained on both sides, so jobs of
+    * earlier work are not counted and this call's jobs are.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (out, started.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and every warning the optimizer's hint-error
+    * logger (the analyzer's `HintErrorLogger`) wrote while it ran ("Hint (strategy=broadcast) is not
+    * supported ...": a hint the planner dropped).
+    */
+  def hintWarningsDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      val out = body
+      (out, seen.toArray.toSeq.map(_.toString))
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   private def norm(v: Any): Any = v match {
     case n: java.lang.Number => BigDecimal(n.doubleValue())
     case other => other
