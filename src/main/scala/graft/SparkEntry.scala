@@ -98,7 +98,9 @@ object SparkEntry {
       else Nil)
     val r = docs.agg(aggs.head, aggs.tail: _*).head()
     val frac = Dedup.dupFraction(r.getLong(0), r.getLong(1))
-    val gate = if (frac > Dedup.DefaultDupGate) -1.0 else 1.0
+    val gate =
+      if (graft.operators.DupCollapse.worthIt(Dedup.DefaultDupGate)(frac)) -1.0
+      else 1.0
     val bounds =
       if (!integralId || r.isNullAt(2) || r.getLong(2) < 0) None
       else Some((r.getLong(2), r.getLong(3)))

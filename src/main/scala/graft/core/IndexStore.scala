@@ -100,8 +100,26 @@ object IndexStore {
       // rebalance exchange to the advisory partition size, so a small
       // index writes ~1 file while a corpus-sized one still writes in
       // parallel at ~advisory-sized files; the exchange itself moves
-      // only the compact artifact, never the corpus.
-      build.hint("rebalance").write.mode("overwrite").parquet(data.getPath)
+      // only the compact artifact, never the corpus. Spark resolves the
+      // hint only under AQE (elsewhere it logs `Unrecognized hint` and
+      // writes one file per build partition), so an AQE-off session
+      // sizes the same exchange itself: the plan's own size estimate
+      // over the advisory size, capped at the session's parallelism.
+      // An exchange, not a coalesce: a coalesce would also narrow the
+      // build's last stage (e.g. a kernelFloor-spread encode) to that
+      // many tasks.
+      val built = build
+      val conf = built.sparkSession.sessionState.conf
+      val sized =
+        if (conf.adaptiveExecutionEnabled) built.hint("rebalance")
+        else {
+          val advisory = conf.getConf(
+            org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+          val bytes = built.queryExecution.optimizedPlan.stats.sizeInBytes
+          built.repartition(((bytes + advisory - 1) / advisory)
+            .min(spark.sparkContext.defaultParallelism).max(1).toInt)
+        }
+      sized.write.mode("overwrite").parquet(data.getPath)
       java.nio.file.Files.writeString(meta.toPath, fingerprint)
       readCache.remove((spark, data.getPath))
     }

@@ -25,6 +25,20 @@ import org.apache.spark.sql.DataFrame
   */
 object Parallelism {
 
+  /** Inputs smaller than this skip the floor unless the caller marks
+    * the kernel `heavy`: the round-robin exchange plus its stage wave
+    * cost ~0.2-0.3 s of fixed latency at local[32], and the r22
+    * same-window A/Bs measured the floor a NET LOSS on every
+    * sub-megabyte source for the native byte-walk kernels
+    * (lm 1.54 → 0.96 s, dsir_weights 1.21 → 0.72, dup_spans
+    * 0.90 → 0.60, ann_ivfpq_build 1.23 → 0.46 with the floor off) —
+    * those kernels finish a 10k-row pass in well under the exchange's
+    * own latency. Past a few MB of input the single-task pass
+    * dominates (the emb100 assignment is ~20 s one-core) and the
+    * floor pays for itself, exactly the regime it was built for.
+    */
+  private val MinFloorBytes: Long = 4L << 20
+
   /** `df` repartitioned to `defaultParallelism` iff its scan cannot
     * plausibly arrive in at least max(2, cores/2) splits; otherwise
     * `df` unchanged.
@@ -45,20 +59,6 @@ object Parallelism {
     * 100 TB scan's statistics dwarf the threshold and this stays a
     * pure plan-time branch with no physical planning at all.
     */
-  /** Inputs smaller than this skip the floor unless the caller marks
-    * the kernel `heavy`: the round-robin exchange plus its stage wave
-    * cost ~0.2-0.3 s of fixed latency at local[32], and the r22
-    * same-window A/Bs measured the floor a NET LOSS on every
-    * sub-megabyte source for the native byte-walk kernels
-    * (lm 1.54 → 0.96 s, dsir_weights 1.21 → 0.72, dup_spans
-    * 0.90 → 0.60, ann_ivfpq_build 1.23 → 0.46 with the floor off) —
-    * those kernels finish a 10k-row pass in well under the exchange's
-    * own latency. Past a few MB of input the single-task pass
-    * dominates (the emb100 assignment is ~20 s one-core) and the
-    * floor pays for itself, exactly the regime it was built for.
-    */
-  private val MinFloorBytes: Long = 4L << 20
-
   def kernelFloor(df: DataFrame, heavy: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
@@ -66,11 +66,20 @@ object Parallelism {
     val conf = spark.sessionState.conf
     val maxPart = conf.filesMaxPartitionBytes
     val openCost = conf.filesOpenCostInBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (!heavy && bytes < MinFloorBytes) return df
-    val maxSplit = BigInt(math.min(maxPart,
-      math.max(openCost, (bytes / cores).min(Long.MaxValue).toLong)))
-    val splits = (bytes + maxSplit - 1) / maxSplit
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
+    // an RDD-backed leaf reports the `spark.sql.defaultSizeInBytes`
+    // sentinel, not a size, which would read as a wide input and leave
+    // a one-split kernel pass on one task: its real split count decides
+    val splits =
+      if (plan.collectLeaves().exists(_.stats.sizeInBytes >= conf.defaultSizeInBytes))
+        BigInt(df.rdd.getNumPartitions)
+      else {
+        if (!heavy && bytes < MinFloorBytes) return df
+        val maxSplit = BigInt(math.min(maxPart,
+          math.max(openCost, (bytes / cores).min(Long.MaxValue).toLong)))
+        (bytes + maxSplit - 1) / maxSplit
+      }
     if (splits < math.max(2, cores / 2)) df.repartition(cores) else df
   }
 }

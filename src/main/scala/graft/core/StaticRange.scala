@@ -39,27 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object StaticRange {
 
-  /** `df.orderBy(sortCols)` with the sampling job replaced by a
-    * bounds PROBE when the leading sort key is a non-negative
-    * integral id: min/max come from one driver job over `boundsSrc`
-    * — typically the SOURCE table, whose column-pruned id scan is
-    * trivial next to re-executing `df`'s pipeline (the reason
-    * vocab_encode adopted this shape, r13) — and each row routes to
-    * partition id/ceil-width directly. `df`'s leading sort key must
-    * be drawn from `boundsSrc`'s `idCol` domain (a subset is fine:
-    * partitions just run lighter). Non-integral or negative domains
-    * fall back to the sampling sort. Sparse or skewed ids only
-    * unbalance the final single-stage sort, never break its total
-    * order.
-    */
-  /** `partsMultiplier` scales the partition count above
-    * defaultParallelism: rows whose mass per leading-key value is
-    * SKEWED (the pair lists: id_a is the least member of each pair,
-    * so mass decays linearly across the id range) keep a ~2x
-    * straggler at 1x, while finer partitions let the scheduler pack
-    * the imbalance — the r18 100x pair corpus measured 14.0 s at 1x
-    * vs 10.1 s at 8x (sampling orderBy: 19.7 s).
-    */
   /** Whether a column's type may take the dense-id bounds path: the
     * ONE definition of the guard, shared by [[denseIdSort]] and every
     * FUSED probe that computes bounds on its behalf (the SparkEntry
@@ -77,6 +56,27 @@ object StaticRange {
       case _ => false
     }
 
+  /** `df.orderBy(sortCols)` with the sampling job replaced by a
+    * bounds PROBE when the leading sort key is a non-negative
+    * integral id: min/max come from one driver job over `boundsSrc`
+    * — typically the SOURCE table, whose column-pruned id scan is
+    * trivial next to re-executing `df`'s pipeline (the reason
+    * vocab_encode adopted this shape, r13) — and each row routes to
+    * partition id/ceil-width directly. `df`'s leading sort key must
+    * be drawn from `boundsSrc`'s `idCol` domain (a subset is fine:
+    * partitions just run lighter). Non-integral or negative domains
+    * fall back to the sampling sort. Sparse or skewed ids only
+    * unbalance the final single-stage sort, never break its total
+    * order.
+    *
+    * `partsMultiplier` scales the partition count above
+    * defaultParallelism: rows whose mass per leading-key value is
+    * SKEWED (the pair lists: id_a is the least member of each pair,
+    * so mass decays linearly across the id range) keep a ~2x
+    * straggler at 1x, while finer partitions let the scheduler pack
+    * the imbalance — the r18 100x pair corpus measured 14.0 s at 1x
+    * vs 10.1 s at 8x (sampling orderBy: 19.7 s).
+    */
   def denseIdSort(df: DataFrame, boundsSrc: DataFrame, idCol: String,
       sortCols: Seq[Column], partsMultiplier: Int = 1): DataFrame = {
     val integralId = integralIdType(boundsSrc.schema(idCol).dataType)

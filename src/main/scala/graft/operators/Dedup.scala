@@ -81,18 +81,6 @@ object Dedup {
     (r.getLong(0), dupFraction(r.getLong(1), r.getLong(2)))
   }
 
-  /** Gate shared by the collapse forms: collapse iff the corpus'
-    * duplicate-mass fraction exceeds `dupGate`. The endpoints skip
-    * the probe job entirely — `dupGate < 0` forces collapse and
-    * `dupGate >= 1` forces the direct form without touching the data
-    * (the suite pins both paths output-identical through these).
-    */
-  private[graft] def collapseWorthIt(docs: DataFrame, textCol: String,
-      dupGate: Double): Boolean =
-    if (dupGate < 0) true
-    else if (dupGate >= 1) false
-    else duplicateMassFraction(docs, textCol) > dupGate
-
   /** Exact duplicate clustering by full-content hash: every doc mapped
     * to (fingerprint, cluster keeper = min id, cluster size, is_dup).
     * One shuffle (window over fp).
@@ -187,17 +175,6 @@ object Dedup {
       .join(signed.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
   }
 
-  /** Candidate near-duplicate pairs via MinHash + LSH banding, with
-    * the estimated Jaccard (fraction of agreeing signature rows).
-    * Pipeline: per-row signature -> explode band keys ->
-    * [[bandedCandidatePairs]] -> score.
-    *
-    * Cache lifecycle: the (id, sig) projection is persisted
-    * MEMORY_AND_DISK because it is consumed three times (banding + two
-    * signature fetches), registered with [[graft.core.OpCaches]] —
-    * release after materializing via `OpCaches.release()` or
-    * `OpCaches.materializeAndRelease(result)`.
-    */
   /** Benchmark contamination check: documents sharing at least one
     * word n-gram with a benchmark/eval corpus, with the count of
     * distinct matched n-grams — the decontamination step a
@@ -318,25 +295,39 @@ object Dedup {
     val signed = minHashSignatures(tagged, textCol, idCol, n, numHashes)
       .join(tagged.select(col(idCol), col("__new")), Seq(idCol))
       .transform(graft.core.OpCaches.persistTracked)
-    val banded = signed.select(
-        col(idCol), col("__new"),
-        posexplode(lshBandKeys(col("sig"), bands, r)))
+    val banded = bandRows(signed, bands, r, col(idCol), col("__new"))
+    bandProbe(banded.filter(col("__new")), banded, signed, idCol, numHashes)
+  }
+
+  /** `signed`'s rows exploded to one row per LSH band: the `carry`
+    * columns plus (band_idx, band_key).
+    */
+  private def bandRows(signed: DataFrame, bands: Int, r: Int,
+      carry: Column*): DataFrame =
+    signed.select(carry :+ posexplode(lshBandKeys(col("sig"), bands, r)): _*)
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_key")
-    val pairs = banded.filter(col("__new"))
-      .select(col("band_idx"), col("band_key"), col(idCol).as("id_x"))
-      .join(banded.select(
+
+  /** The incremental band probe shared by the inline and stored
+    * forms: every `fresh` band row joined to the `all` band rows of
+    * its (band_idx, band_key) bucket, the pairs distinct'd as bare
+    * normalized (id_a < id_b), then the signatures of `sigs`
+    * (idCol, sig) joined back once per pair for the agreement
+    * estimate.
+    */
+  private def bandProbe(fresh: DataFrame, all: DataFrame, sigs: DataFrame,
+      idCol: String, numHashes: Int): DataFrame =
+    fresh.select(col("band_idx"), col("band_key"), col(idCol).as("id_x"))
+      .join(all.select(
         col("band_idx"), col("band_key"), col(idCol).as("id_y")),
         Seq("band_idx", "band_key"))
       .filter(col("id_x") =!= col("id_y"))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
       .distinct()
-    pairs
-      .join(signed.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(signed.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
-  }
 
   /** [[incrementalMinHashCandidates]] with exact duplicates contracted
     * across batch ∪ corpus before signing/banding — the incremental
@@ -370,61 +361,30 @@ object Dedup {
       corpus: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
       dupGate: Double = DefaultDupGate): DataFrame = {
-    val union = newDocs.select(col(idCol), col(textCol))
-      .union(corpus.select(col(idCol), col(textCol)))
-    if (!collapseWorthIt(union, textCol, dupGate))
-      return incrementalMinHashCandidates(newDocs, corpus, textCol, idCol,
-        n, numHashes, bands)
     val tagged = newDocs
       .select(col(idCol), col(textCol), lit(true).as("__new"))
       .union(corpus.select(col(idCol), col(textCol), lit(false).as("__new")))
+    if (!DupCollapse.worthIt(dupGate)(duplicateMassFraction(tagged, textCol)))
+      return incrementalMinHashCandidates(newDocs, corpus, textCol, idCol,
+        n, numHashes, bands)
     // one keyed pass over batch ∪ corpus; consumed three times below
     // (rep split, within-group expansion, cross-group expansion)
-    val groups = tagged
-      .filter(coalesce(
-        size(TextFunctions.wordShingles(col(textCol), n)) > 0, lit(false)))
-      .select(col(idCol), col("__new"), md5(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(min(col(idCol)).as("rep_id"),
-        sort_array(collect_list(struct(
-          col(idCol).as("id"), col("__new").as("nw")))).as("members"),
-        max(col("__new")).as("has_new"))
+    val groups = DupCollapse.contract(
+        tagged.filter(DupCollapse.shingled(textCol, n))
+          .select(col(idCol), col("__new"), DupCollapse.fp(textCol)),
+        Seq("fp"), idCol, ids = "members",
+        member = Some(struct(col(idCol).as("id"), col("__new").as("nw"))),
+        extra = Seq(max(col("__new")).as("has_new")))
       .transform(graft.core.OpCaches.persistTracked)
     // rep-level probe: has-new groups' reps are the "batch", the rest
     // the "corpus" — a rep pair appears iff ≥ 1 side has a new member,
     // exactly when the direct form emits ≥ 1 touching member pair
-    def repTexts(ids: DataFrame) = tagged
-      .join(ids, Seq(idCol), "left_semi")
-      .select(col(idCol), col(textCol))
-    val repPairs = incrementalMinHashCandidates(
-      repTexts(groups.filter(col("has_new"))
-        .select(col("rep_id").as(idCol))),
-      repTexts(groups.filter(!col("has_new"))
-        .select(col("rep_id").as(idCol))),
-      textCol, idCol, n, numHashes, bands)
-    // within-group: each unordered pair once via id order, touching
-    // the batch; identical signatures estimate exactly 1.0
-    val within = groups
-      .filter(col("has_new") && size(col("members")) >= 2)
-      .select(explode(col("members")).as("x"), col("members"))
-      .select(col("x"), explode(col("members")).as("y"))
-      .filter(col("x.id") < col("y.id") && (col("x.nw") || col("y.nw")))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        lit(1.0).as("est_jaccard"))
-    // cross-group: every member pair of a matched rep pair that
-    // touches the batch, at the reps' estimate; least/greatest
-    // restores (id_a < id_b) because group id ranges interleave
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("id_a"),
-        col("members").as("ms_a")), Seq("id_a"))
-      .join(groups.select(col("rep_id").as("id_b"),
-        col("members").as("ms_b")), Seq("id_b"))
-      .select(explode(col("ms_a")).as("x"), col("ms_b"), col("est_jaccard"))
-      .select(col("x"), explode(col("ms_b")).as("y"), col("est_jaccard"))
-      .filter(col("x.nw") || col("y.nw"))
-      .select(least(col("x.id"), col("y.id")).as("id_a"),
-        greatest(col("x.id"), col("y.id")).as("id_b"), col("est_jaccard"))
-    within.unionByName(cross)
+    def repTexts(g: DataFrame) =
+      DupCollapse.reps(tagged, g, idCol).select(col(idCol), col(textCol))
+    DupCollapse.touching(groups, incrementalMinHashCandidates(
+      repTexts(groups.filter(col("has_new"))),
+      repTexts(groups.filter(!col("has_new"))),
+      textCol, idCol, n, numHashes, bands))
   }
 
   /** [[minHashCandidates]] with exact duplicates contracted to one
@@ -454,46 +414,12 @@ object Dedup {
     */
   def minHashCandidatesCollapsed(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, dupGate: Double = DefaultDupGate): DataFrame = {
-    if (!collapseWorthIt(docs, textCol, dupGate))
-      return minHashCandidates(docs, textCol, idCol, n, numHashes, bands)
-    // one keyed corpus pass (md5 + shingle-presence), persisted for
-    // its three consumers below (rep ids, within-group expansion,
-    // cross-group expansion). Shingle-less docs never pair in the
-    // direct form, so they are dropped here rather than carried.
-    val groups = docs
-      .filter(coalesce(
-        size(TextFunctions.wordShingles(col(textCol), n)) > 0, lit(false)))
-      .select(col(idCol), md5(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"),
-        min(col(idCol)).as("rep_id"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val repDocs = docs.join(
-      groups.select(col("rep_id").as(idCol)), Seq(idCol), "left_semi")
-    val repPairs =
-      minHashCandidates(repDocs, textCol, idCol, n, numHashes, bands)
-    // within-group pairs: identical signatures agree everywhere
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("x"), col("ids"))
-      .select(col("x"), explode(col("ids")).as("y"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("id_a"), col("y").as("id_b"),
-        lit(1.0).as("est_jaccard"))
-    // cross-group: every member pair of a matched rep pair, same
-    // estimate; least/greatest restores (id_a < id_b) because group
-    // id ranges interleave
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("id_a"), col("ids").as("ids_a")),
-        Seq("id_a"))
-      .join(groups.select(col("rep_id").as("id_b"), col("ids").as("ids_b")),
-        Seq("id_b"))
-      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("est_jaccard"))
-      .select(col("x"), explode(col("ids_b")).as("y"), col("est_jaccard"))
-      .select(least(col("x"), col("y")).as("id_a"),
-        greatest(col("x"), col("y")).as("id_b"), col("est_jaccard"))
-    within.unionByName(cross)
-  }
+      bands: Int = 4, dupGate: Double = DefaultDupGate): DataFrame =
+    // shingle-less docs never pair in the direct form, so they are
+    // dropped from the contraction rather than carried
+    DupCollapse.textPairs(docs, DupCollapse.shingled(textCol, n), textCol,
+        idCol, dupGate, "est_jaccard", lit(1.0))(
+      minHashCandidates(_, textCol, idCol, n, numHashes, bands))
 
   /** The banded minhash signature index of `corpus` persisted through
     * the [[graft.core.IndexStore]]: (idCol, sig, band_idx, band_key),
@@ -520,41 +446,21 @@ object Dedup {
       graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
       graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      minHashSignatures(corpus, textCol, idCol, n, numHashes)
-        .select(col(idCol), col("sig"),
-          posexplode(lshBandKeys(col("sig"), bands, r)))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_key"))
+      bandRows(minHashSignatures(corpus, textCol, idCol, n, numHashes),
+        bands, r, col(idCol), col("sig")))
   }
 
-  /** The corpus' duplicate-mass fraction persisted as a tiny store
-    * entry — the serving-route stamp behind the prebuilt v2 collapse:
-    * computed ONCE at build time ([[duplicateMassFraction]], the same
-    * HLL probe the inline gate runs), then read back from column
-    * METADATA with zero jobs per serving call. Keyed by
-    * (textCol, idCol, variant, path) only — the fraction is
-    * independent of the banding knobs, so every knob combination over
-    * one corpus frame shares the entry.
+  /** The corpus' duplicate-mass fraction ([[duplicateMassFraction]],
+    * the same HLL probe the inline gate runs) stamped once at build
+    * time as the `mhroute-` store entry ([[DupCollapse.storedFraction]])
+    * — the serving-route stamp behind the prebuilt collapsed index,
+    * read back with zero jobs per serving call.
     */
   private[graft] def storedDupFraction(corpus: DataFrame,
       corpusPath: String, textCol: String, idCol: String,
-      variant: String, force: Boolean): Double = {
-    require(variant.nonEmpty,
-      "variant must name the corpus frame (store entries fingerprint the file only)")
-    val name = s"mhroute-$textCol-$idCol-$variant-v1-" +
-      graft.core.IndexStore.md5hex(corpusPath)
-    val df = graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force) {
-      val f = duplicateMassFraction(corpus, textCol)
-      graft.core.IndexMeta.tag(
-        corpus.sparkSession.range(1)
-          .select(lit(f).as("dup_fraction")),
-        "dup_fraction", "kind" -> "mhroute", "dupFraction" -> f)
-    }
-    graft.core.IndexMeta.get(df, "dup_fraction")
-      .flatMap(_.get("dupFraction")).map(_.toDouble)
-      .getOrElse(df.head().getDouble(0))
-  }
+      variant: String, force: Boolean): Double =
+    DupCollapse.storedFraction(corpus, corpusPath, "mhroute", textCol,
+      idCol, variant, force)(duplicateMassFraction(corpus, textCol))
 
   /** Exact-duplicate membership of the corpus persisted through the
     * store: one row per DISTINCT shingle-able content —
@@ -574,13 +480,8 @@ object Dedup {
       graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
       graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      corpus
-        .filter(coalesce(
-          size(TextFunctions.wordShingles(col(textCol), n)) > 0, lit(false)))
-        .select(col(idCol), md5(col(textCol)).as("fp"))
-        .groupBy(col("fp"))
-        .agg(min(col(idCol)).as("rep_id"),
-          sort_array(collect_list(col(idCol))).as("ids")))
+      DupCollapse.byText(corpus, DupCollapse.shingled(textCol, n), textCol,
+        idCol))
   }
 
   /** The banded signature index over DISTINCT corpus content only —
@@ -605,7 +506,7 @@ object Dedup {
     * ONCE — under `force` a second [[storedMinHashMembers]] call
     * rewrites the entry and deletes the files the first frame reads.
     */
-  private def storedMinHashRepIndexOver(corpus: DataFrame,
+  private[graft] def storedMinHashRepIndexOver(corpus: DataFrame,
       corpusPath: String, members: DataFrame, textCol: String,
       idCol: String, n: Int, numHashes: Int, bands: Int, variant: String,
       force: Boolean): DataFrame = {
@@ -614,14 +515,8 @@ object Dedup {
       graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
       graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      minHashSignatures(
-        corpus.join(members.select(col("rep_id").as(idCol)),
-          Seq(idCol), "left_semi"),
-        textCol, idCol, n, numHashes)
-        .select(col(idCol), col("sig"),
-          posexplode(lshBandKeys(col("sig"), bands, r)))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_key"))
+      bandRows(minHashSignatures(DupCollapse.reps(corpus, members, idCol),
+        textCol, idCol, n, numHashes), bands, r, col(idCol), col("sig")))
   }
 
   /** [[incrementalMinHashCandidates]] served from the stored band
@@ -642,8 +537,9 @@ object Dedup {
     * fraction is stamped once at build time ([[storedDupFraction]])
     * and read back with zero jobs, so duplicate-light serving keeps
     * exactly the direct path and its floor. Endpoints skip the route
-    * entry: `dupGate < 0` forces the collapsed index, `>= 1` the raw
-    * one (how the suites pin both serving paths output-identical).
+    * entry ([[DupCollapse.worthIt]]): a negative gate forces the
+    * collapsed index, one of 1 or more the raw one (how the suites pin
+    * both serving paths output-identical).
     */
   def incrementalMinHashCandidatesPrebuilt(corpus: DataFrame,
       corpusPath: String, newDocs: DataFrame, textCol: String = "text",
@@ -652,12 +548,8 @@ object Dedup {
       force: Boolean = false,
       dupGate: Double = DefaultDupGate): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val collapsed =
-      if (dupGate < 0) true
-      else if (dupGate >= 1) false
-      else storedDupFraction(corpus, corpusPath, textCol, idCol,
-        variant, force) > dupGate
-    if (collapsed)
+    if (DupCollapse.worthIt(dupGate)(storedDupFraction(corpus, corpusPath,
+        textCol, idCol, variant, force)))
       return incrementalMinHashCandidatesPrebuiltCollapsed(corpus,
         corpusPath, newDocs, textCol, idCol, n, numHashes, bands,
         variant, force)
@@ -666,31 +558,16 @@ object Dedup {
       n, numHashes, bands, variant, force)
     val batchSigned = minHashSignatures(newDocs, textCol, idCol, n, numHashes)
       .transform(graft.core.OpCaches.persistTracked)
-    val batchBanded = batchSigned
-      .select(col(idCol), posexplode(lshBandKeys(col("sig"), bands, r)))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
+    val batchBanded = bandRows(batchSigned, bands, r, col(idCol))
       .select(col("band_idx"), col("band_key"), col(idCol))
-    val allBanded = batchBanded
-      .union(index.select(col("band_idx"), col("band_key"), col(idCol)))
-    val pairs = batchBanded
-      .select(col("band_idx"), col("band_key"), col(idCol).as("id_x"))
-      .join(allBanded.select(
-        col("band_idx"), col("band_key"), col(idCol).as("id_y")),
-        Seq("band_idx", "band_key"))
-      .filter(col("id_x") =!= col("id_y"))
-      .select(least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-      .distinct()
     // candidate ids are batch-bounded, so only they pass through the
     // index-side signature dedup (duplicate rows of a doc carry an
     // identical sig — first() is content-deterministic)
-    val sigs = batchSigned.select(col(idCol), col("sig"))
-      .union(index.groupBy(col(idCol)).agg(first(col("sig")).as("sig")))
-    pairs
-      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
+    bandProbe(batchBanded,
+      batchBanded.union(index.select(col("band_idx"), col("band_key"), col(idCol))),
+      batchSigned.select(col(idCol), col("sig"))
+        .union(index.groupBy(col(idCol)).agg(first(col("sig")).as("sig"))),
+      idCol, numHashes)
   }
 
   /** The collapsed-index serving path behind
@@ -720,13 +597,8 @@ object Dedup {
     val repIdx = storedMinHashRepIndexOver(corpus, corpusPath, members,
       textCol, idCol, n, numHashes, bands, variant, force)
     // batch contraction by content — batch-bounded, one keyed pass
-    val bg = newDocs
-      .filter(coalesce(
-        size(TextFunctions.wordShingles(col(textCol), n)) > 0, lit(false)))
-      .select(col(idCol), md5(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(min(col(idCol)).as("b_rep"),
-        sort_array(collect_list(col(idCol))).as("b_ids"))
+    val bg = DupCollapse.byText(newDocs, DupCollapse.shingled(textCol, n),
+      textCol, idCol, "b_rep", "b_ids")
     // merge with the stored corpus groups on content; typed empty
     // arrays (cast from the stored/batch element type) absorb the
     // full-outer nulls — concat(null, x) is null, not x
@@ -763,51 +635,29 @@ object Dedup {
     val bandCols = Seq(col(idCol), col("band_idx"), col("band_key"))
     val newBanded = repIdx.join(matchedNewReps, Seq(idCol), "left_semi")
       .select(bandCols: _*)
-      .union(batchRepSigned
-        .select(col(idCol), posexplode(lshBandKeys(col("sig"), bands, r)))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_key")
-        .select(bandCols: _*))
+      .union(bandRows(batchRepSigned, bands, r, col(idCol)).select(bandCols: _*))
     val oldBanded = repIdx.join(corpusOnlyReps, Seq(idCol), "left_semi")
       .select(bandCols: _*)
-    val repPairs0 = newBanded
-      .select(col("band_idx"), col("band_key"), col(idCol).as("id_x"))
-      .join(newBanded.union(oldBanded)
-        .select(col("band_idx"), col("band_key"), col(idCol).as("id_y")),
-        Seq("band_idx", "band_key"))
-      .filter(col("id_x") =!= col("id_y"))
-      .select(least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-      .distinct()
     // rep signatures: stored (dedup the band-duplicated rows — every
     // row of a rep carries an identical sig) ∪ batch-only
     val sigs = repIdx.groupBy(col(idCol)).agg(first(col("sig")).as("sig"))
       .union(batchRepSigned.select(col(idCol), col("sig")))
-    val repPairs = repPairs0
-      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
     // expansion — identical shape to the inline collapsed form
-    val within = merged
-      .filter(col("has_new") && size(col("members")) >= 2)
-      .select(explode(col("members")).as("x"), col("members"))
-      .select(col("x"), explode(col("members")).as("y"))
-      .filter(col("x.id") < col("y.id") && (col("x.nw") || col("y.nw")))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        lit(1.0).as("est_jaccard"))
-    val cross = repPairs
-      .join(merged.select(col("rep_id").as("id_a"),
-        col("members").as("ms_a")), Seq("id_a"))
-      .join(merged.select(col("rep_id").as("id_b"),
-        col("members").as("ms_b")), Seq("id_b"))
-      .select(explode(col("ms_a")).as("x"), col("ms_b"), col("est_jaccard"))
-      .select(col("x"), explode(col("ms_b")).as("y"), col("est_jaccard"))
-      .filter(col("x.nw") || col("y.nw"))
-      .select(least(col("x.id"), col("y.id")).as("id_a"),
-        greatest(col("x.id"), col("y.id")).as("id_b"), col("est_jaccard"))
-    within.unionByName(cross)
+    DupCollapse.touching(merged, bandProbe(newBanded,
+      newBanded.union(oldBanded), sigs, idCol, numHashes))
   }
 
+  /** Candidate near-duplicate pairs via MinHash + LSH banding, with
+    * the estimated Jaccard (fraction of agreeing signature rows).
+    * Pipeline: per-row signature -> explode band keys ->
+    * [[bandedCandidatePairs]] -> score.
+    *
+    * Cache lifecycle: the (id, sig) projection is persisted
+    * MEMORY_AND_DISK because it is consumed three times (banding + two
+    * signature fetches), registered with [[graft.core.OpCaches]] —
+    * release after materializing via `OpCaches.release()` or
+    * `OpCaches.materializeAndRelease(result)`.
+    */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, numHashes: Int = 16,
       bands: Int = 4): DataFrame = {
@@ -816,12 +666,8 @@ object Dedup {
     // docs with < n tokens have no shingles and drop out naturally
     val signed = minHashSignatures(docs, textCol, idCol, n, numHashes)
       .transform(graft.core.OpCaches.persistTracked)
-    val banded = signed.select(
-        col(idCol),
-        posexplode(lshBandKeys(col("sig"), bands, r)))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
-    bandedCandidatePairs(banded, signed, idCol, "band_key")
+    bandedCandidatePairs(bandRows(signed, bands, r, col(idCol)), signed,
+        idCol, "band_key")
       .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
   }
 
@@ -858,49 +704,30 @@ object Dedup {
     // (sf0.1, 8 dups: 0.96 → 1.57 s), so route them to the direct
     // composition — pinned output-identical to the collapsed path in
     // TextDedupSuite, so the gate changes cost only, never results
-    if (!collapseWorthIt(docs, textCol, dupGate)) {
-      val comp = Components.connectedComponents(
-        minHashCandidates(docs, textCol, idCol, n, numHashes, bands))
-      // join on the id PROJECTION, not the raw caller frame: a docs
-      // frame that already carries a `label` column (a common name in
-      // labeling pipelines) would make the coalesce reference
-      // ambiguous — and only on duplicate-light corpora, since the
-      // collapsed path below projects before joining
-      return docs.select(col(idCol))
-        .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-        .select(col(idCol).as("id"),
-          coalesce(col("label"), col(idCol)).as("label"))
-    }
-    // ONE keyed pass over the corpus text (md5 + shingle-presence),
-    // persisted because it is consumed three times below (group
-    // minima, rep expansion, singleton remainder) — unpersisted, the
-    // tokenize+hash pass would re-run per consumer, the exact
+    if (!DupCollapse.worthIt(dupGate)(duplicateMassFraction(docs, textCol)))
+      return DupCollapse.directLabels(docs, idCol,
+        Components.connectedComponents(
+          minHashCandidates(docs, textCol, idCol, n, numHashes, bands)))
+    // ONE keyed pass over the corpus text, contracted by (content,
+    // `can`) and persisted because it is consumed three times below
+    // (rep docs, rep expansion, singleton remainder) — unpersisted,
+    // the tokenize+hash pass would re-run per consumer, the exact
     // corpus-pass multiplication this operator exists to avoid.
     // `can` marks docs that can enter the pair graph at all (>= 1
     // word shingle); evaluated per doc, pre-collapse, so a group of
     // identical shingle-less docs stays one singleton PER DOC,
     // exactly as the uncollapsed composition leaves it.
-    val keyed = docs.select(col(idCol), md5(col(textCol)).as("fp"),
-        coalesce(size(TextFunctions.wordShingles(col(textCol), n)) > 0,
-          lit(false)).as("can"))
+    val groups = DupCollapse.contract(
+        docs.select(col(idCol), DupCollapse.fp(textCol),
+          DupCollapse.shingled(textCol, n).as("can")),
+        Seq("fp", "can"), idCol)
       .transform(graft.core.OpCaches.persistTracked)
     // one representative per distinct content: the group min id —
     // also the group's component-minimum contribution by construction
-    val reps = keyed.filter(col("can"))
-      .groupBy(col("fp")).agg(min(col(idCol)).as("rep_id"))
-    val repDocs = docs.join(
-      reps.select(col("rep_id").as(idCol)), Seq(idCol), "left_semi")
-    val comp = Components.connectedComponents(
-      minHashCandidates(repDocs, textCol, idCol, n, numHashes, bands))
-    // expand back: doc -> fp -> rep -> component label (rep_id when
-    // the rep paired with nothing), then the shingle-less remainder
-    // as self-labeled singletons via union (no second corpus join)
-    val viaRep = keyed.filter(col("can")).join(reps, Seq("fp"))
-      .join(comp.withColumnRenamed("id", "rep_id"), Seq("rep_id"), "left")
-      .select(col(idCol).as("id"),
-        coalesce(col("label"), col("rep_id")).as("label"))
-    viaRep.union(keyed.filter(!col("can"))
-      .select(col(idCol).as("id"), col(idCol).as("label")))
+    val comp = Components.connectedComponents(minHashCandidates(
+      DupCollapse.reps(docs, groups.filter(col("can")), idCol),
+      textCol, idCol, n, numHashes, bands))
+    DupCollapse.labels(groups, comp, col("can"))
   }
 
   /** Exact n-gram Jaccard for every pair sharing at least one shingle.
@@ -1041,6 +868,49 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
+  /** [[simHashPairs]] with exact duplicates contracted to one
+    * representative before banding and the FULL pair set reconstructed
+    * afterward — output-identical (suite-pinned), because the
+    * signature is a pure function of the text: identical texts share
+    * every band and every pairwise distance, so (x ∈ group A, y ∈
+    * group B) is a result pair iff (rep_A, rep_B) is, at the same
+    * hamming, and within-group pairs sit at hamming 0. Null-text docs
+    * are excluded from grouping — a null signature never band-matches,
+    * so they produce no pairs in either form.
+    *
+    * Why: the band self-join is quadratic PER BUCKET in duplicate
+    * copies — a g-copy group inflates its buckets' join products g²
+    * and the distinct that follows by the same factor, while the
+    * RESULT only needs the content-level pairs plus a streamed
+    * expansion (two chained explodes, output-proportional rows, no
+    * combination arrays). The r17 10× corpus (10 copies of every
+    * text): 26 s banded-over-copies vs the collapsed form's
+    * distinct-content banding. Same insight as [[neardupComponents]],
+    * with expansion instead of contraction because this operator's
+    * contract is the pair LIST, not the clusters.
+    *
+    * EAGERNESS: the default `dupGate` runs the duplicate-mass probe as
+    * a job at CALL time (this function was fully lazy before r18);
+    * batch-only as a result. A streaming or strictly-lazy caller
+    * passes an endpoint gate (negative: collapse / 1 or more: direct)
+    * to skip the probe. [[neardupComponents]] was already eager
+    * (component resolution runs driver-side actions), so its gate
+    * changes nothing there.
+    */
+  def simHashPairsCollapsed(docs: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id", maxHamming: Int = 3,
+      signature: Column => Column = graft.functions.HashFunctions.simhash64,
+      dupGate: Double = DefaultDupGate): DataFrame =
+    // duplicate-mass gate: duplicate-light corpora keep the direct
+    // banded form — the collapse pass + pair expansion cost ~2 stage
+    // waves for nothing when the band buckets carry no copy inflation
+    // (sf0.1, 8 dups: 0.58 → 1.17 s). Output-identical either way
+    // (suite-pinned), cost-only gate. A null signature never
+    // band-matches, so null-text docs stay out of the contraction.
+    DupCollapse.textPairs(docs, col(textCol).isNotNull, textCol, idCol,
+        dupGate, "hamming", lit(0))(
+      simHashPairs(_, textCol, idCol, maxHamming, signature))
+
   /** SimHash near-duplicate pairs: 64-bit signatures, candidates
     * blocked on 16-bit sub-bands (signatures within Hamming distance
     * k < 4 must agree on at least one of 4 bands), verified by exact
@@ -1081,80 +951,6 @@ object Dedup {
     * projection is registered with [[graft.core.OpCaches]] for
     * caller release.
     */
-  /** [[simHashPairs]] with exact duplicates contracted to one
-    * representative before banding and the FULL pair set reconstructed
-    * afterward — output-identical (suite-pinned), because the
-    * signature is a pure function of the text: identical texts share
-    * every band and every pairwise distance, so (x ∈ group A, y ∈
-    * group B) is a result pair iff (rep_A, rep_B) is, at the same
-    * hamming, and within-group pairs sit at hamming 0. Null-text docs
-    * are excluded from grouping — a null signature never band-matches,
-    * so they produce no pairs in either form.
-    *
-    * Why: the band self-join is quadratic PER BUCKET in duplicate
-    * copies — a g-copy group inflates its buckets' join products g²
-    * and the distinct that follows by the same factor, while the
-    * RESULT only needs the content-level pairs plus a streamed
-    * expansion (two chained explodes, output-proportional rows, no
-    * combination arrays). The r17 10× corpus (10 copies of every
-    * text): 26 s banded-over-copies vs the collapsed form's
-    * distinct-content banding. Same insight as [[neardupComponents]],
-    * with expansion instead of contraction because this operator's
-    * contract is the pair LIST, not the clusters.
-    *
-    * EAGERNESS: the default `dupGate` runs the duplicate-mass probe as
-    * a job at CALL time (this function was fully lazy before r18);
-    * batch-only as a result. A streaming or strictly-lazy caller
-    * passes an endpoint gate (`dupGate < 0` collapse / `>= 1` direct)
-    * to skip the probe. [[neardupComponents]] was already eager
-    * (component resolution runs driver-side actions), so its gate
-    * changes nothing there.
-    */
-  def simHashPairsCollapsed(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxHamming: Int = 3,
-      signature: Column => Column = graft.functions.HashFunctions.simhash64,
-      dupGate: Double = DefaultDupGate): DataFrame = {
-    // duplicate-mass gate (see collapseWorthIt): duplicate-light
-    // corpora keep the direct banded form — the collapse pass +
-    // pair expansion cost ~2 stage waves for nothing when the band
-    // buckets carry no copy inflation (sf0.1, 8 dups: 0.58 → 1.17 s).
-    // Output-identical either way (suite-pinned), cost-only gate.
-    if (!collapseWorthIt(docs, textCol, dupGate))
-      return simHashPairs(docs, textCol, idCol, maxHamming, signature)
-    // one keyed corpus pass; groups are consumed three times below
-    val groups = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), md5(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"),
-        min(col(idCol)).as("rep_id"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val repDocs = docs.join(
-      groups.select(col("rep_id").as(idCol)), Seq(idCol), "left_semi")
-    val repPairs = simHashPairs(repDocs, textCol, idCol, maxHamming, signature)
-    // within-group pairs stream through two generators (output-sized
-    // rows; a C(g,2) combination ARRAY would put g² structs in one
-    // row — the postings-form hazard documented above)
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("x"), col("ids"))
-      .select(col("x"), explode(col("ids")).as("y"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("id_a"), col("y").as("id_b"),
-        lit(0).cast("int").as("hamming"))
-    // cross-group: every member pair of a matched rep pair, same
-    // distance; least/greatest restores the (id_a < id_b) orientation
-    // because group id ranges interleave
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("id_a"), col("ids").as("ids_a")),
-        Seq("id_a"))
-      .join(groups.select(col("rep_id").as("id_b"), col("ids").as("ids_b")),
-        Seq("id_b"))
-      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("hamming"))
-      .select(col("x"), explode(col("ids_b")).as("y"), col("hamming"))
-      .select(least(col("x"), col("y")).as("id_a"),
-        greatest(col("x"), col("y")).as("id_b"), col("hamming"))
-    within.unionByName(cross)
-  }
-
   def simHashPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxHamming: Int = 3,
       signature: Column => Column = graft.functions.HashFunctions.simhash64): DataFrame = {

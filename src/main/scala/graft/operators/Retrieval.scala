@@ -143,8 +143,7 @@ object Retrieval {
     *         (score desc, term asc) per document, `topK` rows max.
     */
   def tfidfTopTerms(docs: DataFrame, topK: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastDf: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
     // tf comes from the ws_term_counts byte walk — a document-local
     // statistic computed IN-ROW and exploded, so the corpus-wide
@@ -175,11 +174,9 @@ object Retrieval {
     // broadcast SLOWER at toy scale (1.62 vs 1.21 s): it serializes
     // the tf materialization into a driver collect before the main
     // job, where the one-DAG shuffle plan overlaps them.
-    // `broadcastDf = true` forces the eager broadcast for callers
-    // that know their vocabulary and want the hint pinned.
     val dfCounts = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf
-      .join(if (broadcastDf) broadcast(dfCounts) else dfCounts, Seq("term"))
+      .join(dfCounts, Seq("term"))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"), col("tf"),
         (col("tf").cast("double") * col("n_docs").cast("double") /

@@ -771,7 +771,7 @@ object Similarity {
     *
     * EAGERNESS: the default `dupGate` probes duplicate mass at call
     * time, FUSED with the autoCentroids count into one driver job
-    * ([[gateAndCentroids]] — the gate keys on the collapse key `v`);
+    * ([[gatedScoredPairs]] — the gate keys on the collapse key `v`);
     * endpoint gates (< 0 / >= 1) skip the distinct estimate.
     */
   def ivfNearDupPairsCollapsed(corpus: DataFrame, threshold: Double,
@@ -780,116 +780,78 @@ object Similarity {
       centroids: Option[DataFrame] = None,
       superCells: Int = 0, superProbes: Int = 2,
       dupGate: Double = graft.operators.Dedup.DefaultDupGate): DataFrame = {
-    val cp = prepared(corpus, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val (cent, collapse) = gateAndCentroids(cp, numCentroids, idCol,
-      centroids, dupGate)
-    def multiOf(p: DataFrame) =
-      if (superCells > 0)
-        nearestCentroidsTwoLevel(p, cent, assignments, idCol,
-          superCells, superProbes)
-      else nearestCentroids(p, cent, assignments, idCol)
-    if (!collapse)
-      return ivfScoredPairsFrom(cp, multiOf(cp), minSharedCells, idCol)
-        .filter(thresholdPass(col("cosine"), threshold))
-    val (groups, repPairsAll) = collapsedRepPieces(cp, multiOf,
-      minSharedCells, idCol)
-    val repPairs = repPairsAll.filter(thresholdPass(col("cosine"), threshold))
-    // within-group: each unordered pair once via id order, at the
-    // rep's self-cosine; candidates in both forms iff the shared
-    // assignment count clears the vote
-    val within =
-      if (assignments >= minSharedCells)
-        groups.filter(size(col("ids")) >= 2)
-          .select(explode(col("ids")).as("x"), col("ids"),
-            cosineQ(dotQ(col("v"), col("v")), col("n2"), col("n2"))
-              .as("cosine"))
-          .select(col("x"), explode(col("ids")).as("y"), col("cosine"))
-          .filter(col("x") < col("y"))
-          .filter(thresholdPass(col("cosine"), threshold))
-          .select(col("x").as("id_a"), col("y").as("id_b"), col("cosine"))
-      else
-        // typed empty frame derived from `groups` so id_a/id_b carry
-        // idCol's actual type — literal 0L placeholders widened a
-        // non-long idCol to bigint through the unionByName below,
-        // diverging the collapsed form's schema from the direct one
-        groups.limit(0)
-          .select(col("rep_id").as("id_a"), col("rep_id").as("id_b"),
-            lit(0.0).as("cosine"))
-    // cross-group: every member pair of a matched rep pair, same
-    // cosine; least/greatest restores (id_a < id_b)
-    val cross = repPairs
-      .join(groups.select(col("rep_id").as("id_a"), col("ids").as("ids_a")),
-        Seq("id_a"))
-      .join(groups.select(col("rep_id").as("id_b"), col("ids").as("ids_b")),
-        Seq("id_b"))
-      .select(explode(col("ids_a")).as("x"), col("ids_b"), col("cosine"))
-      .select(col("x"), explode(col("ids_b")).as("y"), col("cosine"))
-      .select(least(col("x"), col("y")).as("id_a"),
-        greatest(col("x"), col("y")).as("id_b"), col("cosine"))
-    within.unionByName(cross)
+    val (_, groups, scored) = gatedScoredPairs(corpus, numCentroids,
+      assignments, minSharedCells, embCol, idCol, centroids, superCells,
+      superProbes, dupGate)
+    val pairs = scored.filter(thresholdPass(col("cosine"), threshold))
+    // within-group pairs sit at the rep's self-cosine and are candidates
+    // in both forms iff the shared assignment count clears the vote
+    groups.fold(pairs)(g => DupCollapse.undirected(g, pairs, "cosine",
+      selfCosine, lit(assignments >= minSharedCells) &&
+        thresholdPass(selfCosine, threshold)))
   }
 
-  /** Gate decision + centroid frame for the collapsed embedding
-    * forms, in at most ONE driver job: the direct path needs the
-    * corpus count for [[autoCentroids]] anyway, so the
-    * duplicate-mass probe rides the SAME aggregate (non-null vector
-    * count + approx distinct of the collapse key `v`) instead of
-    * paying its own job round — a separate probe job measured
-    * +0.43 s per registered row at sf0.1 (SemDedupFloorProbe).
-    * Endpoint gates skip the distinct estimate; an explicit
-    * numCentroids or caller centroid frame plus an endpoint gate
-    * runs no job at all. The gate keys on `v` — exactly what the
-    * collapse merges — rather than the raw embedding bytes.
+  /** The cosine of a group's prepared vector with itself — what the
+    * direct form scores for two identical vectors (NaN for zero-norm).
     */
-  private def gateAndCentroids(cp: DataFrame, numCentroids: Int,
-      idCol: String, centroids: Option[DataFrame],
-      dupGate: Double): (DataFrame, Boolean) = {
+  private def selfCosine: Column =
+    cosineQ(dotQ(col("v"), col("v")), col("n2"), col("n2"))
+
+  /** The IVF-blocked scored pairs (id_a < id_b, cosine; UNFILTERED by
+    * any threshold — callers apply their own) behind the undirected
+    * embedding forms, gated: `(cp, groups, scored)` with `cp` the
+    * persisted prepared corpus, and `groups` = its [[DupCollapse.contract]]
+    * on the prepared (v, n2) key (persisted; rep split and both
+    * expansions read it) when collapsing, in which case `scored` is
+    * over the representatives only.
+    *
+    * The centroid COUNT and SAMPLE always come from the FULL corpus,
+    * exactly as the direct form computes them, so the cell structure
+    * is the same on both routes. The gate decision and the
+    * [[autoCentroids]] count share at most ONE driver job: the
+    * duplicate-mass probe rides the count's aggregate (non-null
+    * vector count + approx distinct of the collapse key `v`) instead
+    * of paying its own job round — a separate probe job measured
+    * +0.43 s per registered row at sf0.1 (SemDedupFloorProbe). An
+    * explicit numCentroids or caller centroid frame plus an endpoint
+    * gate runs no job at all. The gate keys on `v` — exactly what
+    * the collapse merges — rather than the raw embedding bytes.
+    */
+  private def gatedScoredPairs(corpus: DataFrame, numCentroids: Int,
+      assignments: Int, minSharedCells: Int, embCol: String, idCol: String,
+      centroids: Option[DataFrame], superCells: Int, superProbes: Int,
+      dupGate: Double): (DataFrame, Option[DataFrame], DataFrame) = {
+    val cp = prepared(corpus, embCol, idCol)
+      .transform(graft.core.OpCaches.persistTracked)
     var n = -1L
-    val collapse =
-      if (dupGate < 0) true
-      else if (dupGate >= 1) false
-      else {
-        // the count rides lit(1) — ALL rows, not non-null `v`:
-        // autoCentroids must see the same corpus count on every route
-        // (the direct forms derive it from cp.count(), so a
-        // null-embedding row counting differently here would shift the
-        // centroid count and break the bit-identical cross-route
-        // contract), while the fraction keys on non-null `v` inside
-        // the shared probe — one definition for every gate, see
-        // [[graft.operators.Dedup.dupMassProbe]]
-        val (cnt, f) = graft.operators.Dedup.dupMassProbe(
-          cp, col("v"), lit(1))
-        n = cnt
-        f > dupGate
-      }
+    val collapse = DupCollapse.worthIt(dupGate) {
+      // the count rides lit(1) — ALL rows, not non-null `v`:
+      // autoCentroids must see the same corpus count on every route
+      // (the direct forms derive it from cp.count(), so a
+      // null-embedding row counting differently here would shift the
+      // centroid count and break the bit-identical cross-route
+      // contract), while the fraction keys on non-null `v` inside the
+      // shared probe — one definition for every gate, see
+      // [[graft.operators.Dedup.dupMassProbe]]
+      val (cnt, f) = graft.operators.Dedup.dupMassProbe(cp, col("v"), lit(1))
+      n = cnt
+      f
+    }
     val cent = centroids.getOrElse {
       val c = if (numCentroids > 0) numCentroids
         else autoCentroids(if (n >= 0) n else cp.count())
       centroidSample(cp, c, idCol)
     }
-    (cent, collapse)
-  }
-
-  /** Shared contraction pieces behind the collapsed embedding forms:
-    * `groups` = one row per DISTINCT prepared vector ((v, n2) key,
-    * rep_id = group min id, sorted member ids; persisted — consumed
-    * by rep split and both expansions) and the rep-level scored pairs
-    * (UNFILTERED by any threshold — callers apply their own).
-    * `multiOf` assigns cells against the caller's centroid frame,
-    * which must come from the FULL corpus so the cell structure
-    * matches the direct form exactly.
-    */
-  private def collapsedRepPieces(cp: DataFrame,
-      multiOf: DataFrame => DataFrame, minSharedCells: Int,
-      idCol: String): (DataFrame, DataFrame) = {
-    val groups = cp.groupBy(col("v"), col("n2"))
-      .agg(min(col(idCol)).as("rep_id"),
-        sort_array(collect_list(col(idCol))).as("ids"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val repCp = cp.join(groups.select(col("rep_id").as(idCol)),
-      Seq(idCol), "left_semi")
-    (groups, ivfScoredPairsFrom(repCp, multiOf(repCp), minSharedCells, idCol))
+    val groups =
+      if (!collapse) None
+      else Some(DupCollapse.contract(cp, Seq("v", "n2"), idCol)
+        .transform(graft.core.OpCaches.persistTracked))
+    val p = groups.fold(cp)(DupCollapse.reps(cp, _, idCol))
+    val multi =
+      if (superCells > 0)
+        nearestCentroidsTwoLevel(p, cent, assignments, idCol, superCells, superProbes)
+      else nearestCentroids(p, cent, assignments, idCol)
+    (cp, groups, ivfScoredPairsFrom(p, multi, minSharedCells, idCol))
   }
 
   /** Near-dup COMPONENT label for every vector — the collapsed
@@ -914,67 +876,31 @@ object Similarity {
       centroids: Option[DataFrame] = None,
       superCells: Int = 0, superProbes: Int = 2,
       dupGate: Double = graft.operators.Dedup.DefaultDupGate): DataFrame = {
-    val cp = prepared(corpus, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val (cent, collapse) = gateAndCentroids(cp, numCentroids, idCol,
-      centroids, dupGate)
-    def multiOf(p: DataFrame) =
-      if (superCells > 0)
-        nearestCentroidsTwoLevel(p, cent, assignments, idCol,
-          superCells, superProbes)
-      else nearestCentroids(p, cent, assignments, idCol)
-    if (!collapse) {
-      val comp = graft.operators.Components.connectedComponents(
-        ivfScoredPairsFrom(cp, multiOf(cp), minSharedCells, idCol)
-          .filter(thresholdPass(col("cosine"), threshold)))
-      return cp.select(col(idCol))
-        .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-        .select(col(idCol).as("id"),
-          coalesce(col("label"), col(idCol)).as("label"))
-    }
-    val (groups, repPairsAll) = collapsedRepPieces(cp, multiOf,
-      minSharedCells, idCol)
+    val (cp, groups, scored) = gatedScoredPairs(corpus, numCentroids,
+      assignments, minSharedCells, embCol, idCol, centroids, superCells,
+      superProbes, dupGate)
     val comp = graft.operators.Components.connectedComponents(
-      repPairsAll.filter(thresholdPass(col("cosine"), threshold))
+      scored.filter(thresholdPass(col("cosine"), threshold))
         .select(col("id_a"), col("id_b")))
-    val elig = groups.withColumn("__elig",
-      lit(assignments >= minSharedCells) &&
-        thresholdPass(
-          cosineQ(dotQ(col("v"), col("v")), col("n2"), col("n2")),
-          threshold))
-    // eligible members inherit their rep's component (rep_id when the
-    // rep paired with nothing — rep_id is the group minimum, so
-    // component minima are preserved); ineligible members self-label
-    val viaRep = elig.filter(col("__elig"))
-      .select(col("rep_id"), explode(col("ids")).as("id"))
-      .join(comp.withColumnRenamed("id", "rep_id")
-        .withColumnRenamed("label", "__cl"), Seq("rep_id"), "left")
-      .select(col("id"), coalesce(col("__cl"), col("rep_id")).as("label"))
-    viaRep.unionByName(elig.filter(!col("__elig"))
-      .select(explode(col("ids")).as("id"))
-      .select(col("id"), col("id").as("label")))
+    groups match {
+      case None => DupCollapse.directLabels(cp, idCol, comp)
+      case Some(g) => DupCollapse.labels(g, comp,
+        lit(assignments >= minSharedCells) &&
+          thresholdPass(selfCosine, threshold))
+    }
   }
 
   /** The shared IVF-blocked candidate + exact-cosine stage behind
     * [[ivfNearDupPairs]] (threshold verify) and [[knnJoin]] (top-k
-    * finish): undirected scored pairs (id_a < id_b, cosine).
+    * finish): undirected scored pairs (id_a < id_b, cosine) — the
+    * direct route of [[gatedScoredPairs]].
     */
   private def ivfScoredPairs(corpus: DataFrame,
       numCentroids: Int, assignments: Int, minSharedCells: Int,
       embCol: String, idCol: String, centroids: Option[DataFrame],
-      superCells: Int, superProbes: Int): DataFrame = {
-    val cp = prepared(corpus, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val cent = centroids.getOrElse {
-      val c = if (numCentroids > 0) numCentroids else autoCentroids(cp.count())
-      centroidSample(cp, c, idCol)
-    }
-    val multi =
-      if (superCells > 0)
-        nearestCentroidsTwoLevel(cp, cent, assignments, idCol, superCells, superProbes)
-      else nearestCentroids(cp, cent, assignments, idCol)
-    ivfScoredPairsFrom(cp, multi, minSharedCells, idCol)
-  }
+      superCells: Int, superProbes: Int): DataFrame =
+    gatedScoredPairs(corpus, numCentroids, assignments, minSharedCells,
+      embCol, idCol, centroids, superCells, superProbes, dupGate = 1.0)._3
 
   /** The cell self-join + exact-cosine verify over an existing
     * (idCol, v, n2)-vector frame and (idCol, cent_id) multi-assign
@@ -1035,34 +961,60 @@ object Similarity {
     * the corpus. Bare ids aggregate before vectors join back (the
     * [[ivfScoredPairs]] shuffle discipline). Pairs with EQUAL ids are
     * reported too (a re-ingested id is the strongest duplicate);
-    * disjoint id spaces simply never produce them.
+    * disjoint id spaces simply never produce them. This is the direct
+    * route of [[ivfNearDupBatchCollapsed]] (its endpoint gate 1.0
+    * runs no probe).
     *
     * @return (batch_id, corpus_id, cosine) with cosine >= threshold
     */
   def ivfNearDupBatch(corpus: DataFrame, batch: DataFrame, threshold: Double,
       numCentroids: Int = 0, assignments: Int = 8, minSharedCells: Int = 2,
-      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val cp = prepared(corpus, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val bp = prepared(batch, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val cent = {
-      val c = if (numCentroids > 0) numCentroids else autoCentroids(cp.count())
-      centroidSample(cp, c, idCol)
-    }
-    val mc = nearestCentroids(cp, cent, assignments, idCol)
-    val mb = nearestCentroids(bp, cent, assignments, idCol)
-    val cand = mb.select(col("cent_id"), col(idCol).as("batch_id"))
-      .join(mc.select(col("cent_id"), col(idCol).as("corpus_id")), Seq("cent_id"))
+      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    ivfNearDupBatchCollapsed(corpus, batch, threshold, numCentroids,
+      assignments, minSharedCells, embCol, idCol, dupGate = 1.0)
+
+  /** The batch × corpus candidate + exact-cosine stage behind every
+    * IVF batch form: batch vectors assigned to cells (`batchCells`)
+    * meet the corpus rows of the same cells (`corpusCells`, idCol +
+    * cent_id), bare (batch_id, corpus_id) pairs sharing at least
+    * `minSharedCells` cells aggregate BEFORE the vectors join back
+    * (the [[ivfScoredPairs]] shuffle discipline), and the exact
+    * cosine is checked against `threshold`. Batch vectors come from
+    * `bp`; corpus vectors from `cp` (one row per id) when given, else
+    * from the `corpusCells` rows themselves (a stored index: each
+    * vector's assignment rows carry its (v, n2)), deduplicated AFTER
+    * the candidate semi-join so only candidate ids — batch-bounded —
+    * pass through that aggregate, never the whole index.
+    */
+  private def batchVerified(batchCells: DataFrame, corpusCells: DataFrame,
+      bp: DataFrame, cp: Option[DataFrame], minSharedCells: Int,
+      threshold: Double, idCol: String): DataFrame = {
+    val cand0 = batchCells.select(col("cent_id"), col(idCol).as("batch_id"))
+      .join(corpusCells.select(col("cent_id"), col(idCol).as("corpus_id")),
+        Seq("cent_id"))
       .groupBy(col("batch_id"), col("corpus_id"))
       .agg(count(lit(1)).as("__shared"))
       .filter(col("__shared") >= minSharedCells)
       .select(col("batch_id"), col("corpus_id"))
+    val (cand, corpusVecs) = cp match {
+      case Some(c) => (cand0, c.select(col(idCol).as("corpus_id"),
+        col("v").as("vb"), col("n2").as("nb2")))
+      case None =>
+        val c = cand0.transform(graft.core.OpCaches.persistTracked)
+        (c, corpusCells
+          .select(col(idCol).as("corpus_id"), col("v").as("vb"),
+            col("n2").as("nb2"))
+          .join(c.select(col("corpus_id")).distinct(),
+            Seq("corpus_id"), "left_semi")
+          .groupBy(col("corpus_id"))
+          // every assignment row of a vector carries identical
+          // (v, n2) — first() is content-deterministic here
+          .agg(first(col("vb")).as("vb"), first(col("nb2")).as("nb2")))
+    }
     cand
       .join(bp.select(col(idCol).as("batch_id"), col("v").as("va"),
         col("n2").as("na2")), Seq("batch_id"))
-      .join(cp.select(col(idCol).as("corpus_id"), col("v").as("vb"),
-        col("n2").as("nb2")), Seq("corpus_id"))
+      .join(corpusVecs, Seq("corpus_id"))
       .select(col("batch_id"), col("corpus_id"),
         cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2")).as("cosine"))
       .filter(thresholdPass(col("cosine"), threshold))
@@ -1099,82 +1051,37 @@ object Similarity {
       .transform(graft.core.OpCaches.persistTracked)
     // gate + corpus count in ONE job over the union of the prepared
     // frames — the direct path needs the corpus count for
-    // autoCentroids anyway (the gateAndCentroids fusion, two-frame
+    // autoCentroids anyway (the gatedScoredPairs fusion, two-frame
     // flavor); the gate keys on the collapse key `v` over batch ∪
     // corpus, since copies on EITHER side multiply the probe
     var nc = -1L
-    val collapse =
-      if (dupGate < 0) true
-      else if (dupGate >= 1) false
-      else {
-        val u = cp.select(col("v"), lit(false).as("__b"))
-          .union(bp.select(col("v"), lit(true).as("__b")))
-        // the count conditions on corpus-side rows (ALL of them, not
-        // non-null v) so autoCentroids sees exactly what cp.count()
-        // would on the direct/endpoint routes — see gateAndCentroids;
-        // the fraction keys on non-null v inside the shared probe
-        val (cnt, f) = graft.operators.Dedup.dupMassProbe(
-          u, col("v"), when(!col("__b"), lit(1)))
-        nc = cnt
-        f > dupGate
-      }
+    val collapse = DupCollapse.worthIt(dupGate) {
+      val u = cp.select(col("v"), lit(false).as("__b"))
+        .union(bp.select(col("v"), lit(true).as("__b")))
+      // the count conditions on corpus-side rows (ALL of them, not
+      // non-null v) so autoCentroids sees exactly what cp.count()
+      // would on the direct/endpoint routes — see gatedScoredPairs;
+      // the fraction keys on non-null v inside the shared probe
+      val (cnt, f) = graft.operators.Dedup.dupMassProbe(
+        u, col("v"), when(!col("__b"), lit(1)))
+      nc = cnt
+      f
+    }
     // the direct form's centroid resolution, from the FULL corpus
     val c = if (numCentroids > 0) numCentroids
       else autoCentroids(if (nc >= 0) nc else cp.count())
     val cent = centroidSample(cp, c, idCol)
-    if (!collapse) {
-      // direct route reusing cp/bp/cent — the ivfNearDupBatch
-      // construction verbatim, minus its re-prepare and re-count
-      val mc = nearestCentroids(cp, cent, assignments, idCol)
-      val mb = nearestCentroids(bp, cent, assignments, idCol)
-      return mb.select(col("cent_id"), col(idCol).as("batch_id"))
-        .join(mc.select(col("cent_id"), col(idCol).as("corpus_id")),
-          Seq("cent_id"))
-        .groupBy(col("batch_id"), col("corpus_id"))
-        .agg(count(lit(1)).as("__shared"))
-        .filter(col("__shared") >= minSharedCells)
-        .join(bp.select(col(idCol).as("batch_id"), col("v").as("va"),
-          col("n2").as("na2")), Seq("batch_id"))
-        .join(cp.select(col(idCol).as("corpus_id"), col("v").as("vb"),
-          col("n2").as("nb2")), Seq("corpus_id"))
-        .select(col("batch_id"), col("corpus_id"),
-          cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2"))
-            .as("cosine"))
-        .filter(thresholdPass(col("cosine"), threshold))
-    }
-    def grouped(p: DataFrame) = p.groupBy(col("v"), col("n2"))
-      .agg(min(col(idCol)).as("rep_id"),
-        sort_array(collect_list(col(idCol))).as("ids"))
+    def verified(bq: DataFrame, cq: DataFrame) =
+      batchVerified(nearestCentroids(bq, cent, assignments, idCol),
+        nearestCentroids(cq, cent, assignments, idCol), bq, Some(cq),
+        minSharedCells, threshold, idCol)
+    if (!collapse) return verified(bp, cp)
+    def grouped(p: DataFrame) = DupCollapse.contract(p, Seq("v", "n2"), idCol)
       .transform(graft.core.OpCaches.persistTracked)
-    val gc = grouped(cp)
     val gb = grouped(bp)
-    def reps(p: DataFrame, g: DataFrame) = p.join(
-      g.select(col("rep_id").as(idCol)), Seq(idCol), "left_semi")
-    val mc = nearestCentroids(reps(cp, gc), cent, assignments, idCol)
-    val mb = nearestCentroids(reps(bp, gb), cent, assignments, idCol)
-    val repPairs = mb.select(col("cent_id"), col(idCol).as("batch_id"))
-      .join(mc.select(col("cent_id"), col(idCol).as("corpus_id")),
-        Seq("cent_id"))
-      .groupBy(col("batch_id"), col("corpus_id"))
-      .agg(count(lit(1)).as("__shared"))
-      .filter(col("__shared") >= minSharedCells)
-      .join(bp.select(col(idCol).as("batch_id"), col("v").as("va"),
-        col("n2").as("na2")), Seq("batch_id"))
-      .join(cp.select(col(idCol).as("corpus_id"), col("v").as("vb"),
-        col("n2").as("nb2")), Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2"))
-          .as("cosine"))
-      .filter(thresholdPass(col("cosine"), threshold))
-    repPairs
-      .join(gb.select(col("rep_id").as("batch_id"), col("ids").as("ids_b")),
-        Seq("batch_id"))
-      .join(gc.select(col("rep_id").as("corpus_id"), col("ids").as("ids_c")),
-        Seq("corpus_id"))
-      .select(explode(col("ids_b")).as("batch_id"), col("ids_c"),
-        col("cosine"))
-      .select(col("batch_id"), explode(col("ids_c")).as("corpus_id"),
-        col("cosine"))
+    val gc = grouped(cp)
+    DupCollapse.directed(verified(DupCollapse.reps(bp, gb, idCol),
+      DupCollapse.reps(cp, gc, idCol)), gb, gc)
   }
 
   /** The IVF MULTI-assignment index behind the near-dup family:
@@ -1244,34 +1151,19 @@ object Similarity {
       ivfMultiIndex(corpus, numCentroids, assignments, embCol, idCol))
   }
 
-  /** The corpus' duplicate-VECTOR-mass fraction persisted as a tiny
-    * store entry — the embedding twin of
-    * [[graft.operators.Dedup.storedDupFraction]]: computed once at
-    * build time over the prepared collapse key `v` (the same HLL
-    * probe [[gateAndCentroids]] fuses inline), read back from column
-    * metadata with zero jobs per serving call. Keyed by
-    * (embCol, idCol, variant, path) — independent of the IVF knobs.
+  /** The corpus' duplicate-VECTOR-mass fraction over the prepared
+    * collapse key `v` (the same HLL probe [[gatedScoredPairs]] fuses
+    * inline) stamped once at build time as the `ivfroute-` store entry
+    * ([[DupCollapse.storedFraction]]) — the embedding twin of
+    * [[graft.operators.Dedup.storedDupFraction]], read back with zero
+    * jobs per serving call.
     */
   private[graft] def storedVecDupFraction(corpus: DataFrame,
       corpusPath: String, embCol: String, idCol: String,
-      variant: String, force: Boolean): Double = {
-    require(variant.nonEmpty,
-      "variant must name the corpus frame (store entries fingerprint the file only)")
-    val name = s"ivfroute-$embCol-$idCol-$variant-v1-" +
-      graft.core.IndexStore.md5hex(corpusPath)
-    val df = graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force) {
-      val f = graft.operators.Dedup.dupMassProbe(
-        prepared(corpus, embCol, idCol), col("v"), lit(1))._2
-      graft.core.IndexMeta.tag(
-        corpus.sparkSession.range(1)
-          .select(lit(f).as("dup_fraction")),
-        "dup_fraction", "kind" -> "ivfroute", "dupFraction" -> f)
-    }
-    graft.core.IndexMeta.get(df, "dup_fraction")
-      .flatMap(_.get("dupFraction")).map(_.toDouble)
-      .getOrElse(df.head().getDouble(0))
-  }
+      variant: String, force: Boolean): Double =
+    DupCollapse.storedFraction(corpus, corpusPath, "ivfroute", embCol, idCol,
+      variant, force)(graft.operators.Dedup.dupMassProbe(
+        prepared(corpus, embCol, idCol), col("v"), lit(1))._2)
 
   /** Exact-duplicate vector membership of the corpus persisted
     * through the store: one row per DISTINCT prepared vector —
@@ -1291,10 +1183,8 @@ object Similarity {
       graft.core.IndexStore.md5hex(corpusPath)
     graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
       graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      prepared(corpus, embCol, idCol)
-        .groupBy(col("v"), col("n2"))
-        .agg(min(col(idCol)).as("rep_id"),
-          sort_array(collect_list(col(idCol))).as("ids")))
+      DupCollapse.contract(prepared(corpus, embCol, idCol), Seq("v", "n2"),
+        idCol))
   }
 
   /** The IVF multi-assign index over DISTINCT prepared vectors only —
@@ -1375,9 +1265,20 @@ object Similarity {
     * [[storedIvfGroups]]); the corpus' duplicate-vector fraction is
     * stamped once at build time ([[storedVecDupFraction]]) and read
     * back with zero jobs, so duplicate-light serving keeps exactly
-    * the direct path and its floor. Endpoints skip the route entry:
-    * `dupGate < 0` forces the collapsed index, `>= 1` the raw one
-    * (how the suites pin both serving paths output-identical).
+    * the direct path and its floor. Endpoints skip the route entry
+    * ([[DupCollapse.worthIt]]): a negative gate forces the collapsed
+    * index, one of 1 or more the raw one (how the suites pin both
+    * serving paths output-identical).
+    *
+    * The collapsed route is the same serving call over DISTINCT
+    * vectors: the batch contracts on the prepared key per call
+    * (batch-bounded), batch reps are assigned against the stored
+    * full-corpus centroid sample and probe the stored rep index, and
+    * the rep pairs expand through the stored membership — once per
+    * (batch group, corpus group), no orientation step. Identical
+    * (v, n2) vectors behave identically to their rep at every stage
+    * (assignment, shared-cell vote, cosine), so the expanded output
+    * is the direct serving form's bit-for-bit (suite-pinned).
     */
   def ivfNearDupBatchPrebuilt(corpus: DataFrame, corpusPath: String,
       batch: DataFrame, threshold: Double,
@@ -1385,126 +1286,42 @@ object Similarity {
       embCol: String = "embedding", idCol: String = "vec_id",
       variant: String = "", force: Boolean = false,
       dupGate: Double = graft.operators.Dedup.DefaultDupGate): DataFrame = {
-    val collapsed =
-      if (dupGate < 0) true
-      else if (dupGate >= 1) false
-      else storedVecDupFraction(corpus, corpusPath, embCol, idCol,
-        variant, force) > dupGate
-    if (collapsed)
-      return ivfNearDupBatchPrebuiltCollapsed(corpus, corpusPath, batch,
-        threshold, numCentroids, assignments, minSharedCells, embCol,
-        idCol, variant, force)
-    val index = storedIvfMultiIndex(corpus, corpusPath, numCentroids,
-      assignments, embCol, idCol, variant, force)
-    val resolvedC = multiStampResolvedC(index, "ivfNearDupBatchPrebuilt",
-      numCentroids, assignments, embCol, idCol)
+    val collapsed = DupCollapse.worthIt(dupGate)(storedVecDupFraction(
+      corpus, corpusPath, embCol, idCol, variant, force))
+    // the collapsed route builds its membership entry ONCE: under
+    // `force` a second build would delete the files the rep index
+    // build and the expansion read
+    val groups =
+      if (collapsed) Some(storedIvfGroups(corpus, corpusPath, embCol, idCol,
+        variant, force))
+      else None
+    val index = groups.fold(storedIvfMultiIndex(corpus, corpusPath,
+        numCentroids, assignments, embCol, idCol, variant, force))(g =>
+      storedIvfRepMultiIndex(corpus, corpusPath, g, numCentroids,
+        assignments, embCol, idCol, variant, force))
+    val resolvedC = multiStampResolvedC(index,
+      if (collapsed) "ivfNearDupBatchPrebuilt(collapsed)"
+      else "ivfNearDupBatchPrebuilt",
+      numCentroids, assignments, embCol, idCol,
+      kind = if (collapsed) "ivfrepmulti" else "ivfmulti")
+    // unforced on the collapsed route: a forced rep-index build has
+    // just rebuilt this entry
     val cent = storedPreparedSample(corpus, corpusPath, resolvedC,
-        embCol, idCol, variant, force)
+        embCol, idCol, variant, force && !collapsed)
       .select(col(idCol).as("cent_id"), col("v").as("cv"),
         col("n2").as("cn2"))
     val bp = prepared(batch, embCol, idCol)
       .transform(graft.core.OpCaches.persistTracked)
-    val mb = nearestCentroids(bp, cent, assignments, idCol)
-    val cand = mb.select(col("cent_id"), col(idCol).as("batch_id"))
-      .join(index.select(col("cent_id"), col(idCol).as("corpus_id")),
-        Seq("cent_id"))
-      .groupBy(col("batch_id"), col("corpus_id"))
-      .agg(count(lit(1)).as("__shared"))
-      .filter(col("__shared") >= minSharedCells)
-      .select(col("batch_id"), col("corpus_id"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val corpusVecs = index
-      .select(col(idCol).as("corpus_id"), col("v").as("vb"),
-        col("n2").as("nb2"))
-      .join(cand.select(col("corpus_id")).distinct(),
-        Seq("corpus_id"), "left_semi")
-      .groupBy(col("corpus_id"))
-      // every duplicate row of a vec carries identical (v, n2) —
-      // first() is content-deterministic here
-      .agg(first(col("vb")).as("vb"), first(col("nb2")).as("nb2"))
-    cand
-      .join(bp.select(col(idCol).as("batch_id"), col("v").as("va"),
-        col("n2").as("na2")), Seq("batch_id"))
-      .join(corpusVecs, Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2")).as("cosine"))
-      .filter(thresholdPass(col("cosine"), threshold))
-  }
-
-  /** The collapsed-index serving path behind
-    * [[ivfNearDupBatchPrebuilt]] — [[ivfNearDupBatchCollapsed]]'s
-    * collapsed branch with the corpus side read from index bytes:
-    * batch contracted on the prepared key per call (batch-bounded),
-    * batch reps assigned against the STORED full-corpus centroid
-    * sample, candidates from batch reps × stored rep index rows,
-    * exact-cosine verify between batch rep vectors and rep vectors
-    * recovered from index rows, then the directed member cross
-    * product expansion via the stored membership — once per
-    * (batch group, corpus group), no orientation step. Identical
-    * (v, n2) vectors behave identically to their rep at every stage
-    * (assignment, shared-cell vote, cosine), so the expanded output
-    * is the direct serving form's bit-for-bit (suite-pinned).
-    */
-  private def ivfNearDupBatchPrebuiltCollapsed(corpus: DataFrame,
-      corpusPath: String, batch: DataFrame, threshold: Double,
-      numCentroids: Int, assignments: Int, minSharedCells: Int,
-      embCol: String, idCol: String, variant: String,
-      force: Boolean): DataFrame = {
-    val groups = storedIvfGroups(corpus, corpusPath, embCol, idCol,
-      variant, force)
-    val repIdx = storedIvfRepMultiIndex(corpus, corpusPath, groups,
-      numCentroids, assignments, embCol, idCol, variant, force)
-    val resolvedC = multiStampResolvedC(repIdx,
-      "ivfNearDupBatchPrebuilt(collapsed)",
-      numCentroids, assignments, embCol, idCol, kind = "ivfrepmulti")
-    // unforced: a forced rep-index build has just rebuilt this entry
-    val cent = storedPreparedSample(corpus, corpusPath, resolvedC,
-        embCol, idCol, variant)
-      .select(col(idCol).as("cent_id"), col("v").as("cv"),
-        col("n2").as("cn2"))
-    val bp = prepared(batch, embCol, idCol)
-      .transform(graft.core.OpCaches.persistTracked)
-    val gb = bp.groupBy(col("v"), col("n2"))
-      .agg(min(col(idCol)).as("rep_id"),
-        sort_array(collect_list(col(idCol))).as("ids"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val bReps = bp.join(gb.select(col("rep_id").as(idCol)),
-      Seq(idCol), "left_semi")
-    val mb = nearestCentroids(bReps, cent, assignments, idCol)
-    val cand = mb.select(col("cent_id"), col(idCol).as("batch_id"))
-      .join(repIdx.select(col("cent_id"), col(idCol).as("corpus_id")),
-        Seq("cent_id"))
-      .groupBy(col("batch_id"), col("corpus_id"))
-      .agg(count(lit(1)).as("__shared"))
-      .filter(col("__shared") >= minSharedCells)
-      .select(col("batch_id"), col("corpus_id"))
-      .transform(graft.core.OpCaches.persistTracked)
-    val corpusVecs = repIdx
-      .select(col(idCol).as("corpus_id"), col("v").as("vb"),
-        col("n2").as("nb2"))
-      .join(cand.select(col("corpus_id")).distinct(),
-        Seq("corpus_id"), "left_semi")
-      .groupBy(col("corpus_id"))
-      // every assignment row of a rep carries identical (v, n2) —
-      // first() is content-deterministic here
-      .agg(first(col("vb")).as("vb"), first(col("nb2")).as("nb2"))
-    val repPairs = cand
-      .join(bp.select(col(idCol).as("batch_id"), col("v").as("va"),
-        col("n2").as("na2")), Seq("batch_id"))
-      .join(corpusVecs, Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        cosineQ(dotQ(col("va"), col("vb")), col("na2"), col("nb2"))
-          .as("cosine"))
-      .filter(thresholdPass(col("cosine"), threshold))
-    repPairs
-      .join(gb.select(col("rep_id").as("batch_id"), col("ids").as("ids_b")),
-        Seq("batch_id"))
-      .join(groups.select(col("rep_id").as("corpus_id"),
-        col("ids").as("ids_c")), Seq("corpus_id"))
-      .select(explode(col("ids_b")).as("batch_id"), col("ids_c"),
-        col("cosine"))
-      .select(col("batch_id"), explode(col("ids_c")).as("corpus_id"),
-        col("cosine"))
+    def verified(bq: DataFrame) =
+      batchVerified(nearestCentroids(bq, cent, assignments, idCol), index, bq,
+        None, minSharedCells, threshold, idCol)
+    groups match {
+      case None => verified(bp)
+      case Some(g) =>
+        val gb = DupCollapse.contract(bp, Seq("v", "n2"), idCol)
+          .transform(graft.core.OpCaches.persistTracked)
+        DupCollapse.directed(verified(DupCollapse.reps(bp, gb, idCol)), gb, g)
+    }
   }
 
   /** Corpus-wide approximate k-NN SELF-join: every vector's k

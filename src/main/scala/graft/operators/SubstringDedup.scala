@@ -148,21 +148,24 @@ object SubstringDedup {
     * windows and cannot appear.
     */
   def duplicateSpans(docs: DataFrame, windowTokens: Int = 20,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    duplicateSpansShape(docs, windowTokens, idCol, textCol,
-      persistWins = false)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val dw = dupWindows(docs, windowTokens, idCol, textCol)
+    // interval merge: a window starts a new span iff it begins past
+    // the running max end of all earlier windows + 1 (strictly after
+    // any covered-or-adjacent position)
+    val byDoc = Window.partitionBy(col(idCol)).orderBy(col("s"))
+    val prevMax = max(col("e"))
+      .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
+    val marked = dw.select(col(idCol), col("s"), col("e"),
+      when(prevMax.isNull || col("s") > prevMax + 1, 1L).otherwise(0L).as("ns"))
+    val grouped = marked.select(col(idCol), col("s"), col("e"),
+      sum(col("ns")).over(byDoc).as("gid"))
+    grouped.groupBy(col(idCol), col("gid"))
+      .agg(min(col("s")).as("span_start"), max(col("e")).as("span_end"))
+      .select(col(idCol), col("span_start"), col("span_end"),
+        (col("span_end") - col("span_start") + 1L).as("span_tokens"))
+  }
 
-  /** [[duplicateSpans]] with the wins-persist choice exposed for the
-    * SortShapeProbe A/B (recompute = the window stream re-derives per
-    * consumer, the DSIR inversion candidate). Output-identical either
-    * way. Recompute is the default since the r14b interleave
-    * (spans 1.58 vs 1.82 s, stats 1.45 vs 1.50 s medians): with the
-    * byte-walk kernel at ~0.1 s the eager persist's materialize job
-    * costs more than the second kernel pass, which runs CONCURRENTLY
-    * with the first inside AQE's exchange materialization — and at
-    * 100 TB a corpus-sized window stream cannot persist anyway, so
-    * recompute is also the only shape that scales.
-    */
   /** The duplicated-window interval stream: (idCol, s, e) for every
     * w-token window whose key occurs >= 2 times — steps 1–3 of the
     * pipeline, shared by the span and stats shapes. The window stream
@@ -171,17 +174,16 @@ object SubstringDedup {
     * materialize concurrently under AQE, so the second kernel pass
     * overlaps the first, while the eager persist paid a synchronous
     * up-front count job — the same reuse-vs-recompute inversion the
-    * DSIR feature stream hit (r14b interleave in
-    * [[duplicateSpans]]'s scaladoc).
+    * DSIR feature stream hit (r14b interleave: spans 1.58 vs 1.82 s,
+    * stats 1.45 vs 1.50 s medians). At 100 TB a corpus-sized window
+    * stream cannot persist anyway, so recompute is also the only
+    * shape that scales.
     */
   private def dupWindows(docs: DataFrame, w: Int, idCol: String,
-      textCol: String, persistWins: Boolean): DataFrame = {
+      textCol: String): DataFrame = {
     require(w >= 2,
       s"windowTokens $w must be >= 2 (a 1-token window is word_freq)")
-    val winsPlan = windowKeys(docs, w, idCol, textCol)
-    val wins =
-      if (persistWins) graft.core.OpCaches.persistTrackedEager(winsPlan)
-      else winsPlan
+    val wins = windowKeys(docs, w, idCol, textCol)
     // r22 (guide §1.2/§2.4): "occurs >= 2 times" is a per-key COUNT
     // over one exchange of the window stream, not a count-aggregate
     // joined back to a second copy of the stream — the former
@@ -199,26 +201,6 @@ object SubstringDedup {
       .withColumn("__kc", count(lit(1)).over(byKey))
       .filter(col("__kc") >= 2)
       .select(col(idCol), col("s"), (col("s") + lit(w.toLong) - 1L).as("e"))
-  }
-
-  private[graft] def duplicateSpansShape(docs: DataFrame, windowTokens: Int,
-      idCol: String, textCol: String, persistWins: Boolean): DataFrame = {
-    val w = windowTokens
-    val dw = dupWindows(docs, w, idCol, textCol, persistWins)
-    // interval merge: a window starts a new span iff it begins past
-    // the running max end of all earlier windows + 1 (strictly after
-    // any covered-or-adjacent position)
-    val byDoc = Window.partitionBy(col(idCol)).orderBy(col("s"))
-    val prevMax = max(col("e"))
-      .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-    val marked = dw.select(col(idCol), col("s"), col("e"),
-      when(prevMax.isNull || col("s") > prevMax + 1, 1L).otherwise(0L).as("ns"))
-    val grouped = marked.select(col(idCol), col("s"), col("e"),
-      sum(col("ns")).over(byDoc).as("gid"))
-    grouped.groupBy(col(idCol), col("gid"))
-      .agg(min(col("s")).as("span_start"), max(col("e")).as("span_end"))
-      .select(col(idCol), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1L).as("span_tokens"))
   }
 
   /** Per-document duplication summary — the coverage of
@@ -241,13 +223,8 @@ object SubstringDedup {
     * over [[duplicateSpans]], with the identical single shuffle.
     */
   def duplicationStats(docs: DataFrame, windowTokens: Int = 20,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    duplicationStatsShape(docs, windowTokens, idCol, textCol,
-      persistWins = false)
-
-  private[graft] def duplicationStatsShape(docs: DataFrame, windowTokens: Int,
-      idCol: String, textCol: String, persistWins: Boolean): DataFrame = {
-    val dw = dupWindows(docs, windowTokens, idCol, textCol, persistWins)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val dw = dupWindows(docs, windowTokens, idCol, textCol)
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("s"))
     val prevMax = max(col("e"))
       .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))

@@ -69,6 +69,16 @@ object Vocab {
       .select(col(idCol), col("pos").cast("int").as("pos"),
         coalesce(col("token_id"), lit(0)).as("token_id"))
 
+  /** Largest vocabulary the `map_from_entries`/`element_at` encode
+    * path accepts: GetMapValue's probe is a linear scan of the map's
+    * key array, so per-token cost is O(V) — a win over the hash
+    * join's build+probe only while V stays small (interleaved probes:
+    * faster at V=100, 20x SLOWER at V=40k). Above this bound
+    * [[vocabEncode]] uses the broadcast hash join, whose probe is
+    * O(1) at any V.
+    */
+  val MapLookupMaxVocab: Int = 1024
+
   /** Fit + transform in one call (the registered-query shape).
     *
     * Three cost decisions, each probed interleaved (VocabProbe,
@@ -107,16 +117,6 @@ object Vocab {
     * The separate builder/encoder stay as-is for callers with a
     * prebuilt vocabulary (streams cannot persist).
     */
-  /** Largest vocabulary the `map_from_entries`/`element_at` encode
-    * path accepts: GetMapValue's probe is a linear scan of the map's
-    * key array, so per-token cost is O(V) — a win over the hash
-    * join's build+probe only while V stays small (interleaved probes:
-    * faster at V=100, 20x SLOWER at V=40k). Above this bound
-    * [[vocabEncode]] uses the broadcast hash join, whose probe is
-    * O(1) at any V.
-    */
-  val MapLookupMaxVocab: Int = 1024
-
   def vocabEncode(docs: DataFrame, vocabSize: Int,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(vocabSize > 0, s"vocabSize $vocabSize must be positive")

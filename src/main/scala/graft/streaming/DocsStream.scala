@@ -204,8 +204,8 @@ object DocsStream {
     * index is decided ONCE at stream definition by the duplicate-mass
     * fraction STAMPED at build time ([[Dedup.storedDupFraction]] —
     * zero probe jobs, read from column metadata). Endpoints pin the
-    * route without touching the stamp: `dupGate < 0` forces the
-    * collapsed index, `>= 1` the raw one.
+    * route without touching the stamp ([[graft.operators.DupCollapse.worthIt]]): a
+    * negative gate forces the collapsed index, 1 or more the raw one.
     *
     * Why the v2 route matters HERE: a stream-static join re-evaluates
     * its static side every micro-batch, so on a copy-heavy corpus the
@@ -234,11 +234,9 @@ object DocsStream {
       dupGate: Double = Dedup.DefaultDupGate): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val collapsed =
-      if (dupGate < 0) true
-      else if (dupGate >= 1) false
-      else Dedup.storedDupFraction(corpus, corpusPath, textCol, idCol,
-        variant, force) > dupGate
+    val collapsed = graft.operators.DupCollapse.worthIt(dupGate)(
+      Dedup.storedDupFraction(corpus, corpusPath, textCol, idCol, variant,
+        force))
     val streamBanded = docsStream
       .select(col(idCol).as("new_id"),
         rowSignature(col(textCol), n, numHashes).as("sig_a"))
@@ -259,10 +257,11 @@ object DocsStream {
         .filter(col("new_id") =!= col("corpus_id"))
         .select(out: _*)
     }
-    val repIdx = Dedup.storedMinHashRepIndex(corpus, corpusPath, textCol,
-      idCol, n, numHashes, bands, variant, force)
+    // the membership entry is built ONCE and the rep index over it
     val members = Dedup.storedMinHashMembers(corpus, corpusPath, textCol,
       idCol, n, variant, force)
+    val repIdx = Dedup.storedMinHashRepIndexOver(corpus, corpusPath,
+      members, textCol, idCol, n, numHashes, bands, variant, force)
     streamBanded
       .join(repIdx.select(col("band_idx"), col("band_key"),
         col(idCol).as("__rep"), col("sig").as("sig_b")),

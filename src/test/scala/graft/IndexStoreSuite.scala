@@ -340,6 +340,81 @@ class IndexStoreSuite extends SparkSuite {
     }
   }
 
+  test("readOrBuild sizes its write without the rebalance hint when AQE is off") {
+    // Spark resolves the rebalance hint only under AQE: an AQE-off
+    // session logged `Unrecognized hint: rebalance()` and wrote one
+    // part file per build partition
+    val name = uniqueName("test-aqeoff")
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val (_, warnings) =
+      try hintWarningsDuring(IndexStore.readOrBuild(spark, name, "fp")(
+        spark.range(0, 1000, 1, 4).toDF("id")).count())
+      finally spark.conf.set(key, was)
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+    val parts = new java.io.File(IndexStore.baseDir, s"$name/data").listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, parts.map(_.getName).mkString(", "))
+  }
+
+  test("the collapse family's prebuilt routes write exactly their named store entries") {
+    // every entry name of the family, pinned: a refactor that renamed
+    // one would orphan the entries a previous build wrote, and two
+    // families sharing a name would serve each other's bytes
+    val tmpStore = java.nio.file.Files
+      .createTempDirectory("graft-entrynames").toString
+    sys.props("graft.index.dir") = tmpStore
+    try entryNamesBody()
+    finally sys.props.remove("graft.index.dir")
+  }
+
+  private def entryNamesBody(): Unit = {
+    import graft.operators.Dedup
+    val tmp = java.nio.file.Files.createTempDirectory("graft-entrysrc").toFile
+    val docsPath = new java.io.File(tmp, "docs.parquet").getPath
+    val vecsPath = new java.io.File(tmp, "vecs.parquet").getPath
+    val text = "the quick brown fox jumps over the lazy dog and runs far away"
+    (0 until 12).map(i => (i.toLong, if (i % 2 == 0) text else s"$text $i"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(docsPath)
+    val rnd = new scala.util.Random(31)
+    val base = Array.tabulate(6)(_ => Seq.fill(8)(rnd.nextFloat() * 2 - 1))
+    Seq.tabulate(24)(i => (i.toLong, base(i % 6)))
+      .toDF("vec_id", "embedding").write.mode("overwrite").parquet(vecsPath)
+    val docs = spark.read.parquet(docsPath)
+    val vecs = spark.read.parquet(vecsPath)
+    val h = (p: String) => IndexStore.md5hex(p)
+    def entries() = Option(new java.io.File(IndexStore.baseDir).listFiles())
+      .getOrElse(Array.empty).map(_.getName).toSet
+    // the text family: the stamp, then both serving indexes
+    Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(0),
+      variant = "names").collect()
+    Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(0),
+      variant = "names", dupGate = 1.0).collect()
+    Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(0),
+      variant = "names", dupGate = -1.0).collect()
+    graft.core.OpCaches.release()
+    assert(entries() == Set(
+      s"mhroute-text-doc_id-names-v1-${h(docsPath)}",
+      s"mhidx-n3-h16-b4-text-doc_id-names-v1-${h(docsPath)}",
+      s"mhmembers-n3-text-doc_id-names-v1-${h(docsPath)}",
+      s"mhrepidx-n3-h16-b4-text-doc_id-names-v1-${h(docsPath)}"))
+    // the embedding family, same three calls
+    def ivf(gate: Double) = Similarity.ivfNearDupBatchPrebuilt(vecs, vecsPath,
+      vecs.limit(0), threshold = 0.9, variant = "names", dupGate = gate).collect()
+    ivf(graft.operators.Dedup.DefaultDupGate)
+    ivf(1.0)
+    ivf(-1.0)
+    graft.core.OpCaches.release()
+    // 24 vectors: autoCentroids resolves C = 20 for the centroid sample
+    assert(entries() -- entries().filter(_.startsWith("mh")) == Set(
+      s"ivfroute-embedding-vec_id-names-v1-${h(vecsPath)}",
+      s"ivfmulti-c0-a8-embedding-vec_id-names-v3-${h(vecsPath)}",
+      s"ivfgroups-embedding-vec_id-names-v1-${h(vecsPath)}",
+      s"ivfrepmulti-c0-a8-embedding-vec_id-names-v2-${h(vecsPath)}",
+      s"sample-n20-embedding-vec_id-names-v2-${h(vecsPath)}"))
+  }
+
   test("pruneSuperseded retires only out-generationed entries of the same key") {
     // the r19 sample v1->v2 bump (and the r20 ivf/ivfmulti/pq/ivfpq
     // bumps) leave orphaned old-generation entries nothing can ever

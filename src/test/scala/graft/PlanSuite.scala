@@ -512,4 +512,15 @@ class PlanSuite extends SparkSuite {
     assert(pc.contains("BroadcastHashJoin"), pc.take(3000))
     assert(pc.contains("Union"), pc.take(3000))
   }
+
+  test("kernelFloor reads an RDD-backed input's real split count") {
+    // an RDD-backed leaf reports the spark.sql.defaultSizeInBytes
+    // sentinel as its size, which read as a wide input and left a
+    // one-partition heavy kernel pass on one task
+    val rows = spark.sparkContext.parallelize(1 to 100, 1)
+    val df = spark.createDataFrame(rows.map(Tuple1(_))).toDF("x")
+    assert(df.rdd.getNumPartitions == 1)
+    val floored = graft.core.Parallelism.kernelFloor(df, heavy = true)
+    assert(floored.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+  }
 }
