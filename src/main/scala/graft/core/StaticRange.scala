@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `orderBy` plans a range exchange whose `RangePartitioner` first
   * runs a separate sampling job over the child RDD — re-executing
   * everything beneath the sort that is not behind a materialized
-  * exchange, plus one extra job round per action (JobGapProbe round
+  * exchange, plus one extra job round per action (SCALING.md round
   * 13: ~0.12 s work + ~0.05 s gap on the c6 selection pipeline at
   * sf0.1). When the caller KNOWS the leading key's domain — the
   * selective-search query ids are dense 0..|Q|-1 by construction —
@@ -140,11 +140,43 @@ object StaticRange {
       .sortWithinPartitions(sortCols: _*)
   }
 
+  /** `df` without the local sort of the [[sortByKnownDomain]] route it
+    * ends in, for a consumer that ignores row order but groups by the
+    * leading key (a per-query aggregate). The route's pid rides along
+    * as a column named `pidCol`, computed (and guarded) below the
+    * pass-through exchange, which now partitions on that column: an
+    * aggregate grouped by (key, `pidCol`) is already clustered by the
+    * route, so it plans no exchange of its own, each key's rows meet
+    * in one task, and an id outside the domain still fails in-plan.
+    * The sort may sit under deterministic projections (a caller's
+    * `withColumn`); they pass `pidCol` through. `None` for any other
+    * plan.
+    */
+  private[graft] def routedUnsorted(df: DataFrame, pidCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+      DirectShufflePartitionID}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project,
+      RepartitionByExpression, Sort}
+    def strip(p: LogicalPlan): Option[(LogicalPlan, Attribute)] = p match {
+      case Project(list, child) if list.forall(_.deterministic) =>
+        strip(child).map { case (c, pid) => (Project(list :+ pid, c), pid) }
+      case Sort(_, false, route @ RepartitionByExpression(
+          Seq(DirectShufflePartitionID(guard)), child, _, _), _) =>
+        val pid = Alias(guard, pidCol)()
+        Some((route.copy(partitionExpressions = Seq(DirectShufflePartitionID(pid.toAttribute)),
+          child = Project(child.output :+ pid, child)), pid.toAttribute))
+      case _ => None
+    }
+    strip(df.queryExecution.analyzed).map { case (plan, _) =>
+      org.apache.spark.sql.graft.DatasetBridge.ofPlan(df.sparkSession, plan)
+    }
+  }
+
   /** Presentation sort for any BOUNDED frame (|Q| x k top-k lists,
     * category-set aggregates, rollup/cube matrices, the queries x
     * shards selection frame, the TREC export): a single-partition
     * sortWithinPartitions skips the range sort's child-re-executing
-    * sampling job (SortProbe: ~0.1 s per row at toy scale, SCALING.md
+    * sampling job (~0.1 s per row at toy scale, SCALING.md
     * round 11) and stays trivial at any corpus scale because the
     * output is bounded by the query batch, not the corpus. The
     * caller's keys must form a unique grouping key, so the order is
@@ -153,14 +185,14 @@ object StaticRange {
     * coalesce(1), not repartition(1): the narrow merge reaches the
     * single partition without a shuffle, which under AQE is one
     * fewer query-stage round per query (~20-45 ms each at toy scale;
-    * CoalesceSortProbe round 13). The price is that the whole
+    * SCALING.md round 13). The price is that the whole
     * post-last-exchange segment runs as ONE task — every caller
     * feeds a final aggregation over a bounded group count, so that
     * segment is single-task-sized by contract while the map side
     * keeps full parallelism behind the aggregation's own exchange.
     * Do NOT use this under a segment holding corpus-proportional work
     * (the arrival walk keeps repartition(1) for exactly that reason —
-    * see SelectiveSearch.sortedMatrix).
+    * see SelectiveSearch.sortedInOnePartition).
     */
   def boundedSorted(df: DataFrame, keys: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(keys: _*)

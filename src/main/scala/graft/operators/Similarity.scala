@@ -237,8 +237,8 @@ object Similarity {
     * r21: [[graft.core.Parallelism.kernelFloor]] on the vector frame —
     * the argmin is C x dim dots PER ROW fused into the consumer's map
     * stage, and a corpus whose scan (or cache) arrives in one split
-    * ran the whole pass single-task (JobGapProbe: the embedding
-    * family's twin 0.6-0.7 s one-task assignment jobs). A no-op at
+    * ran the whole pass single-task (OPTIMIZATION_r21.md: the
+    * embedding family's twin 0.6-0.7 s one-task assignment jobs). A no-op at
     * cluster scale, like every other kernelFloor site.
     */
   private[graft] def nearestCentroidsFromRows(p: DataFrame,
@@ -511,7 +511,11 @@ object Similarity {
     // literal-centroid regime: the query side is broadcast-small BY
     // CONTRACT, so collect it once and compute the probe list in
     // driver scala ([[driverNearestCells]] — bit-identical ordering);
-    // the probes then broadcast as a LocalRelation, no extra job.
+    // the probes then broadcast as a LocalRelation. That broadcast runs
+    // no job on the AQE-off session the ann_* rows use
+    // ([[graft.core.SessionTuning.boundedPlan]] plans local relations
+    // as jobless scans); on a caller's own session it still runs one
+    // job of min(rows, cores) tasks.
     // The query collect and the centroid collect are independent
     // driver jobs — overlap them (graft.core.Builds) so the build
     // pays one round of job latency; over-limit centroid tables
@@ -909,7 +913,7 @@ object Similarity {
     *
     * r21: the (cent_id, id) projection is repartitioned by cent_id to
     * the session's parallelism BEFORE the id_a/id_b aliasing, for two
-    * reasons measured on the sf0.1 board (JobGapProbe/R21VolProbe):
+    * reasons measured on the sf0.1 board (OPTIMIZATION_r21.md):
     *
     *  - REUSE: with the aliasing below the exchange, the two join
     *    legs were distinct subtrees and the entire multi-assign pass

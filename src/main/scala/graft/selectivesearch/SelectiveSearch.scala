@@ -7,10 +7,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
-import org.apache.spark.sql.graft.FileScanBridge
+import org.apache.spark.sql.graft.{DatasetBridge, DriverCsv, FileScanBridge}
 
 import graft.core.DataUtils.ensureHasColumns
-import graft.core.{Schemas, StaticRange}
+import graft.core.{Schemas, SessionTuning, StaticRange}
 
 /** Selective-search post-processing: shard/bucket selection, merging,
   * evaluation, and TREC export (reference: dataproc/selectivesearch.py).
@@ -25,12 +25,63 @@ import graft.core.{Schemas, StaticRange}
   * only shuffles are per-query windows, aggregations, and explicit
   * final sorts.
   *
+  * A call whose selection side is driver-held — the loaders' frames,
+  * the bucket resolver's output — builds its frame on the library's
+  * AQE-off child session ([[graft.core.SessionTuning.boundedPlan]]):
+  * `evaluate` always, the select calls when `queryDomain` is given
+  * (`None` keeps their range sort under AQE). An action on such a
+  * frame runs as one Spark job of chained stages, and the selection is
+  * broadcast from the driver with no job; jobs remain only for
+  * broadcasts of frames that are not local relations
+  * (`selectWithDecay`'s max(bucket) side, a client's own joins). The
+  * TREC frames stay on their input's session. Any other call keeps the
+  * caller's session. A frame on the child follows the caller's runtime
+  * Spark SQL settings (re-synced on every call) but reports its
+  * queries to the child's listeners, not to `QueryExecutionListener`s
+  * registered on the caller at runtime. `toTrec` collects its bounded
+  * frame and writes the file on the driver.
+  *
   * Row-order semantics: pandas breaks ties by input row order
   * (`rank(method='first')`, stable sorts). Spark has no stable row
   * order, so every ordering here carries an explicit deterministic
   * tiebreak (see SURVEY.md §7 hard-part 2).
   */
 object SelectiveSearch {
+
+  /** `frames` re-homed on the first one's AQE-off child session when
+    * `onBounded`, as they are otherwise (see above). There every
+    * exchange of these calls is a broadcast of a driver-held
+    * selection, a per-query window or aggregate, or a static route —
+    * nothing AQE would re-plan — and without AQE the caller's
+    * `global_rank` window exchange keeps one walk task per shuffle
+    * partition. A frame already there stays.
+    */
+  private def homed(onBounded: Boolean, frames: DataFrame*): Seq[DataFrame] =
+    if (!onBounded) frames
+    else {
+      val s = SessionTuning.boundedPlan(frames.head.sparkSession)
+      frames.map(DatasetBridge.transplant(_, s))
+    }
+
+  /** A TREC input stays on its own session: a select output built on
+    * the AQE-off session keeps its export there (re-synced, as every
+    * lookup is), any other frame keeps the caller's session.
+    */
+  private def onItsSession(results: DataFrame): DataFrame =
+    homed(SessionTuning.isBounded(results.sparkSession), results).head
+
+  /** Whether the driver holds all of `df`'s rows: every leaf of its
+    * plan is a local relation (the loaders' selections, the bucket
+    * resolver's output, a client's literal rows). Its broadcast then
+    * runs no job on the AQE-off session; a selection computed by Spark
+    * (an aggregate over a table) is broadcast by a job there, which
+    * the driver waits for before the main job starts, where AQE runs
+    * it beside the other side's stages — so it stays on the caller's
+    * session.
+    */
+  private def driverHeld(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
   /** Final (query asc, score desc) sort shared by all select*
     * pipelines (reference: dataproc/selectivesearch.py:128,157,190),
@@ -67,18 +118,19 @@ object SelectiveSearch {
     }
   }
 
-  /** Final (query, step) sort of an evaluation MATRIX. The matrix is
-    * queries x steps rows — the reference returns a pandas frame, so
-    * presentation size is its contract — which makes a single-
-    * partition sort safe at any corpus scale, and it skips the range-
-    * exchange sampling job that would re-execute the arrival walk
-    * beneath the sort (~0.3 s per call at toy scale:
-    * SortProbe, SCALING.md round 11). (query, step) is the group key,
-    * so the single-partition order is total and deterministic.
+  /** Final sort of a BOUNDED report: an evaluation matrix (queries x
+    * steps rows — the reference returns a pandas frame, so
+    * presentation size is its contract) or a TREC frame (queries x
+    * cutoff rows). That makes a single-partition sort safe at any
+    * corpus scale, and it skips the range-exchange sampling job that
+    * would re-execute the arrival walk or the window beneath the sort
+    * (~0.3 s per call at toy scale, SCALING.md round 11). A shuffle,
+    * not a coalesce: the walk or window above the last exchange keeps
+    * its width. The keys are the group key, so the single-partition
+    * order is total and deterministic.
     */
-  private def sortedMatrix(df: DataFrame): DataFrame =
-    df.repartition(1)
-      .sortWithinPartitions(col("query").asc, col("step").asc)
+  private def sortedInOnePartition(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys.map(col(_).asc): _*)
 
   // ---------------------------------------------------------------------
   // Selection family
@@ -94,9 +146,10 @@ object SelectiveSearch {
       queryDomain: Option[Int] = None): DataFrame = {
     ensureHasColumns(selection, Seq("rank", "query", "shard"))
     ensureHasColumns(results, Seq("score", "query", "shard"))
-    val top = selection.filter(col("rank") < lit(t)).select("query", "shard")
+    val Seq(sel, res) = homed(queryDomain.isDefined && driverHeld(selection), selection, results)
+    val top = sel.filter(col("rank") < lit(t)).select("query", "shard")
     sortedByQueryScore(
-      results.join(broadcast(top), Seq("query", "shard"), "inner"),
+      res.join(broadcast(top), Seq("query", "shard"), "inner"),
       queryDomain)
   }
 
@@ -129,7 +182,8 @@ object SelectiveSearch {
       s"decay factor must be in (0, 1], got $decayFactor")
     ensureHasColumns(selection, Seq("rank", "query", "shard"))
     ensureHasColumns(results, Seq("score", "query", "shard", "bucket"))
-    val spark = results.sparkSession
+    val Seq(selIn, res) =
+      homed(queryDomain.isDefined && driverHeld(selection), selection, results)
     // The reference takes a scalar max(bucket) first (reference :147).
     // A driver `first()` would serialize that full-column agg before
     // any other work; instead numBuckets rides IN-PLAN from a one-row
@@ -143,7 +197,7 @@ object SelectiveSearch {
     // and silently emptying the output where the reference's driver
     // `first().getAs[Number]` form failed loudly — guard in-plan (the
     // Lm.bigramLmPlan pattern: raise_error inside the one-row frame).
-    val nb = results.agg(max(col("bucket")).as("__maxb"))
+    val nb = res.agg(max(col("bucket")).as("__maxb"))
       .select(when(col("__maxb").isNotNull,
           (col("__maxb") + lit(1)).cast("double"))
         .otherwise(raise_error(
@@ -153,7 +207,7 @@ object SelectiveSearch {
     // budgets computed DIRECTLY on the filtered selection rows from
     // the one-row nb broadcast — a separate rank -> budget lookup
     // frame would be one more broadcast materialization round in the
-    // chain (nb -> lookup -> sel -> join; JobGapProbe round 13
+    // chain (nb -> lookup -> sel -> join; SCALING.md round 13
     // counted each round at 40-95 ms of driver gap at toy scale).
     // The fold expression is shared with [[decayBudgetLookup]], which
     // PropertiesSuite pins against the driver recurrence.
@@ -163,11 +217,11 @@ object SelectiveSearch {
     // `rank < t` would instead feed the fold an empty repeat array
     // and hand such rows the full ceil(nb) budget. Keep the join-era
     // domain semantics explicit.
-    val sel = selection.filter(col("rank").between(lit(0), lit(t - 1)))
+    val sel = selIn.filter(col("rank").between(lit(0), lit(t - 1)))
       .crossJoin(broadcast(nb))
       .select(col("query"), col("shard"),
         decayBudgetExpr(decayFactor).as("buckets"))
-    val joined = results.join(broadcast(sel), Seq("query", "shard"), "inner")
+    val joined = res.join(broadcast(sel), Seq("query", "shard"), "inner")
     sortedByQueryScore(
       joined.filter(col("bucket") < col("buckets")).drop("buckets"),
       queryDomain)
@@ -203,10 +257,13 @@ object SelectiveSearch {
       queryDomain: Option[Int] = None): DataFrame = {
     ensureHasColumns(selection, Seq("rank", "query", "shard", "bucket"))
     ensureHasColumns(results, Seq("score", "query", "shard", "bucket"))
-    val resolved = BucketResolver.resolveBucketSelection(selection, t)
-      .select("query", "shard", "bucket")
+    val Seq(resolved, res) = {
+      val r = BucketResolver.resolveBucketSelection(selection, t)
+        .select("query", "shard", "bucket")
+      homed(queryDomain.isDefined && driverHeld(r), r, results)
+    }
     sortedByQueryScore(
-      results.join(broadcast(resolved), Seq("query", "shard", "bucket"), "inner"),
+      res.join(broadcast(resolved), Seq("query", "shard", "bucket"), "inner"),
       queryDomain)
   }
 
@@ -286,22 +343,20 @@ object SelectiveSearch {
     val withBuckets = numBuckets.isDefined
     val groupBy = if (withBuckets) Seq("query", "shard", "bucket") else Seq("query", "shard")
     val numSteps = numShards * numBuckets.getOrElse(1)
+    ensureHasColumns(shards, groupBy :+ (if (sort) "shard_score" else "rank"))
+    val Seq(shardsIn, res) = homed(driverHeld(shards), shards, results)
     val ranked =
       if (sort) {
-        ensureHasColumns(shards, groupBy :+ "shard_score")
         val w = Window.partitionBy(col("query"))
           .orderBy(col("shard_score").desc +: groupBy.drop(1).map(col(_).asc): _*)
-        shards.withColumn("rank", row_number().over(w) - 1)
-      } else {
-        ensureHasColumns(shards, groupBy :+ "rank")
-        shards
-      }
+        shardsIn.withColumn("rank", row_number().over(w) - 1)
+      } else shardsIn
     val sel = ranked.select((groupBy :+ "rank").map(col): _*)
     val relCols = measures.map(_.column).distinct
     // rank >= numSteps rows can't land in any step — drop before the
     // shuffle. Repartition and sort on the uncast input columns, so a
     // query-clustered input needs no exchange, only the local sort.
-    val prepared = results.join(broadcast(sel), groupBy, "inner")
+    val prepared = res.join(broadcast(sel), groupBy, "inner")
       .filter(col("rank") < numSteps)
       .repartition(col("query"))
       .sortWithinPartitions(col("query"), col("global_rank"))
@@ -359,7 +414,7 @@ object SelectiveSearch {
         def hasNext: Boolean = { advance(); pending.hasNext }
         def next(): Row = { advance(); pending.next() }
       }
-    }(outEnc).transform(sortedMatrix)
+    }(outEnc).transform(sortedInOnePartition(_, "query", "step"))
   }
 
   /** Reference-shaped per-step loop (union of [[evaluateStep]] plans).
@@ -380,7 +435,7 @@ object SelectiveSearch {
     (1 to numSteps)
       .map(step => evaluateStep(ranked, results, measures, step, withBuckets))
       .reduce(_.unionByName(_))
-      .transform(sortedMatrix)
+      .transform(sortedInOnePartition(_, "query", "step"))
   }
 
   // ---------------------------------------------------------------------
@@ -525,10 +580,18 @@ object SelectiveSearch {
     * `cutoff` per query (reference: dataproc/selectivesearch.py:193-202).
     *
     * Pure (does not mutate input — reference quirk Q4) and writes a
-    * single file for byte-level parity with `to_csv`: Spark writes a
-    * directory, then the lone part file is moved to `path`. `title`
-    * stands in for pandas' input-order tie handling in
-    * `rank(method='first')`.
+    * single file for byte-level parity with `to_csv`. `title` stands
+    * in for pandas' input-order tie handling in `rank(method='first')`.
+    *
+    * The run is written by the driver: the TREC frame is |Q| x cutoff
+    * rows (the bound [[trecFrameTopK]]'s single-partition sort already
+    * relies on), so it is collected (in one job when `results` lives
+    * on the AQE-off session, as a select output over a driver-held
+    * selection with a known domain does) and written to `path` through Spark's own CSV row generator with the
+    * options `write.option("sep", "\t").csv` takes
+    * ([[org.apache.spark.sql.graft.DriverCsv]]) — the bytes of the
+    * part file `coalesce(1).write.csv` would write, without its write
+    * stage, output committer, temporary directory and rename.
     */
   def toTrec(results: DataFrame, path: String, cutoff: Int = 1000): Unit = {
     // validate before the routing check below reads results.schema
@@ -544,29 +607,25 @@ object SelectiveSearch {
       if (cutoff > 0 && results.schema("score").dataType == DoubleType)
         trecFrameTopK(results, cutoff)
       else trecFrame(results, cutoff)
-    frame
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("sep", "\t").option("header", "false")
-      .csv(path + ".tmpdir")
-    moveSinglePartFile(results.sparkSession, path + ".tmpdir", path)
+    DriverCsv.write(frame, path, Map("sep" -> "\t", "header" -> "false"))
   }
 
   /** The TREC frame itself (exposed for testing / further composition):
     * 0-based per-query rank by (score desc, title asc), `iter='Q0'`,
     * `run_id='null'`, rank < cutoff, sorted by (query, rank)
-    * (reference: dataproc/selectivesearch.py:195-201).
+    * (reference: dataproc/selectivesearch.py:195-201). The |Q| x cutoff
+    * rows that survive the rank filter are sorted in one partition.
     */
   def trecFrame(results: DataFrame, cutoff: Int = 1000): DataFrame = {
     ensureHasColumns(results, Seq("query", "score", "title"))
     val w = Window.partitionBy(col("query"))
       .orderBy(col("score").desc, col("title").asc)
-    results
+    onItsSession(results)
       .withColumn("rank", (row_number().over(w) - 1).cast("int"))
       .withColumn("iter", lit("Q0"))
       .withColumn("run_id", lit("null"))
       .filter(col("rank") < lit(cutoff))
-      .orderBy(col("query").asc, col("rank").asc)
+      .transform(sortedInOnePartition(_, "query", "rank"))
       .select("query", "iter", "title", "rank", "score", "run_id")
   }
 
@@ -590,31 +649,41 @@ object SelectiveSearch {
     * use [[trecFrame]] if yours somehow do not.
     *
     * The (query, rank) order comes from sorting the |Q| aggregated
-    * rows — one per query — in a single partition
-    * ([[graft.core.StaticRange.boundedSorted]]) BEFORE the explode,
-    * which emits each query's heap in rank order: a global `orderBy`
-    * over the |Q| x cutoff exploded rows would add a range-sampling
-    * job and a range exchange per export.
+    * rows — one per query — BEFORE the explode, which emits each
+    * query's heap in rank order: a global `orderBy` over the |Q| x
+    * cutoff exploded rows would add a range-sampling job and a range
+    * exchange per export. In general the aggregated rows are sorted
+    * in a single partition ([[graft.core.StaticRange.boundedSorted]]).
+    *
+    * A select-family input ending in its known-query-domain sort is
+    * read without the local sort
+    * ([[graft.core.StaticRange.routedUnsorted]]): the aggregate groups
+    * by (query, route pid), so it runs in the route's own reduce tasks
+    * with no exchange of its own, each query's rows meet in one task
+    * (its heap reduces them all, where a map-side heap over unrouted
+    * rows ships up to cutoff rows per task), and since the route's
+    * partitions hold contiguous query ranges in partition order, a
+    * per-partition sort of the heaps orders the output. The route's
+    * guard still fails an id outside the domain.
     */
   def trecFrameTopK(results: DataFrame, cutoff: Int = 1000): DataFrame = {
     ensureHasColumns(results, Seq("query", "score", "title"))
-    results
-      .groupBy(col("query"))
-      .agg(graft.functions.TopKFunctions
-        .top_k_tag(col("score").cast("double"), col("title"), cutoff).as("top"))
-      .transform(StaticRange.boundedSorted(_, col("query")))
+    val input = onItsSession(results)
+    val topK = graft.functions.TopKFunctions
+      .top_k_tag(col("score").cast("double"), col("title"), cutoff).as("top")
+    val heaps = StaticRange.routedUnsorted(input, "__pid") match {
+      // the route's reduce tasks aggregate, and its partitions hold
+      // contiguous query ranges in partition order, so sorting each
+      // partition orders them all
+      case Some(routed) => routed.groupBy(col("query"), col("__pid")).agg(topK)
+        .sortWithinPartitions(col("query"))
+      case None => input.groupBy(col("query")).agg(topK)
+        .transform(StaticRange.boundedSorted(_, col("query")))
+    }
+    heaps
       .select(col("query"), posexplode(col("top")))
       .select(col("query"), lit("Q0").as("iter"),
         col("col.tag").as("title"), col("pos").cast("int").as("rank"),
         col("col.score").as("score"), lit("null").as("run_id"))
-  }
-
-  private def moveSinglePartFile(spark: SparkSession, dir: String, dest: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = fs.globStatus(new Path(dir, "part-*")).head.getPath
-    fs.delete(new Path(dest), false)
-    fs.rename(part, new Path(dest))
-    fs.delete(new Path(dir), true)
   }
 }

@@ -64,6 +64,7 @@ object DatasetBridge {
     */
   def transplant(df: DataFrame, target: org.apache.spark.sql.SparkSession): DataFrame = {
     val t = target.asInstanceOf[SparkSession]
+    if (df.sparkSession eq t) return df
     df.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         Dataset.ofRows(t, LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
@@ -71,6 +72,14 @@ object DatasetBridge {
       case plan => Dataset.ofRows(t, plan)
     }
   }
+
+  /** A frame of an analyzed `plan` on `session` (a rewrite of a frame's
+    * own analyzed plan, e.g. [[graft.core.StaticRange]] dropping a sort
+    * an order-blind consumer does not need).
+    */
+  def ofPlan(session: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    Dataset.ofRows(session.asInstanceOf[SparkSession], plan)
 
   /** Eager local checkpoint that drops origin statistics but keeps the
     * materialized RDD, output attributes, partitioning, and ordering.

@@ -261,6 +261,49 @@ class IoSuite extends SparkSuite {
     }
   }
 
+  /** The bytes toTrec writes for `results`, and the bytes of the one
+    * part file `coalesce(1).write.csv` writes for the same TREC frame.
+    */
+  private def trecBytes(name: String, results: org.apache.spark.sql.DataFrame,
+      cutoff: Int): (Array[Byte], Array[Byte]) = {
+    SelectiveSearch.toTrec(results, s"$work/$name.trec", cutoff)
+    val frame =
+      if (cutoff > 0 && results.schema("score").dataType == org.apache.spark.sql.types.DoubleType)
+        SelectiveSearch.trecFrameTopK(results, cutoff)
+      else SelectiveSearch.trecFrame(results, cutoff)
+    frame.coalesce(1).write.mode(SaveMode.Overwrite)
+      .option("sep", "\t").option("header", "false").csv(s"$work/$name.sparkcsv")
+    val parts = Files.list(Paths.get(s"$work/$name.sparkcsv")).toArray.map(_.toString)
+      .filter(_.split('/').last.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(", "))
+    (Files.readAllBytes(Paths.get(s"$work/$name.trec")), Files.readAllBytes(Paths.get(parts.head)))
+  }
+
+  test("toTrec writes the bytes Spark's CSV writer writes for the same frame") {
+    val titles = Seq("tab\there", "a \"quoted\" title", "two\nlines", "", "naïve 東京 ü",
+      "comma,semi;colon", " padded ", "\\back")
+    val scores = Seq(-0.0, 1e-7, 1e21, 0.1 + 0.2, 3.5, -2.25, 1e-300, 7.0)
+    val rows = for (q <- 0 until 2; (t, i) <- titles.zipWithIndex)
+      yield (q, scores(i) + q, s"$t-$q")
+    val results = rows.toDF("query", "score", "title")
+    // plain title edge cases, exact-score edge cases on one query each
+    val edge = titles.zip(scores).map { case (t, sc) => (0, sc, t) }
+      .toDF("query", "score", "title")
+    val cases = Seq(
+      ("mixed", results, 5),
+      ("edge", edge, 100),
+      ("decimal", edge.withColumn("score", $"score".cast("decimal(38,10)")), 4),
+      ("int", Seq((0, 9, "docA"), (0, -3, "doc\tB"), (1, 0, "")).toDF("query", "score", "title"),
+        10),
+      ("cutoff0", results, 0))
+    for ((name, df, cutoff) <- cases) {
+      val (driver, written) = trecBytes(name, df, cutoff)
+      assert(driver.sameElements(written),
+        s"$name:\n${new String(driver, "UTF-8")}\n--- vs ---\n${new String(written, "UTF-8")}")
+    }
+    assert(trecBytes("cutoff0b", results, 0)._1.isEmpty, "cutoff = 0 must write an empty file")
+  }
+
   test("Tables.events normalizes both on-disk ts layouts to long nanos") {
     // the events table has shipped with ts as long epoch-nanos
     // (TIMESTAMP(NANOS) read raw) and as timestamp[us]/NTZ (the

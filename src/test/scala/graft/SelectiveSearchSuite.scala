@@ -210,11 +210,32 @@ class SelectiveSearchSuite extends SparkSuite {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
 
+  private lazy val work = java.nio.file.Files.createTempDirectory("graft-ss").toString
+
+  /** The two TREC exports of a select output, each as a thunk. The
+    * aggregate reads the select rows without their sort, so these pin
+    * that the query-domain guard survives the sort's removal.
+    */
+  private def exports(name: String, df: DataFrame): Seq[(String, () => Any)] = {
+    val titled = df.withColumn("title", org.apache.spark.sql.functions.concat(
+      org.apache.spark.sql.functions.lit("d"), $"shard", $"bucket"))
+    val path = s"$work/$name.trec"
+    Seq(s"trecFrameTopK($name)" -> (() => SelectiveSearch.trecFrameTopK(titled, 2).collect()),
+      s"toTrec($name)" -> (() => {
+        SelectiveSearch.toTrec(titled, path, 2)
+        assert(false, s"$path was written")
+      }))
+  }
+
   test("queryDomain: a query id outside [0, nq) fails loudly") {
     // query 1 == nq for nq = 1
     for ((name, df) <- selectCalls(selection, bucketSelection, results, Some(1))) {
       val err = intercept[Exception](df.collect())
       assert(errorChain(err).contains("sortByKnownDomain"), s"$name: ${errorChain(err)}")
+      for ((export, run) <- exports(name, df)) {
+        val err = intercept[Exception](run())
+        assert(errorChain(err).contains("sortByKnownDomain"), s"$export: ${errorChain(err)}")
+      }
     }
     // a negative id, with its own selection rows so it reaches the sort
     def negated(df: DataFrame) = df.union(df.filter($"query" === 0)
@@ -223,6 +244,68 @@ class SelectiveSearchSuite extends SparkSuite {
         negated(results), Some(2))) {
       val err = intercept[Exception](df.collect())
       assert(errorChain(err).contains("sortByKnownDomain"), s"$name: ${errorChain(err)}")
+      for ((export, run) <- exports(name, df)) {
+        val err = intercept[Exception](run())
+        assert(errorChain(err).contains("sortByKnownDomain"), s"$export: ${errorChain(err)}")
+      }
+    }
+  }
+
+  test("TREC exports read select outputs without their sort, same rows") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    for ((name, df) <- selectCalls(selection, bucketSelection, results, Some(2))) {
+      val titled = df.withColumn("title", org.apache.spark.sql.functions.concat(
+        org.apache.spark.sql.functions.lit("d"), $"shard", $"bucket"))
+      val topK = SelectiveSearch.trecFrameTopK(titled, 3)
+      val plan = topK.queryExecution.executedPlan
+      // under the aggregates: no sort, and one exchange — the select's
+      // own query-domain route, which the aggregate reuses
+      val underAgg = plan.collect { case a: BaseAggregateExec => a.child }
+      assert(underAgg.nonEmpty, plan.toString)
+      underAgg.flatMap(_.collect { case s: SortExec => s }).foreach(s =>
+        fail(s"$name: sort under the aggregate: $plan"))
+      // (the max(bucket) side of selectWithDecay shuffles inside its
+      // own broadcast)
+      def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+        case _: BroadcastExchangeExec => Nil
+        case e: ShuffleExchangeExec => e +: shuffles(e.child)
+        case other => other.children.flatMap(shuffles)
+      }
+      val exchanges = shuffles(underAgg.head)
+      assert(exchanges.size == 1 &&
+        exchanges.head.outputPartitioning.toString.contains("shufflepartitionidpassthrough"),
+        s"$name: $plan")
+      assert(topK.collect().toSeq == SelectiveSearch.trecFrame(titled, 3).collect().toSeq, name)
+    }
+  }
+
+  test("TREC exports of routed select outputs keep (query, rank) order, nq = 1, 3, 4, 10") {
+    // the aggregate runs in the route's partitions, whose partition
+    // order is query order: the window form's single global sort is
+    // the reference
+    val rnd = new scala.util.Random(13)
+    for (nq <- Seq(1, 3, 4, 10)) {
+      val cells = for (q <- 0 until nq; s <- 0 until 3; b <- 0 until 2) yield (q, s, b)
+      val res = cells.flatMap { case (q, s, b) =>
+        (0 until 4).map(d => (q, s, b, rnd.nextInt(5).toDouble, ((q * 3 + s) * 2 + b) * 4L + d))
+      }.toDF("query", "shard", "bucket", "score", "gdocid").repartition(3)
+      val sel = (for (q <- 0 until nq) yield
+        rnd.shuffle((0 until 3).toList).zipWithIndex.map { case (s, r) => (q, s, r) })
+        .flatten.toDF("query", "shard", "rank")
+      val bSel = (for (q <- 0 until nq) yield
+        rnd.shuffle(cells.filter(_._1 == q).toList).zipWithIndex
+          .map { case ((_, s, b), r) => (q, s, b, r) })
+        .flatten.toDF("query", "shard", "bucket", "rank")
+      for ((name, df) <- selectCalls(sel, bSel, res, Some(nq))) {
+        val titled = df.withColumn("title",
+          org.apache.spark.sql.functions.concat(org.apache.spark.sql.functions.lit("d"),
+            $"gdocid"))
+        val got = SelectiveSearch.trecFrameTopK(titled, 4).collect().toSeq
+        assert(got.nonEmpty && got == SelectiveSearch.trecFrame(titled, 4).collect().toSeq,
+          s"$name nq=$nq")
+      }
     }
   }
 
@@ -252,6 +335,104 @@ class SelectiveSearchSuite extends SparkSuite {
         assert(keys == keys.sorted, s"$name nq=$nq out of order")
       }
     }
+  }
+
+  test("one Spark job per action on the loader fixture") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, concat, lit, row_number}
+    val dir = s"$work/loaders"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val (nq, ns, nb) = (3, 4, 2)
+    def scores(name: String, n: Int) = {
+      val path = s"$dir/$name"
+      java.nio.file.Files.write(java.nio.file.Paths.get(path),
+        (0 until n).map(i => ((i * 37) % 11).toString).mkString("\n").getBytes)
+      path
+    }
+    val queries = 0L until nq.toLong
+    val shardSel = SelectiveSearch.loadShardSelection(spark, queries, ns, scores("s.csv", nq * ns))
+    val bucketSel = SelectiveSearch.loadBucketSelection(spark, queries, ns, nb,
+      scores("b.csv", nq * ns * nb))
+    (for (q <- 0 until nq; s <- 0 until ns; b <- 0 until nb; d <- 0 until 3)
+      yield (q, s, b, (q * 7 + s * 5 + d) % 13 * 1.0, q * 1000L + s * 100 + b * 10 + d, d % 2))
+      .toDF("query", "shard", "bucket", "score", "gdocid", "rel")
+      .write.mode("overwrite").parquet(s"$dir/results")
+    val res = spark.read.parquet(s"$dir/results")
+    val ranked = res.withColumn("global_rank", row_number().over(
+      Window.partitionBy(col("query")).orderBy(col("score").desc, col("gdocid").asc)))
+    def titled(df: DataFrame) = df.withColumn("title", concat(lit("d"), col("gdocid")))
+    val p2 = Seq(SelectiveSearch.precisionAt(2))
+    // every input but the parquet results is a local relation, so each
+    // action is its one job: no broadcast job, no re-planning round
+    val actions: Seq[(String, () => Any)] = Seq(
+      "select" -> (() => SelectiveSearch.select(shardSel, res, 2, Some(nq)).collect()),
+      "selectBuckets" -> (() => SelectiveSearch.selectBuckets(bucketSel, res, 3, Some(nq))
+        .collect()),
+      "evaluate" -> (() => SelectiveSearch.evaluate(shardSel, ranked, p2, ns).collect()),
+      "evaluate buckets" -> (() => SelectiveSearch.evaluate(bucketSel, ranked, p2, ns,
+        numBuckets = Some(nb)).collect()),
+      "trecFrameTopK" -> (() => SelectiveSearch.trecFrameTopK(
+        titled(SelectiveSearch.select(shardSel, res, 2, Some(nq))), 5).collect()),
+      "toTrec" -> (() => SelectiveSearch.toTrec(
+        titled(SelectiveSearch.selectBuckets(bucketSel, res, 3, Some(nq))),
+        s"$dir/out/run.trec", 5)))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/out"))
+    for ((name, action) <- actions) {
+      action() // warm: the first action of a plan shape may compile code
+      assert(jobsDuring(action())._2 == 1, name)
+    }
+    // the export is one driver-written file: no Spark output directory,
+    // committer marker or temporary directory beside it
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/out")).toArray
+      .map(_.toString.split('/').last).filterNot(_.endsWith(".crc")).toSeq
+    assert(left == Seq("run.trec"), left)
+    // selectWithDecay's max(bucket) rides a broadcast of a non-local
+    // frame (the budget side), one job each beyond its own
+    val decay = () => SelectiveSearch.selectWithDecay(shardSel, res, 3, 0.5, Some(nq)).collect()
+    decay()
+    assert(jobsDuring(decay())._2 == 3, "selectWithDecay")
+  }
+
+  test("only driver-held selections with a known domain move to the AQE-off session") {
+    import graft.core.SessionTuning.isBounded
+    val dir = s"$work/sessions"
+    selection.write.mode("overwrite").parquet(s"$dir/sel")
+    bucketSelection.write.mode("overwrite").parquet(s"$dir/bsel")
+    val computedSel = spark.read.parquet(s"$dir/sel")
+    val computedBSel = spark.read.parquet(s"$dir/bsel")
+    val ranked = results.withColumn("rel", org.apache.spark.sql.functions.lit(1))
+      .withColumn("global_rank", org.apache.spark.sql.functions.row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query").orderBy($"score".desc)))
+    def titled(df: DataFrame) = df.withColumn("title",
+      org.apache.spark.sql.functions.concat(org.apache.spark.sql.functions.lit("d"), $"shard"))
+    val p1 = Seq(SelectiveSearch.precisionAt(1))
+    // driver-held selection, known domain: the AQE-off session, and the
+    // TREC frames of its outputs stay there
+    for ((name, df) <- selectCalls(selection, bucketSelection, results, Some(2))) {
+      assert(isBounded(df.sparkSession), name)
+      assert(isBounded(SelectiveSearch.trecFrameTopK(titled(df), 2).sparkSession), name)
+      assert(isBounded(SelectiveSearch.trecFrame(titled(df), 2).sparkSession), name)
+    }
+    assert(isBounded(SelectiveSearch.evaluate(selection, ranked, p1, 3).sparkSession))
+    // no domain (a range sort), or a selection Spark computes (its
+    // broadcast is a job AQE overlaps): the caller's session, and so
+    // for the TREC frames over them. selectBuckets resolves any
+    // selection on the driver, so only the domain decides there.
+    val kept = selectCalls(selection, bucketSelection, results, None) ++
+      selectCalls(computedSel, computedBSel, results, Some(2))
+        .filterNot(_._1 == "selectBuckets")
+    for ((name, df) <- kept) {
+      assert(df.sparkSession eq spark, name)
+      assert(SelectiveSearch.trecFrameTopK(titled(df), 2).sparkSession eq spark, name)
+    }
+    assert(isBounded(SelectiveSearch.selectBuckets(computedBSel, results, 3, Some(2))
+      .sparkSession))
+    assert(SelectiveSearch.evaluate(computedSel, ranked, p1, 3).sparkSession eq spark)
+    // same rows on either session
+    assert(SelectiveSearch.select(computedSel, results, 2, Some(2)).collect().toSeq ==
+      SelectiveSearch.select(selection, results, 2, Some(2)).collect().toSeq)
+    assert(SelectiveSearch.evaluate(computedSel, ranked, p1, 3).collect().toSeq ==
+      SelectiveSearch.evaluate(selection, ranked, p1, 3).collect().toSeq)
   }
 
   test("sortByKnownDomain: a null key fails the in-plan guard") {
