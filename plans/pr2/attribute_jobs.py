@@ -2,6 +2,7 @@
 """Per-job attribution, or a timeline, of one traced benchmark op.
 
     python3 plans/pr2/attribute_jobs.py SUMMARY_JSON [OP_INDEX] [--timeline]
+    python3 plans/pr2/attribute_jobs.py SUMMARY_JSON --kind read|write
 
 SUMMARY_JSON is the `summary.json` a traced run
 (`perfbench/run.py --trace 1`) leaves in
@@ -17,10 +18,17 @@ from the op's start, with the driver gaps between them: the time inside
 a `spark.execute` span when no job runs (the benchmark's
 `spark.driver_gap_ms` is their sum).
 
+--kind read|write summarizes every traced op of that kind (the kinds
+`curation_ingest` records) instead of one: per call, the median over
+those ops of its jobs, its wall time (the call's own spans) and the
+task-ms of its jobs; a call that ran no job in an op counts 0 there.
+The `op` line gives the same medians for whole ops.
+
 An untraced run's summary has an empty `trace`; that is reported, not
 attributed.
 """
 import json
+import statistics
 import sys
 from collections import defaultdict
 
@@ -70,10 +78,55 @@ def load(path, op_arg):
     return summary, op, root, inside, jobs, stages
 
 
+def innermost(inside, t, pred):
+    """The name of the shortest span of `inside` open at `t` whose name passes `pred`."""
+    open_ = [s for s in inside if s["start"] <= t <= s["end"] and pred(s["name"])]
+    return min(open_, key=lambda s: s["end"] - s["start"])["name"] if open_ else "-"
+
+
+def calls_of(inside, jobs, stages):
+    """{call: [jobs, wall_ms, task_ms]} of one op: its jobs attributed as
+    in `attribute`, wall from the call's own spans."""
+    out = defaultdict(lambda: [0, 0.0, 0])
+    for j in jobs:
+        acc = out[innermost(inside, j["start"], lambda n: not n.startswith("spark."))]
+        acc[0] += 1
+        acc[2] += sum(stages[s]["task_ms"] for s in j["stages"] if s in stages)
+    for name in {s["name"] for s in inside if not s["name"].startswith(("spark.", "core.lookup"))}:
+        out[name][1] = union([(s["start"], s["end"]) for s in inside if s["name"] == name])
+    return out
+
+
+def by_kind(path, kind):
+    summary = json.load(open(path))
+    trace = summary.get("trace") or {}
+    spans = trace.get("spans") or []
+    if not spans or "jobs" not in trace:
+        sys.exit(f"{path}: untraced run (its trace is empty); "
+                 "rerun with `perfbench/run.py --trace 1`")
+    kinds = {o["index"]: o["kind"] for o in summary.get("ops", [])}
+    stages = {s["stage"]: s for s in trace.get("stages", [])}
+    roots = [s for s in spans if s["name"] == "op" and kinds.get(s["op"]) == kind]
+    if not roots:
+        sys.exit(f"{path}: no traced op of kind {kind!r}; kinds: {sorted(set(kinds.values()))}")
+    per_op = []
+    for root in roots:
+        inside = [s for s in spans if s["op"] == root["op"] and s["name"] != "op"]
+        jobs = [j for j in trace["jobs"] if root["start"] <= j["start"] <= root["end"]]
+        calls = calls_of(inside, jobs, stages)
+        calls["op"] = [len(jobs), root["end"] - root["start"],
+                       sum(stages[s]["task_ms"] for j in jobs for s in j["stages"] if s in stages)]
+        per_op.append(calls)
+    print(f"# {summary['workload']} seed={summary['seed']} kind={kind} "
+          f"ops={[r['op'] for r in roots]}")
+    print("call\tops\tjobs_p50\twall_ms_p50\ttask_ms_p50")
+    for call in sorted({c for calls in per_op for c in calls}, key=lambda c: (c == "op", c)):
+        rows = [calls.get(call, [0, 0.0, 0]) for calls in per_op]
+        med = [statistics.median(r[i] for r in rows) for i in range(3)]
+        print(f"{call}\t{len(rows)}\t{med[0]:g}\t{med[1]:.0f}\t{med[2]:g}")
+
+
 def attribute(summary, op, root, inside, jobs, stages):
-    def innermost(t, pred):
-        open_ = [s for s in inside if s["start"] <= t <= s["end"] and pred(s["name"])]
-        return min(open_, key=lambda s: s["end"] - s["start"])["name"] if open_ else "-"
 
     cols = ("job", "call", "phase", "stages", "tasks", "task_ms", "wall_ms", "shuffle_write_b")
     print(f"# {summary['workload']} seed={summary['seed']} op={op} "
@@ -81,8 +134,8 @@ def attribute(summary, op, root, inside, jobs, stages):
     print("\t".join(cols))
     per_call = defaultdict(lambda: [0, 0, 0, 0, 0])
     for j in jobs:
-        call = innermost(j["start"], lambda n: not n.startswith("spark."))
-        phase = innermost(j["start"], lambda n: n.startswith("spark."))
+        call = innermost(inside, j["start"], lambda n: not n.startswith("spark."))
+        phase = innermost(inside, j["start"], lambda n: n.startswith("spark."))
         st = [stages[s] for s in j["stages"] if s in stages]
         tasks = sum(s["tasks"] for s in st)
         task_ms = sum(s["task_ms"] for s in st)
@@ -131,6 +184,11 @@ def main():
     args = [a for a in sys.argv[1:] if a != "--timeline"]
     if not args:
         sys.exit(__doc__)
+    if "--kind" in args:
+        i = args.index("--kind")
+        if i + 1 >= len(args) or args[i + 1] not in ("read", "write"):
+            sys.exit("--kind takes read or write")
+        return by_kind(args[0], args[i + 1])
     loaded = load(args[0], args[1] if len(args) > 1 else None)
     (timeline if "--timeline" in sys.argv else attribute)(*loaded)
 

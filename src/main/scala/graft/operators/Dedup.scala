@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -296,7 +296,20 @@ object Dedup {
       .join(tagged.select(col(idCol), col("__new")), Seq(idCol))
       .transform(graft.core.OpCaches.persistTracked)
     val banded = bandRows(signed, bands, r, col(idCol), col("__new"))
-    bandProbe(banded.filter(col("__new")), banded, signed, idCol, numHashes)
+    // every batch band row joined to its bucket, the pairs distinct'd as
+    // bare normalized (id_a < id_b), then the signatures joined back
+    // once per pair for the agreement estimate
+    banded.filter(col("__new")).select(col("band_idx"), col("band_key"),
+        col(idCol).as("id_x"))
+      .join(banded.select(col("band_idx"), col("band_key"), col(idCol).as("id_y")),
+        Seq("band_idx", "band_key"))
+      .filter(col("id_x") =!= col("id_y"))
+      .select(least(col("id_x"), col("id_y")).as("id_a"),
+        greatest(col("id_x"), col("id_y")).as("id_b"))
+      .distinct()
+      .join(signed.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(signed.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
   }
 
   /** `signed`'s rows exploded to one row per LSH band: the `carry`
@@ -307,27 +320,6 @@ object Dedup {
     signed.select(carry :+ posexplode(lshBandKeys(col("sig"), bands, r)): _*)
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_key")
-
-  /** The incremental band probe shared by the inline and stored
-    * forms: every `fresh` band row joined to the `all` band rows of
-    * its (band_idx, band_key) bucket, the pairs distinct'd as bare
-    * normalized (id_a < id_b), then the signatures of `sigs`
-    * (idCol, sig) joined back once per pair for the agreement
-    * estimate.
-    */
-  private def bandProbe(fresh: DataFrame, all: DataFrame, sigs: DataFrame,
-      idCol: String, numHashes: Int): DataFrame =
-    fresh.select(col("band_idx"), col("band_key"), col(idCol).as("id_x"))
-      .join(all.select(
-        col("band_idx"), col("band_key"), col(idCol).as("id_y")),
-        Seq("band_idx", "band_key"))
-      .filter(col("id_x") =!= col("id_y"))
-      .select(least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-      .distinct()
-      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), sigAgreement(numHashes).as("est_jaccard"))
 
   /** [[incrementalMinHashCandidates]] with exact duplicates contracted
     * across batch ∪ corpus before signing/banding — the incremental
@@ -521,12 +513,16 @@ object Dedup {
 
   /** [[incrementalMinHashCandidates]] served from the stored band
     * index — the steady-state ingest gate: the corpus tokenize +
-    * signature + banding pass runs ZERO times per batch; per call the
-    * BATCH computes its own signatures (batch-bounded), probes its
-    * band keys against batch ∪ index rows, and the agreement verify
-    * joins signatures from the batch frame and the index bytes.
-    * Output-identical to the inline form at the same knobs
-    * (suite-pinned); same disjoint-id contract as the inline form.
+    * signature + banding pass runs ZERO times per batch. Per call the
+    * BATCH signs itself row-locally and probes the stored band rows
+    * with its own (band_idx, band_key) set ([[storedBandProbe]]): the
+    * batch side is broadcast, every stored row is matched map-side,
+    * and a matched row carries the signature the estimate needs, so
+    * no corpus-sized data is shuffled, merged or aggregated per call.
+    * The batch is the broadcast side (on the collapsed route, rows the
+    * driver holds), so it must be batch-sized. Output-identical to the
+    * inline form at the same knobs (suite-pinned); same disjoint-id
+    * contract as the inline form.
     *
     * ROUTING (r19): the raw band index carries the copy-quadratic
     * probe the inline form escaped in r18 — |new-in-bucket| × bucket
@@ -553,21 +549,13 @@ object Dedup {
       return incrementalMinHashCandidatesPrebuiltCollapsed(corpus,
         corpusPath, newDocs, textCol, idCol, n, numHashes, bands,
         variant, force)
-    val r = numHashes / bands
     val index = storedMinHashIndex(corpus, corpusPath, textCol, idCol,
       n, numHashes, bands, variant, force)
-    val batchSigned = minHashSignatures(newDocs, textCol, idCol, n, numHashes)
-      .transform(graft.core.OpCaches.persistTracked)
-    val batchBanded = bandRows(batchSigned, bands, r, col(idCol))
-      .select(col("band_idx"), col("band_key"), col(idCol))
-    // candidate ids are batch-bounded, so only they pass through the
-    // index-side signature dedup (duplicate rows of a doc carry an
-    // identical sig — first() is content-deterministic)
-    bandProbe(batchBanded,
-      batchBanded.union(index.select(col("band_idx"), col("band_key"), col(idCol))),
-      batchSigned.select(col(idCol), col("sig"))
-        .union(index.groupBy(col(idCol)).agg(first(col("sig")).as("sig"))),
-      idCol, numHashes)
+    val batch = newDocs.select(col(idCol),
+        graft.streaming.DocsStream.rowSignature(col(textCol), n, numHashes).as("sig"))
+      .filter(col("sig").isNotNull).transform(graft.core.OpCaches.persistTracked)
+    storedBandProbe(bandRows(batch, bands, numHashes / bands, col(idCol),
+      col("sig")), index, idCol, numHashes, bands)
   }
 
   /** The collapsed-index serving path behind
@@ -575,76 +563,102 @@ object Dedup {
     * the r17–r19 exact-dup collapse family. Purity argument as
     * [[incrementalMinHashCandidatesCollapsed]]: the signature is a
     * pure function of the text, so a stored REP band row stands for
-    * every copy of its content, batch content is contracted the same
-    * way per call (batch-bounded), batch groups matching stored
-    * corpus groups by `fp` merge into one mixed group, and the
-    * expansion restores exactly the pairs TOUCHING the batch —
-    * within-group (x.id < y.id, x or y new, estimate 1.0) and
-    * cross-group (member pairs of matched rep pairs, x or y new, the
-    * reps' estimate). The rep id of a mixed group is the STORED
-    * corpus rep (so its bands and signature come from index bytes,
-    * never recomputed); rep ids are only join keys between the probe
-    * and the expansion, so the choice cannot change the expanded
-    * output. Only batch-ONLY content is signed per call.
+    * every copy of its content. The batch contracts by content
+    * ([[DupCollapse.byText]]) and each distinct batch content is
+    * signed once; its rep band rows probe the stored rep band rows
+    * ([[storedBandProbe]]), and only the stored reps that matched
+    * fetch their member ids. Batch and corpus groups stay apart: batch
+    * content equal to stored content needs no merge, since identical
+    * signatures agree on every band and the probe finds that rep pair
+    * at estimate 1.0. The expansion ([[DupCollapse.touching]], batch
+    * members `nw`) then restores exactly the pairs TOUCHING the batch
+    * — within a batch group (estimate 1.0) and every member pair of a
+    * matched rep pair (the reps' estimate); rep ids are only join
+    * keys, so which member represents a group cannot change the
+    * output.
+    *
+    * EAGER and driver-held: the signed contents, the rep pairs and the
+    * matched groups are each collected at call time (one job apiece,
+    * none for an empty batch), and every later step reads them as
+    * local rows on the caller's AQE-off session
+    * ([[graft.core.SessionTuning.boundedPlan]]), whose broadcasts of
+    * local rows run no job. The returned frame lives there too: its
+    * action is one job, the expansion. Per batch that is four jobs
+    * over batch-sized data and two filtered store scans, where merging
+    * the batch into the stored groups and deduplicating the stored
+    * signatures took ~22 jobs over the whole index.
     */
   private def incrementalMinHashCandidatesPrebuiltCollapsed(
       corpus: DataFrame, corpusPath: String, newDocs: DataFrame,
       textCol: String, idCol: String, n: Int, numHashes: Int,
       bands: Int, variant: String, force: Boolean): DataFrame = {
-    val r = numHashes / bands
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
     val members = storedMinHashMembers(corpus, corpusPath, textCol, idCol,
       n, variant, force)
     val repIdx = storedMinHashRepIndexOver(corpus, corpusPath, members,
       textCol, idCol, n, numHashes, bands, variant, force)
-    // batch contraction by content — batch-bounded, one keyed pass
-    val bg = DupCollapse.byText(newDocs, DupCollapse.shingled(textCol, n),
-      textCol, idCol, "b_rep", "b_ids")
-    // merge with the stored corpus groups on content; typed empty
-    // arrays (cast from the stored/batch element type) absorb the
-    // full-outer nulls — concat(null, x) is null, not x
-    val emptyCIds = lit(Array.empty[Int]).cast(members.schema("ids").dataType)
-    val emptyBIds = lit(Array.empty[Int]).cast(
-      org.apache.spark.sql.types.ArrayType(newDocs.schema(idCol).dataType))
-    val merged = bg
-      .join(members.select(col("fp"), col("rep_id").as("c_rep"),
-        col("ids").as("c_ids")), Seq("fp"), "full_outer")
-      .select(
-        coalesce(col("c_rep"), col("b_rep")).as("rep_id"),
-        col("c_rep"), col("b_rep"),
-        sort_array(concat(
-          transform(coalesce(col("c_ids"), emptyCIds),
-            x => struct(x.as("id"), lit(false).as("nw"))),
-          transform(coalesce(col("b_ids"), emptyBIds),
-            x => struct(x.as("id"), lit(true).as("nw"))))).as("members"),
-        col("b_rep").isNotNull.as("has_new"))
-      .transform(graft.core.OpCaches.persistTracked)
-    // probe sides: mixed groups ride their STORED rep bands; batch-only
-    // groups sign their reps (batch-bounded); corpus-only groups play
-    // the corpus side from index bytes
-    val matchedNewReps = merged
-      .filter(col("b_rep").isNotNull && col("c_rep").isNotNull)
-      .select(col("c_rep").as(idCol))
-    val batchOnlyReps = merged.filter(col("c_rep").isNull)
-      .select(col("b_rep").as(idCol))
-    val corpusOnlyReps = merged.filter(col("b_rep").isNull)
-      .select(col("c_rep").as(idCol))
-    val batchRepSigned = minHashSignatures(
-      newDocs.join(batchOnlyReps, Seq(idCol), "left_semi"),
-      textCol, idCol, n, numHashes)
-      .transform(graft.core.OpCaches.persistTracked)
-    val bandCols = Seq(col(idCol), col("band_idx"), col("band_key"))
-    val newBanded = repIdx.join(matchedNewReps, Seq(idCol), "left_semi")
-      .select(bandCols: _*)
-      .union(bandRows(batchRepSigned, bands, r, col(idCol)).select(bandCols: _*))
-    val oldBanded = repIdx.join(corpusOnlyReps, Seq(idCol), "left_semi")
-      .select(bandCols: _*)
-    // rep signatures: stored (dedup the band-duplicated rows — every
-    // row of a rep carries an identical sig) ∪ batch-only
-    val sigs = repIdx.groupBy(col(idCol)).agg(first(col("sig")).as("sig"))
-      .union(batchRepSigned.select(col(idCol), col("sig")))
-    // expansion — identical shape to the inline collapsed form
-    DupCollapse.touching(merged, bandProbe(newBanded,
-      newBanded.union(oldBanded), sigs, idCol, numHashes))
+    val bounded = graft.core.SessionTuning.boundedPlan(newDocs.sparkSession)
+    def there(df: DataFrame) =
+      org.apache.spark.sql.graft.DatasetBridge.transplant(df, bounded)
+    def local(rows: Seq[Row], fields: StructField*) =
+      bounded.createDataFrame(rows.asJava, StructType(fields))
+    // the batch's distinct contents, each signed once; every copy of a
+    // content carries the same text, so first() is deterministic
+    val signedDf = DupCollapse.byText(there(newDocs),
+        DupCollapse.shingled(textCol, n), textCol, idCol,
+        Seq(first(col(textCol)).as("text")))
+      .select(col("rep_id"), col("ids"), graft.streaming.DocsStream
+        .rowSignature(col("text"), n, numHashes).as("sig"))
+      .withColumn("keys", lshBandKeys(col("sig"), bands, numHashes / bands))
+    val batch = signedDf.collect().toSeq
+    val Seq(rep, ids, sig) = Seq("rep_id", "ids", "sig").map(signedDf.schema(_))
+    val fresh = local(batch.flatMap(r => r.getSeq[String](3)
+        .zipWithIndex.map { case (k, b) => Row(b, k, r.get(0), r.get(2)) }),
+      StructField("band_idx", IntegerType, nullable = false),
+      StructField("band_key", StringType), rep.copy(name = idCol), sig)
+    val probe = storedBandProbe(fresh, there(repIdx), idCol, numHashes, bands)
+    val repPairs = probe.collect().toSeq
+    // the stored groups a batch rep paired with, fetched by key (batch
+    // rep ids are disjoint from the stored ones, so they match none)
+    val corpusGroups = there(members).select(col("rep_id"), col("ids"))
+      .filter(col("rep_id").isin(repPairs.flatMap(p => Seq(p.get(0), p.get(1))).distinct: _*))
+      .collect().toSeq
+    // batch groups (every member new) and the matched stored groups
+    val groups = local(batch.map(r => Row(r.get(0), r.get(1), true)) ++
+        corpusGroups.map(r => Row(r.get(0), r.get(1), false)),
+        rep, ids, StructField("has_new", BooleanType, nullable = false))
+      .select(col("rep_id"), transform(col("ids"),
+        x => struct(x.as("id"), col("has_new").as("nw"))).as("members"),
+        col("has_new"))
+    DupCollapse.touching(groups, local(repPairs, probe.schema.fields: _*))
+  }
+
+  /** The band probe of the stored forms: the batch's `fresh` band rows
+    * (idCol, sig, band_idx, band_key), broadcast, matched map-side
+    * against themselves and every `stored` row of a shared
+    * (band_idx, band_key) bucket. Each row carries its signature, and
+    * a pair is kept only at the first band whose keys agree (a batch
+    * pair only from its lower id), so the (id_a < id_b, est_jaccard)
+    * pairs come out unique with no shuffle or aggregate.
+    */
+  private def storedBandProbe(fresh: DataFrame, stored: DataFrame,
+      idCol: String, numHashes: Int, bands: Int): DataFrame = {
+    val keys = (sig: String) => lshBandKeys(col(sig), bands, numHashes / bands)
+    val rows = Seq(col("band_idx"), col("band_key"), col(idCol), col("sig"))
+    broadcast(fresh.select(col("band_idx"), col("band_key"),
+        col(idCol).as("id_x"), col("sig").as("sig_a"), keys("sig").as("keys_a")))
+      .join(fresh.select(rows :+ lit(false).as("stored"): _*)
+        .union(stored.select(rows :+ lit(true).as("stored"): _*))
+        .select(col("band_idx"), col("band_key"), col(idCol).as("id_y"),
+          col("sig").as("sig_b"), col("stored")), Seq("band_idx", "band_key"))
+      .filter(col("id_x") =!= col("id_y") &&
+        (col("stored") || col("id_x") < col("id_y")) &&
+        array_position(zip_with(col("keys_a"), keys("sig_b"), (a, b) => a === b),
+          true) === col("band_idx") + 1)
+      .select(least(col("id_x"), col("id_y")).as("id_a"),
+        greatest(col("id_x"), col("id_y")).as("id_b"),
+        sigAgreement(numHashes).as("est_jaccard"))
   }
 
   /** Candidate near-duplicate pairs via MinHash + LSH banding, with

@@ -21,7 +21,8 @@ import graft.functions.TextFunctions
   *    `rep_id` = the group's minimum id and `ids` = its sorted member
   *    ids. [[reps]] selects the representatives' rows.
   *  - HOW rep pairs expand to member pairs: [[undirected]] (every
-  *    member pair), [[touching]] (only pairs with a batch member) and
+  *    member pair), [[touching]] (only pairs with a batch member, over
+  *    groups that mix batch and corpus copies or keep them apart) and
   *    [[directed]] (batch × corpus); [[labels]] maps rep components
   *    back to members.
   *
@@ -105,12 +106,12 @@ private[graft] object DupCollapse {
     coalesce(size(TextFunctions.wordShingles(col(textCol), n)) > 0, lit(false))
 
   /** [[contract]] of the `keep` rows of `docs` by content:
-    * (fp, rep, ids).
+    * (fp, rep_id, ids), then any `extra` aggregates over `docs`' columns.
     */
-  def byText(docs: DataFrame, keep: Column, textCol: String, idCol: String,
-      rep: String = "rep_id", ids: String = "ids"): DataFrame =
-    contract(docs.filter(keep).select(col(idCol), fp(textCol)), Seq("fp"),
-      idCol, rep, ids)
+  def byText(docs: DataFrame, keep: Column, textCol: String,
+      idCol: String, extra: Seq[Column] = Nil): DataFrame =
+    contract(docs.filter(keep).select(col(idCol), col(textCol), fp(textCol)),
+      Seq("fp"), idCol, extra = extra)
 
   /** The rows of `df` whose id represents a `groups` row. */
   def reps(df: DataFrame, groups: DataFrame, idCol: String): DataFrame =
@@ -162,8 +163,12 @@ private[graft] object DupCollapse {
 
   /** [[undirected]] restricted to the pairs TOUCHING a batch, for the
     * minhash incremental forms (estimate 1.0 within a group): groups
-    * carry `members` = sorted (id, nw) structs, `nw` marking batch
-    * members, and `has_new`; a pair is kept iff either side is new.
+    * carry `members` = (id, nw) structs, `nw` marking batch members,
+    * and `has_new`; a pair is kept iff either side is new. A content
+    * may form one mixed group (the inline form contracts batch ∪
+    * corpus) or a batch group and a corpus group (the stored form):
+    * identical signatures pair the two reps at estimate 1.0, so both
+    * expand to the same member pairs.
     */
   def touching(groups: DataFrame, repPairs: DataFrame): DataFrame = {
     val inGroup = groups

@@ -49,14 +49,16 @@ object DocsStream {
     * plan needs, since cross-row aggregation is stateful. NULL when
     * the document has no shingles (< n tokens).
     */
-  def rowSignature(text: Column, n: Int = 3, numHashes: Int = 16): Column = {
-    val hp = transform(TextFunctions.wordShingles(text, n),
-      s => HashFunctions.md5_pair(s))
-    when(size(hp) > 0,
-      array((0 until numHashes).map(i =>
-        array_min(transform(hp,
-          p => p.getItem(0) + lit(i.toLong) * p.getItem(1)))): _*))
-  }
+  def rowSignature(text: Column, n: Int = 3, numHashes: Int = 16): Column =
+    // the shingle hashes are bound once, as the one element of an array
+    // the lambda maps: written inline, each of the `numHashes` minima
+    // would shingle and hash the text again
+    element_at(transform(array(transform(TextFunctions.wordShingles(text, n),
+        s => HashFunctions.md5_pair(s))), hp =>
+      when(size(hp) > 0,
+        array((0 until numHashes).map(i =>
+          array_min(transform(hp,
+            p => p.getItem(0) + lit(i.toLong) * p.getItem(1)))): _*))), 1)
 
   /** Streaming decontamination screen: (doc_id, matched_ngram) for
     * every arriving document sharing a word n-gram with the static

@@ -310,6 +310,37 @@ class IndexStoreSuite extends SparkSuite {
     }
   }
 
+  test("collapsed minhash serving runs a fixed number of jobs per batch") {
+    // once the store is built, a served batch costs batch-bounded work:
+    // an empty batch runs no job, and a 1-doc batch one job each for
+    // its signed contents, the probe of the stored rep bands, the
+    // matched groups' ids and the expansion, however large the corpus
+    import graft.operators.Dedup
+    val tmpStore = java.nio.file.Files.createTempDirectory("graft-mhjobs").toString
+    sys.props("graft.index.dir") = tmpStore
+    try {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-mhjobsrc").toFile
+      val src = new java.io.File(tmp, "corpus.parquet").getPath
+      val texts = Seq(
+        "the quick brown fox jumps over the lazy dog and runs far away today",
+        "pack my box with five dozen liquor jugs before the long trip home now",
+        "sphinx of black quartz judge my vow while the river keeps on running")
+      (0 until 24).map(i => (i.toLong, texts(i % 3)))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(src)
+      val corpus = spark.read.parquet(src)
+      def serve(batch: org.apache.spark.sql.DataFrame) =
+        Dedup.incrementalMinHashCandidatesPrebuilt(corpus, src, batch, variant = "jobs")
+      serve(corpus.limit(0)).collect()
+      graft.core.OpCaches.release()
+      val (empty, emptyJobs) = jobsDuring(serve(corpus.limit(0)).collect())
+      val (one, oneJobs) = jobsDuring(
+        serve(Seq((100L, texts(0))).toDF("doc_id", "text")).collect())
+      // the batch copy pairs with the 8 stored copies of its text
+      assert(empty.isEmpty && one.length == 8)
+      assert((emptyJobs, oneJobs) == ((0, 4)), s"jobs: empty $emptyJobs, one doc $oneJobs")
+    } finally sys.props.remove("graft.index.dir")
+  }
+
   test("forced collapsed embedding serving builds its membership entry once") {
     // the ivf twin of the minhash case above: the collapsed route
     // holds the stored groups frame, and the rep-index build must not

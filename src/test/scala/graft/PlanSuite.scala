@@ -513,6 +513,82 @@ class PlanSuite extends SparkSuite {
     assert(pc.contains("Union"), pc.take(3000))
   }
 
+  test("collapsed minhash serving reads the store only through batch key-set probes") {
+    // no query the serve runs may shuffle, aggregate or join a store
+    // scan other than as the streamed side of a broadcast probe:
+    // nothing corpus-sized is merged per call
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mhplan").toFile
+    val src = new java.io.File(tmp, "corpus.parquet").getPath
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog and runs far away today",
+      "pack my box with five dozen liquor jugs before the long trip home now")
+    (0 until 12).map(i => (i.toLong, texts(i % 2)))
+      .toDF("doc_id", "text").write.parquet(src)
+    val batch = Seq((100L, texts(0)), (101L, texts(0)), (102L, texts(1) + " again"))
+      .toDF("doc_id", "text")
+    val corpus = spark.read.parquet(src)
+    val inline = graft.operators.Dedup.incrementalMinHashCandidates(batch, corpus)
+      .collect().toSet
+    // build the store entries before listening: only serving is judged
+    graft.operators.Dedup.incrementalMinHashCandidatesPrebuilt(
+      corpus, src, batch.limit(0), variant = "plantest", dupGate = -1).collect()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sessions = Seq(spark, graft.core.SessionTuning.boundedPlan(spark))
+    sessions.foreach(_.listenerManager.register(listener))
+    val served = try {
+      val rows = graft.operators.Dedup.incrementalMinHashCandidatesPrebuilt(
+        corpus, src, batch, variant = "plantest", dupGate = -1).collect().toSet
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      rows
+    } finally sessions.foreach(_.listenerManager.unregister(listener))
+    assert(served == inline && served.nonEmpty)
+    val store = new java.io.File(graft.core.IndexStore.baseDir).getAbsolutePath
+    val scanned = scala.collection.mutable.ArrayBuffer.empty[String]
+    val exposed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: columnar.InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children
+    }
+    // the store scans whose rows reach `p` without a broadcast probe
+    def unprobed(p: SparkPlan): Seq[String] = p match {
+      case s: FileSourceScanExec =>
+        val entries = s.relation.location.rootPaths.map(_.toUri.getPath)
+          .filter(_.startsWith(store))
+        scanned ++= entries
+        entries
+      case j: BroadcastHashJoinExec =>
+        // the build side is checked at its broadcast exchange
+        val (build, streamed) =
+          if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
+        unprobed(streamed)
+        unprobed(build)
+        Nil
+      case _: Exchange | _: BaseAggregateExec | _: BaseJoinExec =>
+        exposed ++= p.children.flatMap(unprobed).map(s => s"${p.nodeName} over $s")
+        Nil
+      case other => children(other).flatMap(unprobed)
+    }
+    plans.forEach(p => unprobed(p))
+    assert(scanned.exists(_.contains("/mhmembers-")) && scanned.exists(_.contains("/mhrepidx-")),
+      scanned.mkString(", "))
+    assert(exposed.isEmpty, exposed.mkString("\n"))
+  }
+
   test("kernelFloor reads an RDD-backed input's real split count") {
     // an RDD-backed leaf reports the spark.sql.defaultSizeInBytes
     // sentinel as its size, which read as a wide input and left a

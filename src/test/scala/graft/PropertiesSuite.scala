@@ -830,4 +830,49 @@ class PropertiesSuite extends SparkSuite {
       assert(cosSim > 0.999999, s"group $g centroid drifted: $cosSim")
     }
   }
+
+  test("randomized stored minhash serving == inline incremental minhash (both routes)") {
+    // random copy-heavy corpora and batches over a small vocabulary, so
+    // that near-duplicates share bands: batch texts equal to stored
+    // ones, copies inside the batch and on both sides, texts with no
+    // shingles, null texts, batch ids below the stored rep of the same
+    // content, and an empty batch
+    import graft.operators.Dedup
+    val rnd = new scala.util.Random(1307)
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def text(): String = rnd.nextInt(12) match {
+      case 0 => null
+      case 1 => words(rnd.nextInt(words.length)) // one word: no 3-shingle
+      case _ => Seq.fill(4 + rnd.nextInt(4))(words(rnd.nextInt(words.length))).mkString(" ")
+    }
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 16).toInt)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mhprop").toFile
+    for (trial <- 0 until 6) {
+      val base = Seq.fill(6 + rnd.nextInt(6))(text())
+      // corpus ids 1000+: every base text 1-4 times
+      val corpusRows = base.flatMap(t => Seq.fill(1 + rnd.nextInt(4))(t))
+        .zipWithIndex.map { case (t, i) => (1000L + 2 * i, t) }
+      // batch ids interleave below and above the corpus ids
+      val batchTexts = if (trial == 5) Nil else Seq.fill(3 + rnd.nextInt(6))(
+        if (rnd.nextBoolean()) base(rnd.nextInt(base.length)) else text())
+      val batchRows = (batchTexts ++ batchTexts.take(2)).zipWithIndex.map {
+        case (t, i) => (if (i % 2 == 0) 1L + i else 5001L + 2 * i, t) }
+      val src = new java.io.File(tmp, s"corpus$trial.parquet").getPath
+      corpusRows.toDF("doc_id", "text").write.parquet(src)
+      val corpus = spark.read.parquet(src)
+      val batch = batchRows.toDF("doc_id", "text")
+      val inline = Dedup.incrementalMinHashCandidates(batch, corpus)
+        .collect().map(key).sorted.toSeq
+      graft.core.OpCaches.release()
+      for (gate <- Seq(-1.0, 1.0)) {
+        val served = Dedup.incrementalMinHashCandidatesPrebuilt(corpus, src,
+          batch, variant = "prop", dupGate = gate).collect().map(key).sorted.toSeq
+        graft.core.OpCaches.release()
+        assert(served == inline, s"trial $trial gate $gate: served " +
+          s"${served.diff(inline).take(5)} missing ${inline.diff(served).take(5)}")
+      }
+      if (trial == 0) assert(inline.exists(_._3 == 16), "no copy pairs: vacuous trial")
+    }
+  }
 }
