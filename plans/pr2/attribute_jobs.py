@@ -25,7 +25,9 @@ task-ms of its jobs; a call that ran no job in an op counts 0 there.
 The `op` line gives the same medians for whole ops.
 
 An untraced run's summary has an empty `trace`; that is reported, not
-attributed.
+attributed. The run record `.bench_build/results/<workload>-seed<n>-trace<t>.json`
+(whose `trace` is the run's trace flag) is refused with a pointer to the
+summary to pass instead.
 """
 import json
 import statistics
@@ -59,8 +61,19 @@ def gaps(span, jobs):
     return out
 
 
-def load(path, op_arg):
+def read_summary(path):
+    """The summary at `path`; a run record passed by mistake is named as such."""
     summary = json.load(open(path))
+    if not isinstance(summary.get("trace"), (dict, type(None))):
+        workload = summary.get("workload", "<workload>")
+        sys.exit(f"{path}: a run record (its `trace` is the run's trace flag, "
+                 f"{summary['trace']!r}), not a traced run's summary; pass "
+                 f".bench_build/work/{workload}/out/summary.json instead")
+    return summary
+
+
+def load(path, op_arg):
+    summary = read_summary(path)
     trace = summary.get("trace") or {}
     spans = trace.get("spans") or []
     if not spans or "jobs" not in trace:
@@ -98,7 +111,7 @@ def calls_of(inside, jobs, stages):
 
 
 def by_kind(path, kind):
-    summary = json.load(open(path))
+    summary = read_summary(path)
     trace = summary.get("trace") or {}
     spans = trace.get("spans") or []
     if not spans or "jobs" not in trace:

@@ -1,6 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.{File, FileNotFoundException}
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.FileScanBridge
+import org.apache.spark.sql.types.StructType
 
 /** Metadata-versioned store for build-once/query-many index artifacts
   * (PQ code frames, IVF assignments) under a scratch directory
@@ -13,14 +20,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the manifest matches.
   *
   * Trust model: an index is reused only when the stored manifest
-  * matches the SOURCE parquet fingerprint — every data file's name,
-  * size, and mtime — plus whatever the caller bakes into the store
-  * name (build parameters, format version). That is the
-  * pipeline-metadata versioning real deployments use. Source CONTENT
-  * is deliberately not hashed: a content hash costs a full source
-  * scan, the very pass the prebuilt index exists to avoid, so a
-  * mutation that preserves name+size+mtime of every part file is
-  * undetectable here (as it is for any mtime-based build system).
+  * matches the SOURCE parquet fingerprint — every file's relative
+  * path, size, and mtime, listed through the path's Hadoop
+  * `FileSystem` — plus whatever the caller bakes into the store name
+  * (build parameters, format version). That is the pipeline-metadata
+  * versioning real deployments use. Source CONTENT is deliberately not
+  * hashed: a content hash costs a full source scan, the very pass the
+  * prebuilt index exists to avoid, so a mutation that preserves
+  * name+size+mtime of every part file is undetectable here (as it is
+  * for any mtime-based build system).
+  *
+  * Append rule ([[readOrExtend]]): the manifest also keeps the
+  * source's DATA-file listing (Spark's hidden-file rule, so the
+  * `_SUCCESS` an append rewrites is not data). When the new listing
+  * is exactly the old data files plus new ones, the entry's builder
+  * gets a delta frame over the new files only and its rows are
+  * APPENDED as a new part file; an extend only adds part files, it
+  * never rewrites or deletes one. An extend is delta-sized work: its
+  * rows are collected and written on the driver, so an append of more
+  * bytes than the session's advisory partition size rebuilds.
+  * Anything else — an old file changed or gone, a manifest without a
+  * listing, a corpus frame that is not row-local over its one scan of
+  * the source, a builder's own exactness check — falls back to the
+  * full rebuild. Entries whose rows cannot be appended keep
+  * [[readOrBuild]].
   */
 object IndexStore {
 
@@ -33,6 +56,44 @@ object IndexStore {
     .orElse(sys.env.get("SPARK_GRAFT_INDEX_DIR"))
     .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-index")
 
+  /** One listed file: path relative to the listed root, size, mtime. */
+  private final case class Listed(rel: String, size: Long, mtime: Long, path: Path) {
+    def line: String = s"$rel\t$size\t$mtime"
+    def data: Boolean = !rel.split('/').exists(FileScanBridge.hidden)
+  }
+
+  private def hadoopConf(spark: Option[SparkSession]) =
+    spark.orElse(SparkSession.getActiveSession).orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
+  /** Every regular file under `path` (the path itself when it is a
+    * file), sorted by relative path, listed through the path's Hadoop
+    * `FileSystem` — so `file:`, `hdfs:` and `s3a:` URIs list what they
+    * name. A missing path fails, naming it.
+    */
+  private def listing(path: String, spark: Option[SparkSession]): Seq[Listed] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf(spark))
+    val top = try fs.getFileStatus(root) catch {
+      case e: FileNotFoundException => throw new IllegalArgumentException(
+        s"index store source does not exist: $path", e)
+    }
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
+      else Seq(st)
+    val base = top.getPath.toUri.getPath.stripSuffix("/") + "/"
+    walk(top).map { st =>
+      val rel = if (st eq top) st.getPath.getName
+        else st.getPath.toUri.getPath.stripPrefix(base)
+      Listed(rel, st.getLen, st.getModificationTime, st.getPath)
+    }
+  }
+
+  private def fingerprintOf(files: Seq[Listed]): String =
+    md5hex(files.map(f => s"${f.rel}:${f.size}:${f.mtime}").mkString("|"))
+
   /** Deterministic fingerprint of a source parquet file or directory:
     * MD5 over the sorted (path-relative-to-root, size, mtime) of
     * every regular file under it. Driver-side stat calls only — no
@@ -41,22 +102,7 @@ object IndexStore {
     * dirs (`p=0/part-00000`, `p=1/part-00000`), so a bare-name print
     * could not see same-named files moved between partitions.
     */
-  def sourceFingerprint(path: String): String = {
-    val root = new java.io.File(path)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
-    val rootPath = root.toPath
-    val parts = walk(root).map { f =>
-      val rel =
-        if (f == root) f.getName
-        else rootPath.relativize(f.toPath).toString
-      s"$rel:${f.length}:${f.lastModified}"
-    }
-    md5hex(parts.mkString("|"))
-  }
+  def sourceFingerprint(path: String): String = fingerprintOf(listing(path, None))
 
   def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -80,52 +126,239 @@ object IndexStore {
     */
   def readOrBuild(spark: SparkSession, name: String, fingerprint: String,
       force: Boolean = false)(build: => DataFrame): DataFrame = {
-    val dir = new java.io.File(baseDir, name)
-    val meta = new java.io.File(dir, "_graft_manifest")
-    val data = new java.io.File(dir, "data")
-    val fresh = !force && meta.isFile && data.exists() &&
-      scala.util.Try(java.nio.file.Files.readString(meta.toPath))
-        .toOption.contains(fingerprint)
-    if (!fresh) {
-      java.nio.file.Files.createDirectories(dir.toPath)
-      if (meta.exists()) meta.delete()
-      // REBALANCE before the write (guide §6): the build plan's
-      // partitioning is whatever made the BUILD pass parallel (e.g.
-      // the kernelFloor round-robin that spreads a one-split corpus
-      // encode across cores), which at small scale wrote one tiny
-      // part file PER CORE — r21's ivfpq/dsir entries landed as 32
-      // near-empty files, and every force-rebuild (ann_ivfpq_build)
-      // and first read paid the per-file commit/listing/footer floor
-      // (idle board: build 1.30 s vs 0.78 in r20). AQE coalesces the
-      // rebalance exchange to the advisory partition size, so a small
-      // index writes ~1 file while a corpus-sized one still writes in
-      // parallel at ~advisory-sized files; the exchange itself moves
-      // only the compact artifact, never the corpus. Spark resolves the
-      // hint only under AQE (elsewhere it logs `Unrecognized hint` and
-      // writes one file per build partition), so an AQE-off session
-      // sizes the same exchange itself: the plan's own size estimate
-      // over the advisory size, capped at the session's parallelism.
-      // An exchange, not a coalesce: a coalesce would also narrow the
-      // build's last stage (e.g. a kernelFloor-spread encode) to that
-      // many tasks.
-      val built = build
-      val conf = built.sparkSession.sessionState.conf
-      val sized =
-        if (conf.adaptiveExecutionEnabled) built.hint("rebalance")
-        else {
-          val advisory = conf.getConf(
-            org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-          val bytes = built.queryExecution.optimizedPlan.stats.sizeInBytes
-          built.repartition(((bytes + advisory - 1) / advisory)
-            .min(spark.sparkContext.defaultParallelism).max(1).toInt)
-        }
-      sized.write.mode("overwrite").parquet(data.getPath)
-      java.nio.file.Files.writeString(meta.toPath, fingerprint)
-      readCache.remove((spark, data.getPath))
+    val entry = new File(baseDir, name)
+    if (force || !manifest(entry).exists(_.fingerprint == fingerprint))
+      write(spark, entry, fingerprint)(replace(build))
+    read(spark, entry)
+  }
+
+  /** Rows an extend appends, in the entry's schema, and a check, run
+    * once they are collected, that they extend the entry exactly
+    * (false: nothing is appended and the entry is rebuilt in full).
+    * The rows are delta-sized: the store writes them on the driver as
+    * one part file ([[FileScanBridge.writeLocal]]).
+    */
+  final class Part private (val rows: StructType => Array[Row], val exact: () => Boolean)
+
+  object Part {
+    /** The rows of `rows`, collected (cast to the entry's schema). */
+    def apply(rows: DataFrame, exact: () => Boolean = () => true): Part =
+      new Part(schema => rows.select(schema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name, f.metadata)): _*).collect(), exact)
+
+    /** Rows already on the driver, given in the entry's schema. */
+    def local(rows: Seq[Row]): Part = new Part(_ => rows.toArray, () => true)
+  }
+
+  /** [[readOrBuild]] for an entry whose rows can be APPENDED as its
+    * source grows (the append rule in the object doc). `build(frame)`
+    * builds the entry over a whole corpus frame. `extend(delta,
+    * stored)` gives the [[Part]] to append for `delta` — `corpus`
+    * narrowed to the new source files, read as one partition — given
+    * the entry's `stored` frame, or None when it cannot extend
+    * exactly. Both frames live on
+    * the caller's AQE-off child session
+    * ([[SessionTuning.boundedPlan]]): an extend is delta-sized work,
+    * and there each stage runs inside its action's one job. An empty
+    * part writes no file (the manifest is re-stamped only). `inputs`
+    * names the store entries the rows are
+    * built from: their data-file listings are kept in the manifest
+    * too, and the entry extends only while each of them has only
+    * grown — an input that was rebuilt rewrote its files, so this
+    * entry rebuilds with it.
+    *
+    * A frame read before an extend keeps its file listing, so it
+    * still returns exactly the rows it returned before.
+    */
+  def readOrExtend(corpus: DataFrame, corpusPath: String, name: String,
+      force: Boolean = false, inputs: Seq[String] = Nil)(
+      build: DataFrame => DataFrame)(
+      extend: (DataFrame, DataFrame) => Option[Part]): DataFrame = {
+    val spark = corpus.sparkSession
+    maintain(corpus, corpusPath, name, force, inputs,
+      listing(corpusPath, Some(spark)))(build)(extend)
+    read(spark, new File(baseDir, name))
+  }
+
+  /** A SMALL [[readOrExtend]] entry folded into one driver value,
+    * memoized per (entry, source fingerprint): a repeat call pays only
+    * the source listing — no store read, no job. A source change
+    * misses to a fresh [[readOrExtend]]; `force` bypasses the memo the
+    * same way it bypasses the store. The entry's rows are kept with
+    * the value, so after an extend the fold runs over them plus the
+    * appended part, with no store read. The memo hands every caller
+    * the same object, so the caller must not mutate it.
+    */
+  def readOrExtendValue[T <: AnyRef](corpus: DataFrame, corpusPath: String,
+      name: String, force: Boolean = false)(
+      build: DataFrame => DataFrame)(
+      extend: (DataFrame, DataFrame) => Option[Part])(
+      fold: Array[Row] => T): T = {
+    val spark = corpus.sparkSession
+    val src = listing(corpusPath, Some(spark))
+    val entry = new File(baseDir, name)
+    val key = (entry.getPath, fingerprintOf(src))
+    if (force) valueCache.remove(key)
+    if (valueCache.size > 64) { valueCache.clear(); valueRows.clear() }
+    valueCache.computeIfAbsent(key, { _ =>
+      val was = Option(valueRows.get(entry.getPath))
+      val rows = maintain(corpus, corpusPath, name, force, Nil, src)(build)(extend)
+        .flatMap { case (base, part) => was.collect { case (`base`, kept) => kept ++ part } }
+        .getOrElse(read(spark, entry).collect())
+      valueRows.put(entry.getPath, (key._2, rows))
+      fold(rows)
+    }).asInstanceOf[T]
+  }
+
+  /** A parsed manifest: the source fingerprint and, when the entry
+    * was written with them, the data-file listings (`source` and each
+    * input entry's name, to its `Listed.line`s).
+    */
+  private final case class Manifest(fingerprint: String,
+      listings: Option[Map[String, Set[String]]])
+
+  /** The entry's manifest, when it guards existing data. */
+  private def manifest(entry: File): Option[Manifest] = {
+    val meta = new File(entry, "_graft_manifest")
+    if (!meta.isFile || !new File(entry, "data").exists()) return None
+    scala.util.Try(Files.readString(meta.toPath)).toOption.map { text =>
+      val lines = text.split("\n", -1).toSeq
+      Manifest(lines.head, Option.when(lines.lift(1).contains("listing"))(
+        lines.drop(2).filter(_.nonEmpty).map { l =>
+          val i = l.indexOf('\t')
+          (l.take(i), l.drop(i + 1))
+        }.groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }))
     }
+  }
+
+  /** Brings the entry up to date with the source listing `src`:
+    * nothing when the manifest matches, an extend when every listing
+    * only grew and the extend is exact, else a full build. Returns,
+    * unless it rebuilt, the fingerprint the entry was stored under
+    * and the rows appended to it.
+    */
+  private def maintain(corpus: DataFrame, corpusPath: String, name: String,
+      force: Boolean, inputs: Seq[String], src: Seq[Listed])(
+      build: DataFrame => DataFrame)(
+      extend: (DataFrame, DataFrame) => Option[Part]): Option[(String, Array[Row])] = {
+    val spark = corpus.sparkSession
+    val entry = new File(baseDir, name)
+    val fingerprint = fingerprintOf(src)
+    val old = if (force) None else manifest(entry)
+    if (old.exists(_.fingerprint == fingerprint)) return Some((fingerprint, Array.empty))
+    val dataFiles = src.filter(_.data)
+    val inputFiles = inputs.map(i => i ->
+      listing(new File(new File(baseDir, i), "data").getPath, Some(spark)).filter(_.data))
+    // the rows to append when every listing only grew and the part is
+    // exact (none when only hidden files changed); collected before
+    // the store changes
+    val appended = old.flatMap(_.listings).flatMap { was =>
+      def grew(key: String, now: Seq[Listed]) =
+        was.getOrElse(key, Set.empty).subsetOf(now.map(_.line).toSet)
+      if (!grew("source", dataFiles) || !inputFiles.forall((grew _).tupled)) None
+      else {
+        val added = dataFiles.filterNot(f => was.getOrElse("source", Set.empty)(f.line))
+        val on = SessionTuning.boundedPlan(spark)
+        // a part is held on the driver: an append of more than one
+        // advisory partition's bytes rebuilds instead
+        val advisory = spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        if (added.isEmpty) Some((Array.empty[Row], new StructType()))
+        else if (added.map(_.size).sum > advisory) None
+        // one partition (it is at most the advisory size): a keyed
+        // aggregate over it needs no exchange
+        else FileScanBridge.narrowed(corpus, corpusPath, added.map(_.path), on)
+          .map(_.coalesce(1)).flatMap { delta =>
+            val stored = read(on, entry)
+            extend(delta, stored).flatMap { part =>
+              val rows = part.rows(stored.schema)
+              Option.when(part.exact())((rows, stored.schema))
+            }
+          }
+      }
+    }
+    val manifestText = (fingerprint +: "listing" +: (
+      dataFiles.map(f => s"source\t${f.line}") ++
+        inputFiles.flatMap { case (i, fs) => fs.map(f => s"$i\t${f.line}") })).mkString("\n")
+    appended match {
+      case Some((rows, schema)) =>
+        write(spark, entry, manifestText) { data =>
+          if (rows.nonEmpty) FileScanBridge.writeLocal(spark, rows.toSeq, schema, new Path(data.toURI))
+        }
+        old.map(o => (o.fingerprint, rows))
+      case None =>
+        write(spark, entry, manifestText)(replace(build(corpus)))
+        None
+    }
+  }
+
+  /** Writes an entry's data with `rows`, then its manifest. The
+    * manifest is deleted first and written last, so a crash in
+    * between leaves an entry that is never trusted (the next call
+    * rebuilds it in full). Memoized readers of the entry are dropped
+    * for every session; frames already handed out keep their file
+    * listing. An extend appends its rows as one part file written on
+    * the driver ([[FileScanBridge.writeLocal]]): a job and its commit
+    * protocol would cost far more than the delta-sized rows.
+    */
+  private def write(spark: SparkSession, entry: File, manifestText: String)(
+      rows: File => Unit): Unit = {
+    val meta = new File(entry, "_graft_manifest")
+    val data = new File(entry, "data")
+    Files.createDirectories(entry.toPath)
+    if (meta.exists()) meta.delete()
+    rows(data)
+    readCache.keySet.removeIf(_._2 == data.getPath)
+    Files.writeString(meta.toPath, manifestText)
+  }
+
+  /** Replaces an entry's data with `built`. */
+  private def replace(built: DataFrame)(data: File): Unit =
+    sized(built).write.mode("overwrite").parquet(data.getPath)
+
+  /** REBALANCE before the write (guide §6): the build plan's
+    * partitioning is whatever made the BUILD pass parallel (e.g. the
+    * kernelFloor round-robin that spreads a one-split corpus encode
+    * across cores), which at small scale wrote one tiny part file PER
+    * CORE — r21's ivfpq/dsir entries landed as 32 near-empty files,
+    * and every force-rebuild (ann_ivfpq_build) and first read paid the
+    * per-file commit/listing/footer floor (idle board: build 1.30 s vs
+    * 0.78 in r20). AQE coalesces the rebalance exchange to the
+    * advisory partition size, so a small index writes ~1 file while a
+    * corpus-sized one still writes in parallel at ~advisory-sized
+    * files; the exchange itself moves only the compact artifact, never
+    * the corpus. Spark resolves the hint only under AQE (elsewhere it
+    * logs `Unrecognized hint` and writes one file per build
+    * partition), so an AQE-off session sizes the same exchange itself:
+    * the plan's own size estimate over the advisory size, capped at
+    * the session's parallelism. An exchange, not a coalesce: a
+    * coalesce would also narrow the build's last stage (e.g. a
+    * kernelFloor-spread encode) to that many tasks.
+    */
+  private def sized(built: DataFrame): DataFrame = {
+    val conf = built.sparkSession.sessionState.conf
+    if (conf.adaptiveExecutionEnabled) built.hint("rebalance")
+    else {
+      val advisory = conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val bytes = built.queryExecution.optimizedPlan.stats.sizeInBytes
+      built.repartition(((bytes + advisory - 1) / advisory)
+        .min(built.sparkSession.sparkContext.defaultParallelism).max(1).toInt)
+    }
+  }
+
+  /** The entry's stored frame, memoized per session. Read with the
+    * schema its first part file records, so the read runs no schema
+    * inference job (every part is written in that schema).
+    */
+  private def read(spark: SparkSession, entry: File): DataFrame = {
+    val data = new File(entry, "data").getPath
     if (readCache.size > 512) readCache.clear()
-    readCache.computeIfAbsent((spark, data.getPath),
-      key => key._1.read.parquet(key._2))
+    readCache.computeIfAbsent((spark, data), { key =>
+      listing(data, Some(spark)).find(_.data)
+        .flatMap(f => FileScanBridge.footerSchema(key._1, f.path))
+        .fold(key._1.read.parquet(data))(s => key._1.read.schema(s).parquet(data))
+    })
   }
 
   /** Delete every store entry whose name starts with `prefix` and
@@ -190,6 +423,8 @@ object IndexStore {
       // already be gone.
       val dataPath = new java.io.File(dir, "data").getPath
       readCache.keySet.removeIf(_._2 == dataPath)
+      valueCache.keySet.removeIf(_._1 == dir.getPath)
+      valueRows.remove(dir.getPath)
       ok
     }
     removed.map(_.getName)
@@ -241,13 +476,25 @@ object IndexStore {
 
   /** Memoized store reads per (session, path): `read.parquet`
     * rebuilds a file index and re-reads footers on EVERY call — pure
-    * per-serving-call floor for frames that change only when
-    * [[readOrBuild]] itself rewrites them (the entry is invalidated
-    * on rebuild above). Same bounded-map shape and staleness contract
-    * as Tables.readCache; a rewrite by ANOTHER process is invisible
-    * until the manifest mismatch forces a local rebuild — the
-    * single-writer contract already documented above.
+    * per-serving-call floor for frames that change only when the
+    * store itself rewrites or extends them (the entry is invalidated
+    * on every write above). Same bounded-map shape and staleness
+    * contract as Tables.readCache; a rewrite by ANOTHER process is
+    * invisible until the manifest mismatch forces a local rebuild —
+    * the single-writer contract already documented above.
     */
   private val readCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** [[readOrExtendValue]]'s folded values per (entry path, source
+    * fingerprint).
+    */
+  private val valueCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+
+  /** The rows behind each [[readOrExtendValue]] entry's value: entry
+    * path to (source fingerprint, rows).
+    */
+  private val valueRows =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Row])]()
 }

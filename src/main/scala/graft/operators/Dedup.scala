@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -436,10 +437,12 @@ object Dedup {
     val name = s"mhidx-n$n-h$numHashes-b$bands-$textCol-$idCol" +
       (if (variant.isEmpty) "" else s"-$variant") + "-v1-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      bandRows(minHashSignatures(corpus, textCol, idCol, n, numHashes),
-        bands, r, col(idCol), col("sig")))
+    // per-document rows: new parts append their own band rows
+    def build(frame: DataFrame) =
+      bandRows(minHashSignatures(frame, textCol, idCol, n, numHashes),
+        bands, r, col(idCol), col("sig"))
+    graft.core.IndexStore.readOrExtend(corpus, corpusPath, name, force)(build)(
+      (delta, _) => Some(graft.core.IndexStore.Part(build(delta))))
   }
 
   /** The corpus' duplicate-mass fraction ([[duplicateMassFraction]],
@@ -452,7 +455,7 @@ object Dedup {
       corpusPath: String, textCol: String, idCol: String,
       variant: String, force: Boolean): Double =
     DupCollapse.storedFraction(corpus, corpusPath, "mhroute", textCol,
-      idCol, variant, force)(duplicateMassFraction(corpus, textCol))
+      idCol, variant, force)(_.select(col(textCol)))
 
   /** Exact-duplicate membership of the corpus persisted through the
     * store: one row per DISTINCT shingle-able content —
@@ -462,19 +465,56 @@ object Dedup {
     * rows are byte-identical to an inline recompute. Shingle-less and
     * null-text docs never sign or pair in any form and are excluded
     * symmetrically (hence the `n` in the key).
+    *
+    * An appended source part adds one row per content of the part:
+    * under the stored `rep_id` when the content is already stored,
+    * else as a new group (its min id). A group may so span several
+    * rows of one `rep_id`; its members are the union of their `ids`
+    * (readers merge per `rep_id`). A part id below its content's
+    * stored rep would change the group's rep: that rebuilds the entry.
     */
   def storedMinHashMembers(corpus: DataFrame, corpusPath: String,
       textCol: String = "text", idCol: String = "doc_id", n: Int = 3,
       variant: String = "", force: Boolean = false): DataFrame = {
     require(variant.nonEmpty,
       "variant must name the corpus frame (store entries fingerprint the file only)")
-    val name = s"mhmembers-n$n-$textCol-$idCol-$variant-v1-" +
-      graft.core.IndexStore.md5hex(corpusPath)
-    graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      DupCollapse.byText(corpus, DupCollapse.shingled(textCol, n), textCol,
-        idCol))
+    graft.core.IndexStore.readOrExtend(corpus, corpusPath,
+        membersEntry(corpusPath, textCol, idCol, n, variant), force)(
+        DupCollapse.byText(_, DupCollapse.shingled(textCol, n), textCol, idCol)) {
+      (delta, stored) =>
+        // the part's contents, grouped on the driver from one map-only
+        // pass in (fp, id) order (byText's rows; a null id is no
+        // member), and the rep each content already has in the store,
+        // fetched by key: a stored content keeps its rep, a new one
+        // heads a new group. A part id below its content's stored rep
+        // (or a stored group without one) would change the rep: no
+        // part, the entry rebuilds
+        val docs = delta.filter(DupCollapse.shingled(textCol, n))
+          .select(DupCollapse.fp(textCol), col(idCol))
+          .sortWithinPartitions(col("fp"), col(idCol)).collect()
+        val groups = docs.toSeq.groupBy(_.get(0)).toSeq.map { case (fp, rs) =>
+          val ids = rs.map(_.get(1)).filter(_ != null)
+          Row(fp, ids.headOption.orNull, ids)
+        }
+        val old = if (groups.isEmpty) Map.empty[Any, Any]
+          else stored.filter(col("fp").isin(groups.map(_.get(0)): _*))
+            .select(col("fp"), col("rep_id")).collect().map(r => r.get(0) -> r.get(1)).toMap
+        // ids compare in Spark's order for their type
+        val order = org.apache.spark.sql.catalyst.util.TypeUtils
+          .getInterpretedOrdering(stored.schema("rep_id").dataType)
+        def below(a: Any, b: Any) = order.lt(CatalystTypeConverters.convertToCatalyst(a),
+          CatalystTypeConverters.convertToCatalyst(b))
+        Option.when(groups.forall { case Row(fp, first, _) => old.get(fp).forall(rep =>
+            rep != null && (first == null || !below(first, rep))) })(
+          graft.core.IndexStore.Part.local(groups.map { case Row(fp, first, ids) =>
+            Row(fp, old.getOrElse(fp, first), ids) }))
+    }
   }
+
+  private def membersEntry(corpusPath: String, textCol: String,
+      idCol: String, n: Int, variant: String): String =
+    s"mhmembers-n$n-$textCol-$idCol-$variant-v1-" +
+      graft.core.IndexStore.md5hex(corpusPath)
 
   /** The banded signature index over DISTINCT corpus content only —
     * the v2 collapsed twin of [[storedMinHashIndex]]: same
@@ -505,10 +545,22 @@ object Dedup {
     val r = numHashes / bands
     val name = s"mhrepidx-n$n-h$numHashes-b$bands-$textCol-$idCol-$variant-v1-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      bandRows(minHashSignatures(DupCollapse.reps(corpus, members, idCol),
-        textCol, idCol, n, numHashes), bands, r, col(idCol), col("sig")))
+    // a new part's reps are the part docs that head a NEW group (a
+    // stored content keeps its stored rep), each signed row-locally
+    // (the values `minHashSignatures` gives, with no shuffle); the
+    // membership entry is an input, so a rebuilt membership rebuilds
+    // this entry too
+    graft.core.IndexStore.readOrExtend(corpus, corpusPath, name, force,
+        Seq(membersEntry(corpusPath, textCol, idCol, n, variant)))(frame =>
+        bandRows(minHashSignatures(DupCollapse.reps(frame, members, idCol),
+          textCol, idCol, n, numHashes), bands, r, col(idCol), col("sig"))) {
+      (delta, _) =>
+        val reps = DupCollapse.reps(delta, org.apache.spark.sql.graft.DatasetBridge
+          .transplant(members, delta.sparkSession).hint("shuffle_hash"), idCol)
+        Some(graft.core.IndexStore.Part(bandRows(reps.select(col(idCol),
+            graft.streaming.DocsStream.rowSignature(col(textCol), n, numHashes).as("sig"))
+          .filter(col("sig").isNotNull), bands, r, col(idCol), col("sig"))))
+    }
   }
 
   /** [[incrementalMinHashCandidates]] served from the stored band
@@ -620,10 +672,14 @@ object Dedup {
     val probe = storedBandProbe(fresh, there(repIdx), idCol, numHashes, bands)
     val repPairs = probe.collect().toSeq
     // the stored groups a batch rep paired with, fetched by key (batch
-    // rep ids are disjoint from the stored ones, so they match none)
+    // rep ids are disjoint from the stored ones, so they match none);
+    // a group appended to over several source parts spans several
+    // rows of its rep, merged here (member order is immaterial to the
+    // expansion)
     val corpusGroups = there(members).select(col("rep_id"), col("ids"))
       .filter(col("rep_id").isin(repPairs.flatMap(p => Seq(p.get(0), p.get(1))).distinct: _*))
-      .collect().toSeq
+      .collect().toSeq.groupBy(_.get(0)).toSeq
+      .map { case (rep, rows) => Row(rep, rows.flatMap(_.getSeq[Any](1))) }
     // batch groups (every member new) and the matched stored groups
     val groups = local(batch.map(r => Row(r.get(0), r.get(1), true)) ++
         corpusGroups.map(r => Row(r.get(0), r.get(1), false)),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashFunctions
@@ -265,50 +265,45 @@ object Dsir {
     scoreBucketStream(feats, qArr, idCol, extraCols)
   }
 
-  /** [[modelArraySelf]] persisted through the [[graft.core.IndexStore]]
-    * as a (bucket, q) frame: the corpus model pass runs once per
-    * (corpusPath, buckets, variant) fingerprint; later calls collect
-    * the B stored rows and score against the literal. `variant` MUST
-    * encode the target predicate (and any corpus slicing) — the store
-    * fingerprints the FILE, not the frame or the predicate (the
-    * round-12 collision lesson).
+  /** [[modelArraySelf]] backed by the [[graft.core.IndexStore]]: the
+    * entry keeps the per-bucket (bucket, c_r, c_t) counts — exact
+    * integer sums, so a source part appended later adds its own count
+    * rows and the model stays bit-identical to a full rebuild's — and
+    * the q array is derived from them at read ([[qArrayOf]], after
+    * summing each bucket's rows). The model IS driver state — a
+    * serving process keeps it pinned in memory, not re-collected per
+    * batch: the array is memoized per (entry, source fingerprint)
+    * ([[graft.core.IndexStore.readOrExtendValue]]), so a repeat call
+    * pays only the source listing. `variant` MUST encode the target
+    * predicate (and any corpus slicing) — the store fingerprints the
+    * FILE, not the frame or the predicate (the round-12 collision
+    * lesson).
     */
   def storedModelSelf(corpus: DataFrame, corpusPath: String,
       targetPred: Column, buckets: Int = 8192, textCol: String = "text",
       variant: String = "", force: Boolean = false): Array[Long] = {
     require(variant.nonEmpty,
       "variant must name the target predicate (store entries fingerprint the file only)")
-    val spark = corpus.sparkSession
-    val name = s"dsirq-b$buckets-$textCol-$variant-v1-" +
+    require(buckets > 0, s"buckets $buckets must be positive")
+    // v2: counts instead of the q array
+    val name = s"dsirq-b$buckets-$textCol-$variant-v2-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    val fingerprint = graft.core.IndexStore.sourceFingerprint(corpusPath)
-    // the model IS driver state — a serving process keeps it pinned
-    // in memory, not re-collected per batch: memoize the B-slot array
-    // per (entry, fingerprint), so a repeat call pays only the
-    // driver-side stat walk behind sourceFingerprint. A corpus
-    // rewrite changes the fingerprint and misses to a fresh
-    // readOrBuild (whose manifest check re-validates the store);
-    // `force` bypasses the memo the same way it bypasses the store.
-    if (force) modelCache.remove((name, fingerprint))
-    if (modelCache.size > 64) modelCache.clear()
-    modelCache.computeIfAbsent((name, fingerprint), { _ =>
-      val df = graft.core.IndexStore.readOrBuild(spark, name,
-        fingerprint, force) {
-        val arr = modelArraySelf(corpus, targetPred, buckets, textCol)
-        import spark.implicits._
-        arr.toSeq.zipWithIndex.map { case (q, b) => (b, q) }.toDF("bucket", "q")
+    def counts(frame: DataFrame) =
+      featStream(frame, buckets, textCol, lit(1), when(targetPred, 1).otherwise(0))
+        .groupBy(col("bucket"))
+        .agg(sum(col("tf") * col("w_r")).as("c_r"),
+          sum(col("tf") * col("w_t")).as("c_t"))
+    graft.core.IndexStore.readOrExtendValue(corpus, corpusPath, name, force)(
+        counts)((delta, _) => Some(graft.core.IndexStore.Part(counts(delta)))) { rows =>
+      val merged = rows.groupMapReduce(_.getLong(0))(r => (r.getLong(1), r.getLong(2))) {
+        case ((r1, t1), (r2, t2)) => (r1 + r2, t1 + t2)
       }
-      val qArr = new Array[Long](buckets)
-      df.collect().foreach(r => qArr(r.getInt(0)) = r.getLong(1))
-      qArr
-      // clone per caller: the cache must never hand out its own
+      qArrayOf(merged.toArray.map { case (b, (r, t)) => Row(b, r, t) }, buckets)
+      // clone per caller: the memo must never hand out its own
       // mutable array — a caller mutating the returned model would
       // silently poison every subsequent scoring call on this entry
-    }).clone()
+    }.clone()
   }
-
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[Long]]()
 
   /** Batch scoring under the stored pinned model — the DSIR serving
     * form: per-call work is the memoized model lookup plus ONE

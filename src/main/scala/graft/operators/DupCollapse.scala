@@ -57,29 +57,93 @@ private[graft] object DupCollapse {
 
   /** A corpus' duplicate-mass fraction persisted as a tiny store
     * entry — the serving-route stamp behind the prebuilt collapsed
-    * indexes: `probe` runs ONCE at build time, and every serving call
-    * reads the fraction back from column METADATA with zero jobs.
-    * Entry `<kind>-<keyCol>-<idCol>-<variant>-v1-<md5(path)>`: keyed
-    * by the frame only, so every knob combination over one corpus
-    * frame shares it.
+    * indexes. The entry keeps what the fraction is made of, not the
+    * fraction: per source part, the count of non-null `key` values and
+    * the HLL++ registers of their hashes ([[HllWords]]), the sketch
+    * [[Dedup.dupMassProbe]] runs inline. Counts add and registers
+    * merge exactly by max, so an appended part extends the stamp and
+    * the fraction it gives is bit-identical to a full rebuild's (and
+    * to the inline probe's). Serving calls read the fraction from the
+    * store's per-fingerprint memo ([[graft.core.IndexStore.readOrExtendValue]]):
+    * zero jobs after the first. `key` projects a frame over the corpus
+    * to its one key column. Entry
+    * `<kind>-<keyCol>-<idCol>-<variant>-v2-<md5(path)>`: keyed by the
+    * frame only, so every knob combination over one corpus frame
+    * shares it.
     */
   def storedFraction(corpus: DataFrame, corpusPath: String, kind: String,
       keyCol: String, idCol: String, variant: String, force: Boolean)(
-      probe: => Double): Double = {
+      key: DataFrame => DataFrame): Double = {
     require(variant.nonEmpty,
       "variant must name the corpus frame (store entries fingerprint the file only)")
-    val name = s"$kind-$keyCol-$idCol-$variant-v1-" +
+    val name = s"$kind-$keyCol-$idCol-$variant-v2-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    val df = graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force) {
-      val f = probe
-      graft.core.IndexMeta.tag(
-        corpus.sparkSession.range(1).select(lit(f).as("dup_fraction")),
-        "dup_fraction", "kind" -> kind, "dupFraction" -> f)
+    def hashes(frame: DataFrame) = {
+      val k = col(key(frame).columns.head)
+      key(frame).select(when(k.isNotNull, xxhash64(k)).as("h"))
     }
-    graft.core.IndexMeta.get(df, "dup_fraction")
-      .flatMap(_.get("dupFraction")).map(_.toDouble)
-      .getOrElse(df.head().getDouble(0))
+    // a part's sketch is folded on the driver from its key hashes: the
+    // same registers, with no aggregation job
+    def partSketch(delta: DataFrame) = {
+      val hs = hashes(delta).filter(col("h").isNotNull).collect().map(_.getLong(0))
+      graft.core.IndexStore.Part.local(
+        Seq(org.apache.spark.sql.Row(hs.length.toLong, HllWords.of(hs).toSeq)))
+    }
+    graft.core.IndexStore.readOrExtendValue(corpus, corpusPath, name, force)(
+        hashes(_).agg(count(col("h")).as("n"), HllWords.agg(col("h")).as("words")))(
+        (delta, _) => Some(partSketch(delta))) {
+      rows => java.lang.Double.valueOf(Dedup.dupFraction(rows.map(_.getLong(0)).sum,
+        HllWords.estimate(rows.map(_.getSeq[Long](1).toArray).toSeq)))
+    }.doubleValue
+  }
+
+  /** HLL++ registers as a mergeable value: the aggregation buffer of
+    * Spark's `approx_count_distinct` (default 5% relative error),
+    * updated and queried through Spark's own helper, so
+    * [[estimate]] over the words of one pass equals
+    * `approx_count_distinct` over the same values, and over the
+    * words of several passes equals it over their union.
+    */
+  object HllWords extends org.apache.spark.sql.expressions.Aggregator[
+      java.lang.Long, Array[Long], Array[Long]] {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
+    import org.apache.spark.sql.types.LongType
+
+    @transient private lazy val helper = new HyperLogLogPlusPlusHelper(0.05)
+
+    /** The helper's buffer view over register words. */
+    private final class Words(w: Array[Long]) extends GenericInternalRow(0) {
+      override def numFields: Int = w.length
+      override def getLong(i: Int): Long = w(i)
+      override def setLong(i: Int, v: Long): Unit = w(i) = v
+    }
+
+    def zero: Array[Long] = new Array[Long](helper.numWords)
+    def reduce(b: Array[Long], h: java.lang.Long): Array[Long] = {
+      if (h != null) helper.update(new Words(b), 0, h, LongType)
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      helper.merge(new Words(a), new Words(b), 0, 0)
+      a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] = bufferEncoder
+
+    /** The aggregate over a column of (nullable) hash values. */
+    def agg(hash: Column): Column =
+      udaf(this, org.apache.spark.sql.Encoders.LONG)(hash)
+
+    /** The registers of `hashes`, updated on the driver. */
+    def of(hashes: Iterable[Long]): Array[Long] =
+      hashes.foldLeft(zero)((b, h) => reduce(b, h))
+
+    /** The distinct-count estimate of the union of `parts`' values. */
+    def estimate(parts: Seq[Array[Long]]): Long =
+      helper.query(new Words(parts.foldLeft(zero)(merge)), 0)
   }
 
   /** One row per distinct `keys` value of `keyed`: the group's

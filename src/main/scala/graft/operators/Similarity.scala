@@ -565,8 +565,18 @@ object Similarity {
       embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val cp = prepared(corpus, embCol, idCol)
     val cent = centroidSample(cp, numCentroids, idCol)
-    val assigned = collectCentroidRows(cent).filter(literalEligible) match {
-      case Some(cents) => nearestCentroidsFromRows(cp, cents, 1, idCol)
+    ivfAssigned(cp, cent, collectCentroidRows(cent), numCentroids, embCol, idCol)
+  }
+
+  /** The prepared rows `cp` in their nearest `cent` cell, stamped as an
+    * [[ivfIndex]]: map-side against the collected `cents` when they
+    * are literal-eligible, else the joined shape (output-identical).
+    */
+  private def ivfAssigned(cp: DataFrame, cent: DataFrame,
+      cents: Option[Array[CentRow]], numCentroids: Int, embCol: String,
+      idCol: String): DataFrame = {
+    val assigned = cents.filter(literalEligible) match {
+      case Some(c) => nearestCentroidsFromRows(cp, c, 1, idCol)
       case None => nearestCentroidsJoined(cp, cent, 1, idCol)
     }
     graft.core.IndexMeta.tag(assigned, "cent_id",
@@ -577,6 +587,13 @@ object Similarity {
   /** [[ivfIndex]] behind the metadata-versioned store
     * ([[graft.core.IndexStore]]): rebuilt only when the source
     * parquet fingerprint or the build parameters change.
+    *
+    * An appended source part is assigned to the stored centroids and
+    * its rows appended: the index holds every non-null prepared
+    * vector, so its `numCentroids` lowest ids ARE the centroid sample,
+    * and the sample stays the same while the sample is full and every
+    * new non-null id sorts above it (checked at the append; otherwise
+    * the entry is rebuilt).
     */
   def storedIvfIndex(corpus: DataFrame, corpusPath: String,
       numCentroids: Int = 64,
@@ -588,9 +605,23 @@ object Similarity {
     // be served against the post-filter sample (r19 ADVICE #1)
     val name = s"ivf-c$numCentroids-$embCol-$idCol-v3-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      ivfIndex(corpus, numCentroids, embCol, idCol))
+    graft.core.IndexStore.readOrExtend(corpus, corpusPath, name, force)(
+        ivfIndex(_, numCentroids, embCol, idCol)) { (delta, stored) =>
+      val cent = centroidSample(stored.select(col(idCol), col("v"), col("n2")),
+        numCentroids, idCol)
+      val cents = collectCentroidRows(cent, numCentroids).get
+      // a null id sorts first, into the sample
+      val seen = org.apache.spark.sql.Observation()
+      val cp = prepared(delta, embCol, idCol).filter(col("v").isNotNull)
+        .observe(seen, count(lit(1)).as("n"), count(col(idCol)).as("ids"),
+          min(col(idCol).cast("long")).as("lo"))
+      Some(graft.core.IndexStore.Part(
+        ivfAssigned(cp, cent, Some(cents).filter(_.length <= MaxLiteralCentroids),
+          numCentroids, embCol, idCol),
+        () => seen.get("n") == 0L || (cents.length == numCentroids &&
+          seen.get("ids") == seen.get("n") &&
+          seen.get("lo").asInstanceOf[Long] > cents.last.id)))
+    }
   }
 
   /** The `n` lowest-id prepared rows (idCol, v, n2) persisted behind
@@ -616,10 +647,26 @@ object Similarity {
     val name = s"sample-n$n-$embCol-$idCol" +
       (if (variant.isEmpty) "" else s"-$variant") + "-v2-" +
       graft.core.IndexStore.md5hex(corpusPath)
-    graft.core.IndexStore.readOrBuild(corpus.sparkSession, name,
-      graft.core.IndexStore.sourceFingerprint(corpusPath), force)(
-      prepared(corpus, embCol, idCol).filter(col("v").isNotNull)
-        .orderBy(col(idCol)).limit(n))
+    def nonNull(frame: DataFrame) =
+      prepared(frame, embCol, idCol).filter(col("v").isNotNull)
+    // an appended part leaves a full sample as it is when every new
+    // row sorts after the sample's last one (ids ascending, nulls
+    // first): the ids of both, from one map-only pass, compared in
+    // Spark's order for their type
+    graft.core.IndexStore.readOrExtend(corpus, corpusPath, name, force)(
+        nonNull(_).orderBy(col(idCol)).limit(n)) { (delta, stored) =>
+      val (was, now) = stored.select(col(idCol), lit(true).as("s"))
+        .unionByName(nonNull(delta).select(col(idCol), lit(false).as("s")))
+        .collect().partition(_.getBoolean(1))
+      val order = org.apache.spark.sql.catalyst.util.TypeUtils
+        .getInterpretedOrdering(stored.schema(idCol).dataType)
+      def ids(rows: Array[org.apache.spark.sql.Row]) = rows.filterNot(_.isNullAt(0))
+        .map(r => org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(r.get(0)))
+      val last = ids(was).maxOption(order)
+      Option.when(now.isEmpty || was.length == n && ids(now).length == now.length &&
+          last.forall(l => ids(now).forall(order.gt(_, l))))(
+        graft.core.IndexStore.Part.local(Nil))
+    }
   }
 
   /** The IVF query phase against an already-built index frame and an
@@ -1166,8 +1213,7 @@ object Similarity {
       corpusPath: String, embCol: String, idCol: String,
       variant: String, force: Boolean): Double =
     DupCollapse.storedFraction(corpus, corpusPath, "ivfroute", embCol, idCol,
-      variant, force)(graft.operators.Dedup.dupMassProbe(
-        prepared(corpus, embCol, idCol), col("v"), lit(1))._2)
+      variant, force)(prepared(_, embCol, idCol).select(col("v")))
 
   /** Exact-duplicate vector membership of the corpus persisted
     * through the store: one row per DISTINCT prepared vector —

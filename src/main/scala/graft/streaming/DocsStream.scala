@@ -259,7 +259,10 @@ object DocsStream {
         .filter(col("new_id") =!= col("corpus_id"))
         .select(out: _*)
     }
-    // the membership entry is built ONCE and the rep index over it
+    // the membership entry is built ONCE and the rep index over it; a
+    // group extended over several source parts spans several rows of
+    // its rep, and joining every row then exploding its ids yields
+    // each member once, as one merged row would
     val members = Dedup.storedMinHashMembers(corpus, corpusPath, textCol,
       idCol, n, variant, force)
     val repIdx = Dedup.storedMinHashRepIndexOver(corpus, corpusPath,

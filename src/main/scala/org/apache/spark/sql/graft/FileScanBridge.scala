@@ -5,14 +5,20 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{BlockLocation, FileStatus, FileSystem, LocatedFileStatus, Path}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.datasources.{DataSource, FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex}
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.util.HadoopFSUtils
 
 /** A Parquet scan over an explicit file list whose listing runs on
@@ -69,6 +75,107 @@ object FileScanBridge {
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema.asNullable,
       None, new ParquetFileFormat, CaseInsensitiveMap(options))(session)
     session.baseRelationToDataFrame(relation)
+  }
+
+  /** Whether a file or directory name is hidden from a file source's
+    * listing (`_`/`.` prefixes except Parquet's summary files,
+    * in-flight `._COPYING_` copies): Spark's own rule, so a `_SUCCESS`
+    * file an append rewrites is never a data file.
+    */
+  def hidden(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `df` with its one scan of the directory `root` narrowed to
+    * `files` (qualified paths under it), or None when `df` is not a
+    * ROW-LOCAL plan over that single scan: deterministic,
+    * subquery-free `Project` and `Filter` nodes (and aliases) over one
+    * unpartitioned, unbucketed file relation whose only root path is
+    * `root`. Row-locality is what makes the narrowed frame the new
+    * files' share of `df`: each output row depends on one input row,
+    * so `df` over old ∪ new files is `df` over the old ones plus `df`
+    * over the new ones. The
+    * relation keeps its format, options, schema and output
+    * attributes; only its file index changes, and that one lists
+    * nothing (its statuses are pre-filled). The frame is built on
+    * `on`, a session of the same SparkContext.
+    */
+  def narrowed(df: DataFrame, root: String, files: Seq[Path],
+      on: org.apache.spark.sql.SparkSession): Option[DataFrame] = {
+    val session = on.asInstanceOf[SparkSession]
+    val plan = df.queryExecution.analyzed
+    // a subquery reads a plan of its own, so its value is no row's
+    def local(e: Expression) = e.deterministic && !SubqueryExpression.hasSubquery(e)
+    val rowLocal = plan.find {
+      case p: Project => !p.projectList.forall(local)
+      case f: Filter => !local(f.condition)
+      case _: SubqueryAlias | _: LogicalRelation => false
+      case _ => true
+    }.isEmpty
+    val scans = plan.collect { case l: LogicalRelation => l }
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val rootPath = new Path(root)
+    val qualified = rootPath.getFileSystem(hadoopConf).makeQualified(rootPath)
+    scans match {
+      case Seq(scan @ LogicalRelation(r: HadoopFsRelation, _, _, false, _))
+          if rowLocal && r.partitionSchema.isEmpty && r.bucketSpec.isEmpty &&
+            r.location.rootPaths == Seq(qualified) =>
+        val cache = new PrefilledStatusCache
+        files.foreach { f =>
+          val fs = f.getFileSystem(hadoopConf)
+          cache.putLeafFiles(f, Array(located(fs, fs.getFileStatus(f))))
+        }
+        val index = new InMemoryFileIndex(session, files, r.options, Some(r.dataSchema),
+          cache, Some(PartitionSpec.emptySpec), None)
+        val relation = r.copy(location = index)(session)
+        Some(Dataset.ofRows(session, plan.transform {
+          case l: LogicalRelation if l eq scan => l.copy(relation = relation)
+        }))
+      case _ => None
+    }
+  }
+
+  /** The Spark schema a Parquet file written by Spark records in its
+    * footer (field metadata included), read on the driver: reading
+    * the same directory with it as the given schema skips the schema
+    * inference job `read.parquet` otherwise runs. None for a file
+    * without that record.
+    */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession, file: Path): Option[StructType] = {
+    val conf = spark.asInstanceOf[SparkSession].sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    finally reader.close()
+  }
+
+  /** Writes `rows` (in `schema`) as ONE new Parquet file in the
+    * directory `dir`, on the driver, with no job: through the writer a
+    * Parquet write task opens (`ParquetFileFormat.prepareWrite` under
+    * the session's settings), so the file carries the same footer
+    * schema record, field metadata and codec as a Spark-written part.
+    * It is written under a hidden name (invisible to listings, see
+    * [[hidden]]) and renamed to `part-<uuid>` once closed, so a crash
+    * leaves no half-written data file. For rows already on the driver:
+    * a job and its commit protocol cost far more than a small file.
+    */
+  def writeLocal(spark: org.apache.spark.sql.SparkSession, rows: Seq[Row],
+      schema: StructType, dir: Path): Path = {
+    val session = spark.asInstanceOf[SparkSession]
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+    val name = s"part-${java.util.UUID.randomUUID()}${factory.getFileExtension(context)}"
+    val tmp = new Path(dir, s".$name")
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+    val writer = factory.newInstance(tmp.toString, schema, context)
+    try rows.foreach(r => writer.write(toRow(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    val fs = dir.getFileSystem(job.getConfiguration)
+    val target = new Path(dir, name)
+    if (!fs.rename(tmp, target)) throw new java.io.IOException(s"could not rename $tmp to $target")
+    target
   }
 
   /** The status the index's listing job hands back for a file: path,

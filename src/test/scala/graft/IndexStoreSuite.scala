@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{IndexMeta, IndexStore}
-import graft.operators.Similarity
+import graft.operators.{DupCollapse, Similarity}
 
 /** Direct tests of the build-once/query-many store machinery:
   * manifest-hit reuse, mismatch/crash rebuild, fingerprint
@@ -426,7 +426,7 @@ class IndexStoreSuite extends SparkSuite {
       variant = "names", dupGate = -1.0).collect()
     graft.core.OpCaches.release()
     assert(entries() == Set(
-      s"mhroute-text-doc_id-names-v1-${h(docsPath)}",
+      s"mhroute-text-doc_id-names-v2-${h(docsPath)}",
       s"mhidx-n3-h16-b4-text-doc_id-names-v1-${h(docsPath)}",
       s"mhmembers-n3-text-doc_id-names-v1-${h(docsPath)}",
       s"mhrepidx-n3-h16-b4-text-doc_id-names-v1-${h(docsPath)}"))
@@ -439,7 +439,7 @@ class IndexStoreSuite extends SparkSuite {
     graft.core.OpCaches.release()
     // 24 vectors: autoCentroids resolves C = 20 for the centroid sample
     assert(entries() -- entries().filter(_.startsWith("mh")) == Set(
-      s"ivfroute-embedding-vec_id-names-v1-${h(vecsPath)}",
+      s"ivfroute-embedding-vec_id-names-v2-${h(vecsPath)}",
       s"ivfmulti-c0-a8-embedding-vec_id-names-v3-${h(vecsPath)}",
       s"ivfgroups-embedding-vec_id-names-v1-${h(vecsPath)}",
       s"ivfrepmulti-c0-a8-embedding-vec_id-names-v2-${h(vecsPath)}",
@@ -523,5 +523,242 @@ class IndexStoreSuite extends SparkSuite {
     // again superseded by v3-h1 — retired once more, the others stay)
     assert(IndexStore.pruneSuperseded().filter(_.startsWith(stem))
       == Seq(s"$stem-a-v1-h1"))
+  }
+
+  // ---- append-only maintenance (IndexStore.readOrExtend) ----
+
+  /** A throwaway store for `body`, with a copy-heavy docs corpus and a
+    * vectors corpus (ids 0 until 24 and 0 until 40) under `src`.
+    */
+  private def withCuration(tag: String)(
+      body: (String, String) => Unit): Unit = {
+    val store = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    sys.props("graft.index.dir") = store
+    try {
+      val src = java.nio.file.Files.createTempDirectory(s"graft-${tag}src").toFile
+      val docsPath = new java.io.File(src, "docs").getPath
+      val vecsPath = new java.io.File(src, "vecs").getPath
+      (0 until 24).map(i => (i.toLong, curationTexts(i % 3), if (i % 2 == 0) "en" else "de"))
+        .toDF("doc_id", "text", "lang").write.parquet(docsPath)
+      val rnd = new scala.util.Random(41)
+      val base = Array.tabulate(10)(_ => Seq.fill(8)(rnd.nextFloat() * 2 - 1))
+      Seq.tabulate(40)(i => (i.toLong, base(i % 10)))
+        .toDF("vec_id", "embedding").write.parquet(vecsPath)
+      body(docsPath, vecsPath)
+    } finally sys.props.remove("graft.index.dir")
+  }
+
+  private val curationTexts = Seq(
+    "the quick brown fox jumps over the lazy dog and runs far away today",
+    "pack my box with five dozen liquor jugs before the long trip home now",
+    "sphinx of black quartz judge my vow while the river keeps on running")
+
+  /** Appends docs (id, text) and vectors (id, embedding) as new parts. */
+  private def appendParts(docsPath: String, vecsPath: String,
+      docs: Seq[(Long, String)], vecs: Seq[(Long, Seq[Float])]): Unit = {
+    if (docs.nonEmpty) docs.map { case (i, t) => (i, t, "en") }
+      .toDF("doc_id", "text", "lang").write.mode("append").parquet(docsPath)
+    if (vecs.nonEmpty) vecs.toDF("vec_id", "embedding")
+      .write.mode("append").parquet(vecsPath)
+  }
+
+  /** What the curation reads serve from, refreshed the way a write op
+    * refreshes it: the route stamp, both minhash serving indexes, the
+    * IVF index with its sample, and the DSIR model.
+    */
+  private def curationEntries(docsPath: String, vecsPath: String): Unit = {
+    import graft.operators.{Dedup, Dsir}
+    val docs = spark.read.parquet(docsPath)
+    val vecs = spark.read.parquet(vecsPath)
+    Dedup.storedDupFraction(docs, docsPath, "text", "doc_id", "cur", force = false)
+    for (gate <- Seq(-1.0, 1.0))
+      Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(0),
+        variant = "cur", dupGate = gate).collect()
+    Similarity.ivfTopKPrebuilt(vecs, vecsPath, vecs.limit(0), 3, numCentroids = 8).collect()
+    Dsir.scoreBatchPrebuilt(docs, docsPath, docs.limit(0), col("lang") === "en",
+      buckets = 64, variant = "en").collect()
+    graft.core.OpCaches.release()
+  }
+
+  /** Part files per store entry. */
+  private def storeParts(): Map[String, Set[String]] =
+    Option(new java.io.File(IndexStore.baseDir).listFiles()).getOrElse(Array.empty)
+      .map(e => e.getName -> Option(new java.io.File(e, "data").list()).getOrElse(Array.empty)
+        .filter(_.startsWith("part-")).toSet).toMap
+
+  /** Entries whose part files were all kept (extended or untouched)
+    * and entries whose part files were all replaced (rebuilt).
+    */
+  private def keptAndRebuilt(before: Map[String, Set[String]],
+      after: Map[String, Set[String]]): (Set[String], Set[String]) = {
+    val names = before.keySet
+    (names.filter(e => before(e).subsetOf(after(e))),
+      names.filter(e => (before(e) intersect after(e)).isEmpty))
+  }
+
+  private def family(names: Set[String]): Set[String] = names.map(_.takeWhile(_ != '-'))
+
+  private val curationFamilies =
+    Set("mhroute", "mhidx", "mhmembers", "mhrepidx", "ivf", "sample", "dsirq")
+
+  test("sourceFingerprint lists file: URIs through their FileSystem and fails on a missing path") {
+    val root = java.nio.file.Files.createTempDirectory("graft-fpuri").toFile
+    val plain = new java.io.File(root, "src").getPath
+    val uri = new java.io.File(plain).toURI.toString
+    assert(uri.startsWith("file:"))
+    Seq((1L, curationTexts(0))).toDF("doc_id", "text").write.parquet(plain)
+    val fp0 = IndexStore.sourceFingerprint(uri)
+    assert(fp0 == IndexStore.sourceFingerprint(plain))
+    val store = java.nio.file.Files.createTempDirectory("graft-uristore").toString
+    sys.props("graft.index.dir") = store
+    try {
+      import graft.operators.Dedup
+      def index() = Dedup.storedMinHashIndex(spark.read.parquet(uri), uri, variant = "uri")
+      assert(index().count() == 4)
+      Seq((2L, curationTexts(1))).toDF("doc_id", "text").write.mode("append").parquet(plain)
+      assert(IndexStore.sourceFingerprint(uri) != fp0, "a grown file: source must re-fingerprint")
+      val before = storeParts()
+      assert(index().count() == 8, "the changed source was served from the stale entry")
+      assert(keptAndRebuilt(before, storeParts())._1.nonEmpty, "the grown source was not extended")
+    } finally sys.props.remove("graft.index.dir")
+    val missing = new java.io.File(root, "no-such-corpus").toURI.toString
+    val e = intercept[IllegalArgumentException](IndexStore.sourceFingerprint(missing))
+    assert(e.getMessage.contains("no-such-corpus"), e.getMessage)
+  }
+
+  test("an appended part extends every curation entry and leaves served frames as they were") {
+    withCuration("extend") { (docsPath, vecsPath) =>
+      import graft.operators.Dedup
+      curationEntries(docsPath, vecsPath)
+      val read0 = Dedup.storedMinHashIndex(spark.read.parquet(docsPath), docsPath,
+        variant = "cur")
+      val rows0 = read0.collect().map(_.toString).sorted.toSeq
+      val before = storeParts()
+      assert(family(before.keySet) == curationFamilies)
+      appendParts(docsPath, vecsPath,
+        Seq(100L -> curationTexts(0), 101L -> "a brand new text that no stored doc has yet"),
+        Seq(100L -> Seq.fill(8)(0.5f)))
+      curationEntries(docsPath, vecsPath)
+      val after = storeParts()
+      val (kept, rebuilt) = keptAndRebuilt(before, after)
+      assert(kept == before.keySet && rebuilt.isEmpty, s"rebuilt: $rebuilt")
+      // every entry but the re-stamped sample gained a part
+      assert(before.keySet.filter(e => after(e).size > before(e).size).map(_.takeWhile(_ != '-'))
+        == curationFamilies - "sample")
+      // a frame read before the extend keeps its file listing
+      assert(read0.collect().map(_.toString).sorted.toSeq == rows0)
+      val now = Dedup.storedMinHashIndex(spark.read.parquet(docsPath), docsPath, variant = "cur")
+      assert(now.count() == rows0.size + 8)
+    }
+  }
+
+  test("extending falls back to a full rebuild whenever it cannot be exact") {
+    import graft.operators.Dedup
+    def rebuiltAfter(docsPath: String, vecsPath: String)(change: => Unit): Set[String] = {
+      val before = storeParts()
+      change
+      curationEntries(docsPath, vecsPath)
+      family(keptAndRebuilt(before, storeParts())._2)
+    }
+    def firstPart(path: String) = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("part-")).minBy(_.getName)
+    val newVec = Seq.fill(8)(0.25f)
+    withCuration("fallback") { (docsPath, vecsPath) =>
+      curationEntries(docsPath, vecsPath)
+      // a rewritten part (same name, new mtime)
+      assert(rebuiltAfter(docsPath, vecsPath) {
+        val f = firstPart(docsPath)
+        assert(f.setLastModified(f.lastModified() + 5000))
+      } == Set("mhroute", "mhidx", "mhmembers", "mhrepidx", "dsirq"))
+      // a deleted part
+      assert(rebuiltAfter(docsPath, vecsPath) {
+        appendParts(docsPath, vecsPath, Nil, Seq(200L -> newVec))
+        curationEntries(docsPath, vecsPath)
+        assert(firstPart(vecsPath).delete())
+      } == Set("ivf", "sample"))
+      // a new id below its content's stored rep: the membership and
+      // the rep index over it rebuild; per-doc entries still extend
+      assert(rebuiltAfter(docsPath, vecsPath)(appendParts(docsPath, vecsPath,
+        Seq(-5L -> curationTexts(1)), Nil)) == Set("mhmembers", "mhrepidx"))
+      // a new vector id inside the low-id centroid sample
+      assert(rebuiltAfter(docsPath, vecsPath)(appendParts(docsPath, vecsPath,
+        Nil, Seq(-5L -> newVec))) == Set("ivf", "sample"))
+      // an entry written before the listing was kept (fingerprint only)
+      val mhidx = storeParts().keySet.find(_.startsWith("mhidx")).get
+      assert(rebuiltAfter(docsPath, vecsPath) {
+        val meta = new java.io.File(new java.io.File(IndexStore.baseDir, mhidx), "_graft_manifest")
+        java.nio.file.Files.writeString(meta.toPath,
+          java.nio.file.Files.readString(meta.toPath).linesIterator.next())
+        appendParts(docsPath, vecsPath, Seq(300L -> curationTexts(2)), Nil)
+      } == Set("mhidx"))
+      // a crash after the appended parts, before the manifest: the
+      // entry is untrusted and rebuilt in full, its stray part dropped
+      val members = storeParts().keySet.find(_.startsWith("mhmembers")).get
+      val entry = new java.io.File(IndexStore.baseDir, members)
+      assert(rebuiltAfter(docsPath, vecsPath) {
+        spark.read.parquet(new java.io.File(entry, "data").getPath).limit(1)
+          .write.mode("append").parquet(new java.io.File(entry, "data").getPath)
+        assert(new java.io.File(entry, "_graft_manifest").delete())
+        appendParts(docsPath, vecsPath, Seq(301L -> curationTexts(2)), Nil)
+      } == Set("mhmembers", "mhrepidx"))
+      val docs = spark.read.parquet(docsPath)
+      val fresh = DupCollapse.byText(docs, DupCollapse.shingled("text", 3), "text", "doc_id")
+      assert(Dedup.storedMinHashMembers(docs, docsPath, variant = "cur")
+        .collect().map(_.toString).sorted.toSeq == fresh.collect().map(_.toString).sorted.toSeq)
+      // a corpus frame that is not row-local over its one scan
+      appendParts(docsPath, vecsPath, Seq(302L -> curationTexts(0)), Nil)
+      val before = storeParts()
+      Dedup.storedMinHashIndex(spark.read.parquet(docsPath).dropDuplicates("doc_id"),
+        docsPath, variant = "cur").collect()
+      assert(family(keptAndRebuilt(before, storeParts())._2) == Set("mhidx"))
+      // a filter whose subquery reads the whole source is not row-local
+      appendParts(docsPath, vecsPath, Seq(303L -> curationTexts(1)), Nil)
+      val bySubquery = storeParts()
+      val all = spark.read.parquet(docsPath)
+      Dedup.storedMinHashIndex(all.filter(col("doc_id") <= all.select(max("doc_id")).scalar()),
+        docsPath, variant = "cur").collect()
+      assert(family(keptAndRebuilt(bySubquery, storeParts())._2) == Set("mhidx"))
+      // an append of more bytes than the advisory partition size
+      appendParts(docsPath, vecsPath, Seq(304L -> curationTexts(2)), Nil)
+      val large = storeParts()
+      val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+      val was = spark.conf.getOption(advisory)
+      spark.conf.set(advisory, "1")
+      try Dedup.storedMinHashIndex(spark.read.parquet(docsPath), docsPath, variant = "cur")
+        .collect()
+      finally was.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
+      assert(family(keptAndRebuilt(large, storeParts())._2) == Set("mhidx"))
+    }
+  }
+
+  test("extending every curation entry for a 1-doc part runs a fixed number of jobs") {
+    // a silent fall-back to the full rebuild would run ~29 jobs here;
+    // the calls and order are a curation write's
+    import graft.operators.{Dedup, Dsir}
+    withCuration("extjobs") { (docsPath, vecsPath) =>
+      def write(docs: org.apache.spark.sql.DataFrame,
+          vecs: org.apache.spark.sql.DataFrame): Unit = {
+        Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(0),
+          variant = "cur").collect()
+        Similarity.ivfTopKPrebuilt(vecs, vecsPath, vecs.limit(0), 3, numCentroids = 8).collect()
+        Dsir.scoreBatchPrebuilt(docs, docsPath, docs.limit(0), col("lang") === "en",
+          buckets = 64, variant = "en").collect()
+        graft.core.OpCaches.release()
+      }
+      write(spark.read.parquet(docsPath), spark.read.parquet(vecsPath))
+      val before = storeParts()
+      appendParts(docsPath, vecsPath, Seq(100L -> curationTexts(0)),
+        Seq(100L -> Seq.fill(8)(0.5f)))
+      val (docs, vecs) = (spark.read.parquet(docsPath), spark.read.parquet(vecsPath))
+      val (_, jobs) = jobsDuring(write(docs, vecs))
+      val (kept, rebuilt) = keptAndRebuilt(before, storeParts())
+      assert(rebuilt.isEmpty && kept == before.keySet, s"rebuilt: $rebuilt")
+      // the stamp 1 (hash the part; the fold reuses the kept rows),
+      // membership 2 (the part's contents, their stored reps), rep
+      // index 1; IVF 2 (the stored centroids, the part), its serve 3
+      // (the sample check, the centroids, the empty top-k); DSIR 1
+      // (count the part)
+      assert(jobs == 10, s"jobs: $jobs")
+    }
   }
 }

@@ -875,4 +875,96 @@ class PropertiesSuite extends SparkSuite {
       if (trial == 0) assert(inline.exists(_._3 == 16), "no copy pairs: vacuous trial")
     }
   }
+
+  test("randomized appended parts: every extended curation store entry equals its full rebuild") {
+    // random copy-heavy corpora grown by two appended parts whose ids
+    // sort above every stored id (so each entry can extend): part
+    // texts equal to stored ones and new ones, shingle-less and null
+    // texts, null vectors. Store A is built on the first part and
+    // extended per appended part; store B is built once over the grown
+    // corpus. Entries compare as row multisets (the membership merged
+    // per rep), the route stamp, DSIR counts and q array bit for bit,
+    // and the serving calls as sorted multisets.
+    import graft.core.IndexStore
+    import graft.operators.{Dedup, Dsir, Similarity}
+    val rnd = new scala.util.Random(1411)
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def text(): String = rnd.nextInt(12) match {
+      case 0 => null
+      case 1 => words(rnd.nextInt(words.length))
+      case _ => Seq.fill(4 + rnd.nextInt(4))(words(rnd.nextInt(words.length))).mkString(" ")
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-extprop").toFile
+    val (c, buckets) = (8, 64)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    for (trial <- 0 until 3) {
+      val docsPath = new java.io.File(tmp, s"docs$trial").getPath
+      val vecsPath = new java.io.File(tmp, s"vecs$trial").getPath
+      val texts = Seq.fill(5 + rnd.nextInt(5))(text())
+      val vbase = Seq.fill(6)(Seq.fill(8)(rnd.nextFloat() * 2 - 1))
+      var nextId = 0L
+      def part(docs: Int, vecs: Int, append: Boolean): Unit = {
+        val mode = if (append) "append" else "error"
+        Seq.fill(docs) {
+          nextId += 1 + rnd.nextInt(3)
+          (nextId, if (rnd.nextInt(3) == 0) text() else texts(rnd.nextInt(texts.length)),
+            if (rnd.nextBoolean()) "en" else "de")
+        }.toDF("doc_id", "text", "lang").write.mode(mode).parquet(docsPath)
+        Seq.fill(vecs) {
+          nextId += 1 + rnd.nextInt(3)
+          (nextId, if (rnd.nextInt(9) == 0) null else vbase(rnd.nextInt(vbase.length)))
+        }.toDF("vec_id", "embedding").write.mode(mode).parquet(vecsPath)
+      }
+      def entries(): Map[String, Any] = {
+        val docs = spark.read.parquet(docsPath)
+        val vecs = spark.read.parquet(vecsPath)
+        val members = Dedup.storedMinHashMembers(docs, docsPath, variant = "p")
+        val counts = Dsir.storedModelSelf(docs, docsPath, col("lang") === "en",
+          buckets, variant = "en")
+        val m = Map[String, Any](
+          "mhroute" -> Dedup.storedDupFraction(docs, docsPath, "text", "doc_id", "p", false),
+          "mhidx" -> sorted(Dedup.storedMinHashIndex(docs, docsPath, variant = "p")),
+          "mhmembers" -> sorted(members.groupBy("rep_id").agg(first("fp").as("fp"),
+            sort_array(flatten(collect_list("ids"))).as("ids"))),
+          "mhrepidx" -> sorted(Dedup.storedMinHashRepIndex(docs, docsPath, variant = "p")),
+          "ivf" -> sorted(Similarity.storedIvfIndex(vecs, vecsPath, c)),
+          "dsirq" -> counts.toSeq,
+          "dsir counts" -> sorted(spark.read.parquet(new java.io.File(IndexStore.baseDir,
+              s"dsirq-b$buckets-text-en-v2-${IndexStore.md5hex(docsPath)}/data").getPath)
+            .groupBy("bucket").agg(sum("c_r"), sum("c_t"))),
+          "serve dedup" -> Seq(-1.0, 1.0).map(g => sorted(
+            Dedup.incrementalMinHashCandidatesPrebuilt(docs, docsPath, docs.limit(5),
+              variant = "p", dupGate = g))),
+          "serve knn" -> sorted(Similarity.ivfTopKPrebuilt(vecs, vecsPath, vecs.limit(4), 3,
+            numCentroids = c, nprobe = 3)),
+          "serve dsir" -> sorted(Dsir.scoreBatchPrebuilt(docs, docsPath, docs.limit(5),
+            col("lang") === "en", buckets, variant = "en")))
+        graft.core.OpCaches.release()
+        m
+      }
+      def inStore[T](name: String)(body: => T): T = {
+        sys.props("graft.index.dir") = new java.io.File(tmp, s"$name$trial").getPath
+        try body finally sys.props.remove("graft.index.dir")
+      }
+      part(12 + rnd.nextInt(8), 12 + rnd.nextInt(8), append = false)
+      inStore("a")(entries())
+      for (_ <- 0 until 2) {
+        part(3 + rnd.nextInt(5), 2 + rnd.nextInt(4), append = true)
+        inStore("a")(entries())
+      }
+      val extended = inStore("a")(entries())
+      val rebuilt = inStore("b")(entries())
+      for (k <- rebuilt.keySet)
+        assert(extended(k) == rebuilt(k), s"trial $trial: $k differs")
+      // every entry of store A kept its first part files: it extended
+      val a = new java.io.File(tmp, s"a$trial")
+      val b = new java.io.File(tmp, s"b$trial")
+      for (e <- a.list()) {
+        val parts = new java.io.File(a, s"$e/data").list().count(_.startsWith("part-"))
+        val once = new java.io.File(b, s"$e/data").list().count(_.startsWith("part-"))
+        assert(e.startsWith("sample") || parts > once, s"trial $trial: $e was rebuilt")
+      }
+    }
+  }
 }
